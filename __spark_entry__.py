@@ -3,7 +3,7 @@
 entry(spark)   : flagship query — per-hexagon caption-feature histogram
                  over the deterministic synthetic image+caption table
                  (BASELINE.json input_hint shape), spatial-joined against
-                 the region tiling at H3 res 8, skew-salted aggregation.
+                 the region tiling at H3 res 8, skew-bounded aggregation.
 queries()      : operator inventory from SURVEY.md §2; TPC-H-ish entries
                  are DuckDB-oracled at sf0.01, image/H3 entries are
                  rows-only (H3 is not SQL-expressible) and get exact
@@ -65,7 +65,9 @@ def _tiling_sdf(spark: SparkSession, res: int = ENTRY_RES) -> DataFrame:
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: scan -> h3 encode (whole-stage-codegen JVM expressions,
     functions/h3_expr; Arrow-UDF kernel on seam bboxes) -> broadcast
-    tiling join -> caption explode -> salted group-by ->
+    tiling join -> caption explode -> group-by count over one shuffle,
+    whose map-side partial aggregate ships each hot cell as at most one
+    row per map task (operators/agg.salted_count) ->
     (h3, feature, count, region_id). Exercises S/P/J/A of SURVEY.md §2
     in one job (build plan M1)."""
     from hex2vec_spark.operators.agg import explode_caption_tags, salted_count
@@ -217,13 +219,12 @@ def _q_group_pivot(spark, sf_dir):
 
 
 def _q_salted_agg(spark, sf_dir):
-    # A1 + north_rule skew handling: salted two-phase == plain GROUP BY
+    # A1 + north_rule skew handling: one exchange, with the partial
+    # aggregate bounding every key to one row per map task
     from hex2vec_spark.operators.agg import salted_count
 
     li = _load(spark, sf_dir, "lineitem")
-    return salted_count(
-        li, ["l_returnflag", "l_linestatus"], salt_src="l_orderkey", count_alias="count"
-    )
+    return salted_count(li, ["l_returnflag", "l_linestatus"], count_alias="count")
 
 
 def _q_adaptive_salted_agg(spark, sf_dir):

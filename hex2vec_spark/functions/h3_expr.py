@@ -169,6 +169,63 @@ def _dlit(v: float) -> str:
     return f"CAST('{v!r}' AS DOUBLE)"
 
 
+def _open_chain(
+    df: DataFrame, lat: Column | str | None, lng: Column | str | None, tag: str
+):
+    """Shared prologue of the three encode paths. Guards the reserved
+    temp prefix, projects Column ``lat``/``lng`` arguments to attributes
+    (one cheap extra select; None means the default columns, str args
+    are SQL fragments used verbatim), and emits rank 0: the unit-sphere
+    x/y/z (icosa.geo_to_xyz op order) as ATTRIBUTES, so no later rank
+    re-derives the trig. Returns (frame, base columns, alias list,
+    ``step``, (x, y, z))."""
+    base_cols = list(df.columns)
+    # temps are generated under the reserved __h3e_ prefix; guard the
+    # whole prefix (round-2 review: a colliding input column would
+    # otherwise surface later as an opaque ambiguous-reference error)
+    for t in base_cols:
+        if t.startswith("__h3e_"):
+            raise ValueError(
+                f"column {t} collides with the encode temps (reserved prefix __h3e_)"
+            )
+    if lat is None:
+        lat = "`lat`"
+    if lng is None:
+        lng = "`lng`"
+    if isinstance(lat, str) and isinstance(lng, str):
+        lat_sql, lng_sql = lat, lng
+        cur = df
+    else:
+        cur = df.select("*", lat.alias("__h3e_lat"), lng.alias("__h3e_lng"))
+        lat_sql, lng_sql = "`__h3e_lat`", "`__h3e_lng`"
+
+    ex: list[str] = []
+
+    def step(name: str, sql: str) -> str:
+        ex.append(f"({sql}) AS `{name}`")
+        return f"`{name}`"
+
+    d2r = float(np.pi / 180.0)  # np.radians(x) == x * (pi/180) (verified)
+    latr = f"(({lat_sql}) * {_dlit(d2r)})"
+    lngr = f"(({lng_sql}) * {_dlit(d2r)})"
+    xyz = (
+        step(f"__h3e_{tag}X", f"COS({latr}) * COS({lngr})"),
+        step(f"__h3e_{tag}Y", f"COS({latr}) * SIN({lngr})"),
+        step(f"__h3e_{tag}Z", f"SIN({latr})"),
+    )
+    return cur, base_cols, ex, step, xyz
+
+
+def _close_chain(
+    cur: DataFrame, base_cols: list[str], ex: list[str], fence: str, out: str
+) -> DataFrame:
+    """One ``selectExpr`` over every alias rank plus the fenced output,
+    then back to the input columns + ``out``."""
+    quoted_base = [f"`{c}`" for c in base_cols]
+    full = cur.selectExpr(*quoted_base, *ex, f"({fence}) AS `{out}`")
+    return full.select(*base_cols, out)
+
+
 def attach_h3_jvm(
     df: DataFrame,
     res: int,
@@ -196,34 +253,7 @@ def attach_h3_jvm(
     BENCH_r02 hex_features/context_pairs regression; now ~0.2 s).
     """
     face, bc_map = jvm_encode_support(bbox, res)
-    base_cols = list(df.columns)
-    # temps are generated under the reserved __h3e_ prefix; guard the
-    # whole prefix (round-2 review: a colliding input column would
-    # otherwise surface later as an opaque ambiguous-reference error)
-    for t in base_cols:
-        if t.startswith("__h3e_"):
-            raise ValueError(
-                f"column {t} collides with the encode temps (reserved prefix __h3e_)"
-            )
-    # accept arbitrary lat/lng Columns by projecting them to attributes
-    # first (one cheap extra select); None means the default columns,
-    # str args are SQL fragments used verbatim
-    if lat is None:
-        lat = "`lat`"
-    if lng is None:
-        lng = "`lng`"
-    if isinstance(lat, str) and isinstance(lng, str):
-        lat_sql, lng_sql = lat, lng
-        cur = df
-    else:
-        cur = df.select("*", lat.alias("__h3e_lat"), lng.alias("__h3e_lng"))
-        lat_sql, lng_sql = "`__h3e_lat`", "`__h3e_lng`"
-
-    ex: list[str] = []
-
-    def step(name: str, sql: str) -> str:
-        ex.append(f"({sql}) AS `{name}`")
-        return f"`{name}`"
+    cur, base_cols, ex, step, xyz = _open_chain(df, lat, lng, "")
 
     # dense base-cell slot map with the RUNTIME GUARD (round-3 advisor
     # fix): jvm_encode_support validates the bbox on a sampled grid, so
@@ -259,10 +289,7 @@ def attach_h3_jvm(
     cx, cy, cz = (_dlit(float(v)) for v in ic.FACE_CENTER[face])
     t1x, t1y, t1z = (_dlit(float(v)) for v in ic.FACE_T1[face])
     t2x, t2y, t2z = (_dlit(float(v)) for v in ic.FACE_T2[face])
-    hh = _emit_h3_chain(
-        step, res, lat_sql, lng_sql,
-        (cx, cy, cz, t1x, t1y, t1z, t2x, t2y, t2z), bc_of,
-    )
+    hh = _emit_h3_chain(step, res, xyz, (cx, cy, cz, t1x, t1y, t1z, t2x, t2y, t2z), bc_of)
     # PUSHDOWN FENCE on the OUTPUT alias: the spark_partition_id()
     # guard (always true; the kernel never yields null) makes this alias
     # NON-DETERMINISTIC, so PushPredicateThroughNonJoin cannot move any
@@ -284,31 +311,27 @@ def attach_h3_jvm(
     # key non-nullable, so joins don't even materialize an IsNotNull.
     fence = (f"COALESCE(CASE WHEN SPARK_PARTITION_ID() >= -1 THEN {hh} END, "
              f"CAST(-1 AS BIGINT))")
-    quoted_base = [f"`{c}`" for c in base_cols]
-    full = cur.selectExpr(*quoted_base, *ex, f"({fence}) AS `{out}`")
-    return full.select(*base_cols, out)
+    return _close_chain(cur, base_cols, ex, fence, out)
 
 
 def _emit_h3_chain(
     step,
     res: int,
-    lat_sql: str,
-    lng_sql: str,
+    xyz: tuple[str, str, str],
     consts: tuple[str, str, str, str, str, str, str, str, str],
     bc_of,
     pre: str = "",
-    xyz: tuple[str, str, str] | None = None,
 ) -> str:
     """Emit the encode arithmetic as lateral-alias SQL via ``step``;
     returns the reference to the packed (unfenced) cell-id alias.
 
-    ``consts`` are SQL fragments for the face frame (literals on the
-    bbox path, per-row ELEMENT_AT lookups on the global path); ``bc_of``
-    maps the anchor-key fragment to the base-cell fragment (raise-guard
-    vs NULL-route); ``pre`` suffixes temp names so two chains can
-    coexist in one query if ever needed; ``xyz`` supplies precomputed
-    unit-sphere coordinate fragments (the global path shares them with
-    its face argmax instead of re-deriving trig here).
+    ``xyz`` are the rank-0 unit-sphere coordinate attributes
+    (:func:`_open_chain`; the global paths share them with their face
+    argmax); ``consts`` are SQL fragments for the face frame (literals
+    on the bbox path, per-row ELEMENT_AT lookups on the global path);
+    ``bc_of`` maps the anchor-key fragment to the base-cell fragment
+    (raise-guard vs NULL-route); ``pre`` suffixes temp names so two
+    chains can coexist in one query (the home pass stacks two).
     """
 
     def sub(sql: str) -> str:
@@ -325,19 +348,16 @@ def _emit_h3_chain(
     # generated aggregate method crosses HotSpot's 8,000-byte JIT limit
     # and the WHOLE stage runs interpreted (observed: 37 ranks -> a
     # 9,980-byte method, "too long to be JIT compiled", flagship 3.4 s
-    # -> 9.6 s). So the trig/projection prologue and the axial round
-    # are emitted as TWO dense ranks (inline subtrees, CSE'd at
-    # runtime) and only the aperture-7 chain gets per-level ranks.
-    d2r = float(np.pi / 180.0)  # np.radians(x) == x * (pi/180) (verified)
-    if xyz is None:
-        latr = sub(f"({lat_sql}) * {_dlit(d2r)}")
-        lngr = sub(f"({lng_sql}) * {_dlit(d2r)}")
-        cl = sub(f"COS({latr})")
-        x3 = sub(f"{cl} * COS({lngr})")
-        y3 = sub(f"{cl} * SIN({lngr})")
-        z3 = sub(f"SIN({latr})")
-    else:
-        x3, y3, z3 = xyz
+    # -> 9.6 s). So the prologue is four dense ranks — xyz, xr/yr,
+    # float axial q/r, rounded a/b — whose inline subtrees bottom out at
+    # the previous rank's attributes, and only the aperture-7 chain gets
+    # per-level ranks. The xyz and q/r ranks are there for PLAN size:
+    # inlined, each reference re-copies the whole trig (resp. xr/yr)
+    # subtree into every consumer, which nearly doubled the optimized
+    # plan and its planning time; as attributes they cost one Project
+    # each. tests/test_plans.py pins both the Project budget and the
+    # largest generated method of the fused flagship stage.
+    x3, y3, z3 = xyz
 
     # icosa.project: d = xyz . c ; p = xyz / d ; rel = p - c ;
     # x = (rel . t1) / RES0_U (einsum sums k=0,1,2 left-to-right)
@@ -363,13 +383,14 @@ def _emit_h3_chain(
 
     # hexmath.hex2d_to_axial + axial_round (same op order: q=fa-fb,
     # r=fb, y=-q-r, rint, tie-fix; RINT == Math.rint == np.rint,
-    # half-to-even) — rank 2: one dense pair of aliases; every inline
-    # subtree bottoms out at the xr/yr attributes.
+    # half-to-even) — rank 2: the float axial q/r as attributes; rank
+    # 3: one dense pair of rounded aliases whose every inline subtree
+    # bottoms out at q/r.
     sq3 = _dlit(_SQRT3)
     fa = sub(f"{xr} + {yr} / {sq3}")
     fb = sub(f"({_dlit(2.0)} * {yr}) / {sq3}")
-    q = sub(f"{fa} - {fb}")
-    rv = sub(f"{fb}")
+    q = step(f"__h3e_fq{pre}", f"{fa} - {fb}")
+    rv = step(f"__h3e_fr{pre}", fb)
     yv = sub(f"(- {q}) - {rv}")
     rq = sub(f"RINT({q})")
     ry = sub(f"RINT({yv})")
@@ -479,37 +500,9 @@ def attach_h3_jvm_global(
     input through the Arrow kernel (a Python worker per task) whenever
     the bbox wasn't face-interior.
     """
-    base_cols = list(df.columns)
-    for t in base_cols:
-        if t.startswith("__h3e_"):
-            raise ValueError(
-                f"column {t} collides with the encode temps (reserved prefix __h3e_)"
-            )
-    if lat is None:
-        lat = "`lat`"
-    if lng is None:
-        lng = "`lng`"
-    if isinstance(lat, str) and isinstance(lng, str):
-        lat_sql, lng_sql = lat, lng
-        cur = df
-    else:
-        cur = df.select("*", lat.alias("__h3e_lat"), lng.alias("__h3e_lng"))
-        lat_sql, lng_sql = "`__h3e_lat`", "`__h3e_lng`"
-
-    ex: list[str] = []
-
-    def step(name: str, sql: str) -> str:
-        ex.append(f"({sql}) AS `{name}`")
-        return f"`{name}`"
-
     # rank 0: unit-sphere xyz as ATTRIBUTES (shared by the 20-face
     # argmax and the chain — no recomputed trig)
-    d2r = float(np.pi / 180.0)
-    latr = f"(({lat_sql}) * {_dlit(d2r)})"
-    lngr = f"(({lng_sql}) * {_dlit(d2r)})"
-    x3 = step("__h3e_gX", f"COS({latr}) * COS({lngr})")
-    y3 = step("__h3e_gY", f"COS({latr}) * SIN({lngr})")
-    z3 = step("__h3e_gZ", f"SIN({latr})")
+    cur, base_cols, ex, step, (x3, y3, z3) = _open_chain(df, lat, lng, "g")
 
     # rank 1: the 20 face dots, f64 arithmetic over f32-rounded
     # operands (see docstring margin argument)
@@ -560,18 +553,14 @@ def attach_h3_jvm_global(
                 f"THEN ELEMENT_AT({flat_arr}, ({fidx} - 1) * 25 + {ak} + 1) "
                 f"ELSE CAST(-1 AS BIGINT) END")
 
-    hh = _emit_h3_chain(
-        step, res, lat_sql, lng_sql, consts, bc_of, pre="g", xyz=(x3, y3, z3)
-    )
+    hh = _emit_h3_chain(step, res, (x3, y3, z3), consts, bc_of, pre="g")
     # nullable fence (same pushdown rationale as attach_h3_jvm; NULL =
     # route to the Arrow kernel)
     fence = (
         f"CASE WHEN SPARK_PARTITION_ID() >= -1 THEN "
         f"(CASE WHEN {safe} AND `__h3e_bcg` >= 0 THEN {hh} END) END"
     )
-    quoted_base = [f"`{c}`" for c in base_cols]
-    full = cur.selectExpr(*quoted_base, *ex, f"({fence}) AS `{out}`")
-    return full.select(*base_cols, out)
+    return _close_chain(cur, base_cols, ex, fence, out)
 
 
 def attach_h3_jvm_home(
@@ -602,35 +591,7 @@ def attach_h3_jvm_home(
     fine for the ~19% residue scan, still far cheaper than per-row
     Python — while the 81% fast pass keeps its compiled 28-rank chain.
     """
-    base_cols = list(df.columns)
-    for t in base_cols:
-        if t.startswith("__h3e_"):
-            raise ValueError(
-                f"column {t} collides with the encode temps (reserved prefix __h3e_)"
-            )
-    if lat is None:
-        lat = "`lat`"
-    if lng is None:
-        lng = "`lng`"
-    if isinstance(lat, str) and isinstance(lng, str):
-        lat_sql, lng_sql = lat, lng
-        cur = df
-    else:
-        cur = df.select("*", lat.alias("__h3e_lat"), lng.alias("__h3e_lng"))
-        lat_sql, lng_sql = "`__h3e_lat`", "`__h3e_lng`"
-
-    ex: list[str] = []
-
-    def step(name: str, sql: str) -> str:
-        ex.append(f"({sql}) AS `{name}`")
-        return f"`{name}`"
-
-    d2r = float(np.pi / 180.0)
-    latr = f"(({lat_sql}) * {_dlit(d2r)})"
-    lngr = f"(({lng_sql}) * {_dlit(d2r)})"
-    x3 = step("__h3e_hX", f"COS({latr}) * COS({lngr})")
-    y3 = step("__h3e_hY", f"COS({latr}) * SIN({lngr})")
-    z3 = step("__h3e_hZ", f"SIN({latr})")
+    cur, base_cols, ex, step, (x3, y3, z3) = _open_chain(df, lat, lng, "h")
 
     xf = f"CAST(CAST({x3} AS FLOAT) AS DOUBLE)"
     yf = f"CAST(CAST({y3} AS FLOAT) AS DOUBLE)"
@@ -669,9 +630,7 @@ def attach_h3_jvm_home(
                 f"THEN ELEMENT_AT({flat_arr}, ({fidx} - 1) * 25 + {ak} + 1) "
                 f"ELSE CAST(-1 AS BIGINT) END")
 
-    _emit_h3_chain(
-        step, res, lat_sql, lng_sql, consts1, bc1_of, pre="h1", xyz=(x3, y3, z3)
-    )
+    _emit_h3_chain(step, res, (x3, y3, z3), consts1, bc1_of, pre="h1")
     bc1 = "`__h3e_bch1`"
     # home face of the claiming cell, 1-based; dummy 1 when unclaimed
     # (result discarded by the final CASE — ANSI element_at needs a
@@ -687,10 +646,7 @@ def attach_h3_jvm_home(
         for tbl in (ic.FACE_CENTER, ic.FACE_T1, ic.FACE_T2)
         for i in range(3)
     )
-    hh2 = _emit_h3_chain(
-        step, res, lat_sql, lng_sql, consts2, lambda ak: bc1, pre="h2",
-        xyz=(x3, y3, z3),
-    )
+    hh2 = _emit_h3_chain(step, res, (x3, y3, z3), consts2, lambda ak: bc1, pre="h2")
     # kernel `consistent`: the home chain's res-0 anchor must be the
     # cell's own home slot (exact integer-valued-double comparison)
     ha_arr = "ARRAY(" + ", ".join(_dlit(float(v[0])) for v in ic.HOME_AXIAL) + ")"
@@ -703,9 +659,7 @@ def attach_h3_jvm_home(
         f"CASE WHEN SPARK_PARTITION_ID() >= -1 THEN "
         f"(CASE WHEN {safe} AND {bc1} >= 0 AND ({consistent}) THEN {hh2} END) END"
     )
-    quoted_base = [f"`{c}`" for c in base_cols]
-    full = cur.selectExpr(*quoted_base, *ex, f"({fence}) AS `{out}`")
-    return full.select(*base_cols, out)
+    return _close_chain(cur, base_cols, ex, fence, out)
 
 
 def _phash_latlng_sql(bbox: tuple[float, float, float, float]) -> tuple[str, str]:

@@ -1,4 +1,4 @@
-"""Aggregation operators: caption explode + salted group-by + pivot.
+"""Aggregation operators: caption explode + skew-bounded group-by + pivot.
 
 Reference: group_df_by_tag_values / group_city_tags (make_dataset.py:
 143-172) — one-hot pivot + groupby('h3').sum(). At scale the engine
@@ -8,12 +8,16 @@ pivots only bounded vocabularies on demand.
 
 Skew (north_rule "salted group-by with explicit skew handling"): hot
 cells concentrate 20%+ of rows in a handful of (h3, feature) groups.
-``salted_count`` runs a two-phase aggregation with an explicit salt so
-the heavy groups are split across ``n_salt`` reducers before the final
-(tiny) re-sum. Spark's partial aggregation already map-side-combines,
-so salting matters when upstream stages leave hot keys co-partitioned —
-the salted path is the scale-safe default and is asserted equal to the
-plain path in tests.
+For a COUNT the map-side partial aggregate is the skew bound:
+``salted_count`` is one group-by over one hash exchange, and its partial
+``HashAggregate`` collapses every key to at most one row per map task
+before anything moves, so a hot key reaches its reducer as at most P
+rows (P = map tasks) however many input rows it holds. A salt cannot
+lower that bound — it only multiplies the partial rows and adds a
+second exchange to re-sum them (DS2, ICDE 2021: moving data cannot fix
+a hot key; collapsing it before the move does). Salting pays only when
+the per-key work is not combinable, see ``adaptive_salted_count`` and
+operators/joins.salted_equi_join.
 """
 
 from __future__ import annotations
@@ -28,41 +32,16 @@ def explode_caption_tags(df: DataFrame, col: str = "caption") -> DataFrame:
     ).withColumn("feature", F.trim(F.col("feature"))).where(F.col("feature") != "")
 
 
-def salted_count(
-    df: DataFrame,
-    keys: list[str],
-    salt_src: str = "image_id",
-    n_salt: int = 8,
-    count_alias: str = "count",
-) -> DataFrame:
-    """Two-phase skew-safe count: groupBy(keys + salt) partial count,
-    then groupBy(keys) final sum.
-
-    Round 6 (guide §2.3 "aggregate before you shuffle"): the salt is the
-    MAP PARTITION ID (mod n_salt), not a row-level hash. Within one task
-    every row shares the same salt, so the phase-1 partial-aggregate
-    state per task is (distinct keys x 1) instead of (distinct keys x
-    n_salt) and the phase-1 shuffle carries ~n_salt x fewer partial
-    rows (measured on the 6M-row flagship: hash salt 2.18 s vs
-    partition salt at the plain-count 1.94 s, for identical output). A
-    hot key still splits across up to n_salt reducers: its partial rows
-    come from many map tasks, whose partition ids cover the salt range.
-    Deterministic under retry: a recomputed task keeps its partition id
-    (the guide §2.5 rand()-repartition hazard does not apply — no row
-    changes its reducer on recompute).
-
-    ``salt_src`` names the high-cardinality column the pre-round-6 hash
-    salt used; it is kept (and validated) so callers can still document
-    intent, but the partition-id salt no longer reads it.
+def salted_count(df: DataFrame, keys: list[str], count_alias: str = "count") -> DataFrame:
+    """Skew-bounded count per ``keys``: one ``groupBy`` over a single
+    hash exchange. The partial aggregate below the exchange emits at
+    most (distinct keys of the task) rows per map task, so the shuffle
+    carries at most P x (distinct keys) rows and a hot key arrives at
+    its reducer as at most P partial counts (tests/test_plans.py pins
+    the plan shape and the bound on a planted 90%-hot key). No salt:
+    one would only multiply the partial rows and add a second exchange
+    and stage to re-sum them, without lowering that bound.
     """
-    if salt_src and salt_src not in df.columns and salt_src != "image_id":
-        raise ValueError(f"salt_src column {salt_src!r} not in input")
-    salt = F.pmod(F.spark_partition_id().cast("long"), F.lit(n_salt)).alias("_salt")
-    partial = df.groupBy(*keys, salt).agg(F.count(F.lit(1)).alias("_partial"))
-    return partial.groupBy(*keys).agg(F.sum("_partial").cast("double").alias(count_alias))
-
-
-def plain_count(df: DataFrame, keys: list[str], count_alias: str = "count") -> DataFrame:
     return df.groupBy(*keys).agg(F.count(F.lit(1)).cast("double").alias(count_alias))
 
 
@@ -99,9 +78,10 @@ def adaptive_salted_count(
     (sampled heavy-hitter estimate) are split across enough reducers to
     bring their largest salted sub-group down to roughly one partition's
     fair share; cold keys keep salt factor 1 — no shuffle fan-out where
-    none is needed. The fixed-salt variant (``salted_count``) fans every
-    group out n_salt ways; at 10^12 rows that multiplies the final-agg
-    input 16x for no benefit on the long tail of cold cells.
+    none is needed. For a plain count the partial aggregate of
+    ``salted_count`` already bounds every key to one row per map task,
+    so this variant only earns its sample pass when the salted phase
+    carries work that does not combine map-side.
 
     Result is identical to the plain GROUP BY for any sample outcome
     (the salt only splits work); asserted in tests + the DuckDB oracle.
@@ -109,14 +89,14 @@ def adaptive_salted_count(
     COST NOTE: the heavy-hitter sample re-executes ``df``'s lineage
     (twice: count + thresholded collect). Use it on source-backed or
     cached DataFrames; for a derived pipeline either cache upstream or
-    prefer fixed-salt ``salted_count`` (measured: sampling a 6M-row
-    explode pipeline costs more than fixed salt saves).
+    prefer ``salted_count`` (measured: sampling a 6M-row explode
+    pipeline costs more than any salt saves).
     """
     spark = df.sparkSession
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
     hot = estimate_heavy_keys(df, keys, sample_frac, hot_share, seed)
     if not hot:
-        return plain_count(df, keys, count_alias)
+        return salted_count(df, keys, count_alias)
     dim = spark.createDataFrame(
         [(*k, max(2, int(share * n_part * 2 + 1))) for k, share in hot],
         df.select(*keys).schema.add("_factor", "integer"),
@@ -127,15 +107,11 @@ def adaptive_salted_count(
     return partial.groupBy(*keys).agg(F.sum("_partial").cast("double").alias(count_alias))
 
 
-def hex_features(
-    assignments: DataFrame, n_salt: int = 16, salted: bool = True
-) -> DataFrame:
+def hex_features(assignments: DataFrame) -> DataFrame:
     """The A1/A2 aggregation: per-(h3, feature) counts over the spatial
     join output. Narrow-form equivalent of the reference's pivot +
     groupby('h3').sum() (make_dataset.py:143-172)."""
-    tags = explode_caption_tags(assignments)
-    fn = salted_count if salted else plain_count
-    return fn(tags, ["h3", "feature"])
+    return salted_count(explode_caption_tags(assignments), ["h3", "feature"])
 
 
 def pivot_wide(features: DataFrame, vocab: list[str]) -> DataFrame:

@@ -12,8 +12,9 @@ Scale notes:
   * tiling is a dimension (10^3-10^6 cells/region) -> built once,
     broadcast; the 10^12-row fact side is never shuffled for the join.
   * hot geotag cells skew *groups*, not this join (broadcast hash join
-    has no key-based partitioning); aggregation skew is handled by
-    operators/agg.salted_count.
+    has no key-based partitioning); aggregation skew is bounded by the
+    map-side partial aggregate of operators/agg.salted_count, which
+    ships a hot cell as at most one row per map task.
 """
 
 from __future__ import annotations

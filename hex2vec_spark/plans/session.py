@@ -12,6 +12,13 @@ import os
 
 from pyspark.sql import SparkSession
 
+# the directory that holds the hex2vec_spark package (a checkout root, or
+# a zip when the package is shipped as one): Python workers import the
+# package from here, whatever directory the application started in
+PACKAGE_ROOT = os.path.dirname(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+)
+
 
 def profile_conf(
     shuffle_partitions: int | None = None, arrow_batch: int = 20_000
@@ -51,6 +58,20 @@ def profile_conf(
     }
 
 
+def session_conf(
+    shuffle_partitions: int | None = None,
+    arrow_batch: int = 20_000,
+    extra: dict | None = None,
+) -> dict[str, str]:
+    """Everything get_spark sets beyond its fixed basics: the worker
+    import path, the profile (see profile_conf), then ``extra``, which
+    overrides both."""
+    conf = {"spark.executorEnv.PYTHONPATH": PACKAGE_ROOT}
+    conf.update(profile_conf(shuffle_partitions, arrow_batch))
+    conf.update(extra or {})
+    return conf
+
+
 def get_spark(
     app_name: str = "hex2vec-spark",
     master: str | None = None,
@@ -72,7 +93,11 @@ def get_spark(
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.ui.enabled", "false")
     )
-    # the shared profile (see profile_conf). Rationale for the two
+    # the worker import path: Spark puts spark.executorEnv.PYTHONPATH
+    # ahead of the inherited one in every Python worker, so UDF and
+    # mapInPandas workers find hex2vec_spark even when the application
+    # only has it through a sys.path insert.
+    # The shared profile (see profile_conf). Rationale for the two
     # non-obvious entries:
     # * UTC pin — timestamp literals and date_format render in the
     #   session zone; the DuckDB oracle prints raw stored values, so any
@@ -97,9 +122,7 @@ def get_spark(
     # chain headroom (~2 alias ranks per aperture-7 level), and
     # dataFrameDebugging off removes PySpark 4's per-API-call
     # inspect.stack walk (0.5+ s per complex plan construction).
-    for k, v in profile_conf(shuffle_partitions, arrow_batch).items():
-        b = b.config(k, v)
-    for k, v in (extra or {}).items():
+    for k, v in session_conf(shuffle_partitions, arrow_batch, extra).items():
         b = b.config(k, v)
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -99,22 +99,22 @@ class TestAdaptiveSalting:
 
     def test_adaptive_equals_plain(self, spark):
         from hex2vec_spark.functions.h3_fns import h3_from_phash
-        from hex2vec_spark.operators.agg import adaptive_salted_count, plain_count
+        from hex2vec_spark.operators.agg import adaptive_salted_count, salted_count
         from hex2vec_spark.sources.synth import images_table
 
         img = images_table(spark, 3000).withColumn("h3", h3_from_phash(F.col("phash")))
         a = adaptive_salted_count(img, ["h3"], salt_src="image_id", sample_frac=0.3).toPandas()
-        p = plain_count(img, ["h3"]).toPandas()
+        p = salted_count(img, ["h3"]).toPandas()
         key = lambda d: sorted(map(tuple, d[["h3", "count"]].to_numpy()))
         assert key(a) == key(p)
 
     def test_no_hot_keys_degenerates_to_plain(self, spark):
-        from hex2vec_spark.operators.agg import adaptive_salted_count, plain_count
+        from hex2vec_spark.operators.agg import adaptive_salted_count, salted_count
 
         c = spark.read.parquet(f"{SF_DIR}/customer.parquet")
         # c_custkey is unique -> no key passes any hot threshold
         a = adaptive_salted_count(c, ["c_nationkey"], salt_src="c_custkey", hot_share=0.99).toPandas()
-        p = plain_count(c, ["c_nationkey"]).toPandas()
+        p = salted_count(c, ["c_nationkey"]).toPandas()
         key = lambda d: sorted(map(tuple, d[["c_nationkey", "count"]].to_numpy()))
         assert key(a) == key(p)
 

@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 
 from hex2vec_spark.functions.h3_fns import geotag_np
 from hex2vec_spark.hexlib import h3core, image as im
-from hex2vec_spark.operators.agg import hex_features, plain_count, explode_caption_tags
+from hex2vec_spark.operators.agg import hex_features
 from hex2vec_spark.operators.spatial import build_tiling, spatial_join, assign_h3
 from hex2vec_spark.sources.synth import images_pandas, images_table, regions_pandas
 
@@ -98,19 +98,9 @@ class TestAggregation:
     def test_hex_features_exact(self, spark, oracle_images, tiling):
         ora = oracle_hex_features(oracle_assignments(oracle_images, tiling))
         joined = spatial_join(images_table(spark, N), spark.createDataFrame(tiling), res=RES)
-        eng = hex_features(joined, salted=True).toPandas()
+        eng = hex_features(joined).toPandas()
         key = lambda d: sorted(map(tuple, d[["h3", "feature", "count"]].to_numpy()))
         assert key(eng) == key(ora)
-
-    def test_salted_equals_plain(self, spark, oracle_images, tiling):
-        joined = spatial_join(images_table(spark, N), spark.createDataFrame(tiling), res=RES)
-        tags = explode_caption_tags(joined)
-        from hex2vec_spark.operators.agg import salted_count
-
-        s = salted_count(tags, ["h3", "feature"]).toPandas()
-        p = plain_count(tags, ["h3", "feature"]).toPandas()
-        key = lambda d: sorted(map(tuple, d[["h3", "feature", "count"]].to_numpy()))
-        assert key(s) == key(p)
 
 
 class TestPolygonJoin:

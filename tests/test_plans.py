@@ -8,11 +8,14 @@ the physical strategy the 100 TB design depends on.
     Sort + Limit.
   * Parquet scans: filters pushed down (PushedFilters) and columns
     pruned (ReadSchema carries only what the query needs).
-  * A1 salted agg: two-phase partial aggregation visible in the plan.
+  * A1 skew-bounded agg: one hash exchange over a partial aggregate
+    that collapses a hot key to one row per map task.
 
 Plus snapshot history / time-travel reads for the iceberg-lite layout.
 """
 
+import numpy as np
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -23,6 +26,30 @@ def plan_of(df) -> str:
     return df._sc._jvm.PythonSQLUtils.explainString(
         df._jdf.queryExecution(), "formatted"
     )
+
+
+@pytest.fixture
+def no_aqe(spark):
+    # a non-adaptive physical plan is the final one: its node tree,
+    # SQL metrics and generated code can be read directly
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    yield spark
+    spark.conf.set("spark.sql.adaptive.enabled", "true")
+
+
+def plan_nodes(plan) -> list:
+    """Every node of a (non-adaptive) physical plan, pre-order."""
+    out, stack = [], [plan]
+    while stack:
+        node = stack.pop()
+        out.append(node)
+        kids = node.children()
+        stack.extend(kids.apply(i) for i in range(kids.size()))
+    return out
+
+
+def node_line(node) -> str:
+    return node.toString().splitlines()[0]
 
 
 class TestJoinPlans:
@@ -72,6 +99,33 @@ class TestJoinPlans:
                 1 for l in opt.splitlines() if l.lstrip("+-: ").startswith("Project")
             )
             assert n_proj <= 2 * res + 6, (res, n_proj)
+
+    @pytest.mark.parametrize("res", [8, 9])
+    def test_flagship_stage_fits_jit_limit(self, no_aqe, tmp_path, res):
+        # HotSpot does not JIT-compile a method over 8,000 bytes of
+        # bytecode, so one oversized generated method leaves the whole
+        # fused scan -> encode -> join -> explode -> partial-agg stage
+        # interpreted. Res 10 is already over the limit (8,373 bytes)
+        # and is not pinned. The stream-side code does not depend on the
+        # tiling's rows, so a one-row dimension of the same schema
+        # stands in for the polyfilled one.
+        from hex2vec_spark.operators.agg import explode_caption_tags, salted_count
+        from hex2vec_spark.operators.spatial import spatial_join
+        from hex2vec_spark.sources.synth import images_pandas_ids
+
+        spark = no_aqe
+        spark.createDataFrame(images_pandas_ids(np.arange(200))).write.parquet(
+            str(tmp_path / "img")
+        )
+        img = spark.read.parquet(str(tmp_path / "img"))
+        tiling = spark.createDataFrame([("r0", 0)], "region_id string, h3 long")
+        q = salted_count(
+            explode_caption_tags(spatial_join(img, tiling, res)),
+            ["region_id", "h3", "feature"],
+        )
+        seq = q._jdf.queryExecution().debug().codegenToSeq()
+        sizes = [seq.apply(i)._3().maxMethodCodeSize() for i in range(seq.size())]
+        assert sizes and max(sizes) < 8000, (res, sizes)
 
     def test_h3_udf_evaluated_once(self, spark):
         # Arrow fallback (jvm="off"): a nullable Python-UDF join key
@@ -139,18 +193,52 @@ class TestTopKPlans:
         q = o.orderBy(F.desc("o_totalprice")).limit(10)
         assert "TakeOrderedAndProject" in plan_of(q)
 
-    def test_salted_agg_is_two_phase(self, spark):
+
+
+class TestAggPlans:
+    def test_count_is_one_exchange_over_partial_agg(self, no_aqe):
         from hex2vec_spark.operators.agg import salted_count
 
-        li = spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
-        q = salted_count(li, ["l_returnflag"], salt_src="l_orderkey")
-        plan = plan_of(q)
-        # two logical groupBys -> at least two HashAggregate pairs, and
-        # the round-6 partition-id salt (pmod of SPARK_PARTITION_ID —
-        # constant within a map task, so partial state stays 1x) feeds
-        # the partial phase
-        assert plan.count("HashAggregate") >= 4
-        assert "pmod" in plan and "SPARK_PARTITION_ID" in plan
+        li = no_aqe.read.parquet(f"{SF_DIR}/lineitem.parquet")
+        q = salted_count(li, ["l_returnflag"])
+        nodes = plan_nodes(q._jdf.queryExecution().executedPlan())
+        shuffles = [
+            node for node in nodes
+            if node.nodeName() == "Exchange" and "hashpartitioning" in node_line(node)
+        ]
+        assert len(shuffles) == 1, [node_line(node) for node in shuffles]
+        below = plan_nodes(shuffles[0].child())
+        assert any(
+            node.nodeName() == "HashAggregate" and "partial_count" in node_line(node)
+            for node in below
+        ), [node_line(node) for node in below]
+
+    def test_hot_key_reaches_reducer_as_one_row_per_map_task(self, no_aqe):
+        # planted skew: one key holds 90% of 10^6 rows spread over P map
+        # partitions. The partial aggregate must collapse it (and every
+        # other key) to at most one row per map task before the shuffle.
+        from hex2vec_spark.operators.agg import salted_count
+
+        n, n_map = 1_000_000, 8
+        key_sql = "CASE WHEN id % 10 < 9 THEN 0 ELSE 1 + id % 997 END"
+        df = no_aqe.range(0, n, numPartitions=n_map).selectExpr(f"{key_sql} AS k")
+        q = salted_count(df, ["k"])
+        got = q.toPandas().set_index("k")["count"].sort_index()
+
+        ids = np.arange(n)
+        keys = np.where(ids % 10 < 9, 0, 1 + ids % 997)
+        want = pd.Series(keys).value_counts().sort_index().astype("float64")
+        assert want[0] == 0.9 * n
+        assert got.index.tolist() == want.index.tolist()
+        assert (got.to_numpy() == want.to_numpy()).all()
+
+        partial = [
+            node for node in plan_nodes(q._jdf.queryExecution().executedPlan())
+            if node.nodeName() == "HashAggregate" and "partial_count" in node_line(node)
+        ]
+        assert len(partial) == 1
+        partial_rows = partial[0].metrics().apply("numOutputRows").value()
+        assert 0 < partial_rows <= n_map * len(want), partial_rows
 
 
 class TestDynamicPartitionPruning:

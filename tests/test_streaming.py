@@ -68,7 +68,7 @@ def test_available_now_resume_matches_batch(spark, tmp_path):
 
     # batch reference over the full table
     batch = hex_features(
-        spatial_join(spark.createDataFrame(all_pdf), tiling_sdf, res=RES), salted=False
+        spatial_join(spark.createDataFrame(all_pdf), tiling_sdf, res=RES)
     ).toPandas()
     merged = (
         stream_pdf.groupby(["h3", "feature"])["count"].sum().reset_index()
