@@ -58,10 +58,6 @@ polys = spark.range(npoly).mapInPandas(
     gen, "obj_id string, ring_lat array<double>, ring_lng array<double>"
 ).localCheckpoint()
 
-# rebuild the operator each pass: pip_join internally localCheckpoints
-# its candidate table, so re-counting ONE DataFrame would skip the
-# bucket join / bbox filter / distinct on every timed pass and
-# understate the operator's true cost (review finding)
 pairs = pip_join(pts, polys, cell_deg=0.05).count()   # warmup (JIT)
 best = None
 for _ in range(3):

@@ -1541,7 +1541,7 @@ def _q_path_length(spark, sf_dir):
 def _q_pip_join(spark, sf_dir):
     # big x big point-in-polygon join (operators/geo_join.pip_join):
     # polygons explode to their bbox grid buckets, points hash to home
-    # buckets, one equi-join + Arrow ray-cast verify. Rows-only (PIP is
+    # buckets, one equi-join + the JVM ray-cast filter. Rows-only (PIP is
     # not tractably SQL-expressible); the exact quadratic oracle lives
     # in tests/test_geo_join.py::test_pip_join_vs_quadratic_oracle.
     from hex2vec_spark.operators.geo_join import pip_join
@@ -1561,9 +1561,9 @@ def _q_pip_join(spark, sf_dir):
     return pip_join(pts, polys, cell_deg=0.05).select("vec_id", "obj_id")
 
 
-def _q_pip_join_holes(spark, sf_dir, op=None):
-    # round-5: pip_join over polygons WITH interior rings (geo_join.
-    # pip_join holes_lat/holes_lng; even-odd over exterior + holes,
+def _q_pip_join_holes(spark, sf_dir, broadcast_polys=False):
+    # pip_join over polygons WITH interior rings (geo_join.pip_join
+    # holes_lat/holes_lng; even-odd over exterior + holes,
     # hexlib.geom.points_in_polygon_with_holes — the reference's sjoin
     # on shapely polygons with interiors, make_dataset.py:96-99).
     # Axis-aligned fixture rectangles make the semantics fully
@@ -1601,12 +1601,11 @@ def _q_pip_join_holes(spark, sf_dir, op=None):
     rows.append(("D", ela, elg, [h4a], [h4g]))
     ela, elg = rect(41.81, 42.21, 16.23, 16.82)
     rows.append(("D", ela, elg, None, None))
-    # round 6: createDataFrame on a PANDAS frame (Arrow path), not a raw
-    # row list — the list path parallelizes 5 rows into defaultParallelism
-    # pickled-Python RDD slices, and BOTH cogroup sides of pip_join read
-    # that RDD: 2 x 32 Python-worker tasks ~ 0.5 s of the query's 1.3 s
-    # (stage-timeline audit, OPTIMIZATION_r06.md). Arrow conversion keeps
-    # the declared schema (and nullability) bit-identical.
+    # createDataFrame on a PANDAS frame (Arrow path), not a raw row
+    # list — the list path parallelizes 5 rows into defaultParallelism
+    # pickled-Python RDD slices, one Python-worker task each
+    # (OPTIMIZATION_r06.md). Arrow conversion keeps the declared schema
+    # (and nullability) bit-identical.
     import pandas as _pd
 
     polys = spark.createDataFrame(
@@ -1617,19 +1616,17 @@ def _q_pip_join_holes(spark, sf_dir, op=None):
         schema="obj_id string, ring_lat array<double>, ring_lng array<double>, "
                "holes_lat array<array<double>>, holes_lng array<array<double>>",
     )
-    if op is None:
-        op = pip_join
-    return op(pts, polys, cell_deg=0.3).select("vec_id", "obj_id")
+    return pip_join(
+        pts, polys, cell_deg=0.3, broadcast_polys=broadcast_polys
+    ).select("vec_id", "obj_id")
 
 
 def _q_pip_join_broadcast(spark, sf_dir):
-    # round-5 all-JVM broadcast PIP join (geo_join.pip_join_broadcast):
-    # same holed fixture and DuckDB oracle as pip_join_holes, but
-    # through the broadcast plan (no point shuffle, no Python worker —
-    # plan-pinned in tests/test_geo_join.py::TestPipJoinBroadcast).
-    from hex2vec_spark.operators.geo_join import pip_join_broadcast
-
-    return _q_pip_join_holes(spark, sf_dir, op=pip_join_broadcast)
+    # pip_join_holes through the broadcast plan (pip_join
+    # broadcast_polys=True): same holed fixture and DuckDB oracle, no
+    # point shuffle into the bucket join — plan-pinned in
+    # tests/test_geo_join.py::TestPipJoinBroadcast.
+    return _q_pip_join_holes(spark, sf_dir, broadcast_polys=True)
 
 
 def _q_rasterize_regions(spark, sf_dir):

@@ -45,7 +45,6 @@ def __getattr__(name):
         "destination_expr": "operators.geo_join",
         "spherical_polygon_area_m2": "hexlib.geom",
         "pip_join": "operators.geo_join",
-        "pip_join_broadcast": "operators.geo_join",
         "points_in_polygon_with_holes": "hexlib.geom",
         "point_in_ring_expr": "functions.geo_expr",
         "point_in_polygon_with_holes_expr": "functions.geo_expr",

@@ -1,12 +1,12 @@
 """Point-in-polygon as pure Catalyst expressions (round 5).
 
-The engine's ray-cast kernel (hexlib.geom.points_in_polygon) is NumPy
-inside Arrow UDFs — right for the cogrouped big x big verify where one
-ring serves millions of points per Arrow crossing, but a Python worker
-tax everywhere a ring ARRAY already sits beside the point row (broadcast
-fences in streaming_geofence, broadcast region rings in
-strict_region_assign). These expressions are the same even-odd ray cast
-emitted as JVM higher-order functions (``filter`` over an edge-index
+The engine's one point-in-polygon predicate: every PIP plan
+(``geo_join.pip_join``, shuffled or broadcast, and so
+``streaming_geofence``; ``strict_region_assign``'s broadcast region
+rings) filters with these, so no PIP plan runs a Python worker. The
+NumPy ray-cast kernel (hexlib.geom.points_in_polygon) stays only as the
+test oracle. These expressions are the same even-odd ray cast emitted
+as JVM higher-order functions (``filter`` over an edge-index
 ``sequence``), term-identical to the kernel:
 
     cond_i = (y1 > py) != (y2 > py)           edge straddles the ray

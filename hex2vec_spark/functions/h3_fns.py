@@ -207,16 +207,6 @@ def h3_polyfill_holes_udf(res: int = DEFAULT_RES):
     return _udf
 
 
-def h3_parent_udf(parent_res: int):
-    @F.pandas_udf(LongType())
-    def _udf(h: pd.Series) -> pd.Series:
-        return pd.Series(
-            h3core.cell_to_parent(h.to_numpy().view(np.uint64), parent_res).view(np.int64)
-        )
-
-    return _udf
-
-
 @F.pandas_udf(StringType())
 def h3_to_str(h: pd.Series) -> pd.Series:
     return pd.Series(h3core.h3_to_string(h.to_numpy().view(np.uint64)))

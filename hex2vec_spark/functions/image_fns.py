@@ -19,16 +19,6 @@ from ..hexlib import h3core
 from .h3_fns import DEFAULT_BBOX, DEFAULT_RES, geotag_np
 
 
-@F.pandas_udf(LongType())
-def phash_from_bytes(data: pd.Series, fmt: pd.Series) -> pd.Series:
-    """Decode each image and recompute its DCT pHash — used to validate
-    the phash column against the pixels (FIXTURES.md §1)."""
-    out = np.empty(len(data), dtype=np.int64)
-    for idx, (b, f) in enumerate(zip(data.to_numpy(), fmt.to_numpy())):
-        out[idx] = im.phash64(im.decode_image(bytes(b), str(f)))
-    return pd.Series(out)
-
-
 @F.pandas_udf(DoubleType())
 def psnr_roundtrip(data: pd.Series, fmt: pd.Series) -> pd.Series:
     """Decode -> re-encode (PNG) -> decode PSNR; inf (reported as 999.0)
@@ -90,23 +80,3 @@ def tile_hex_bins_udf(res: int = DEFAULT_RES, grid: int = 4, bbox=DEFAULT_BBOX):
         return pd.Series([row.tolist() for row in cells])
 
     return _udf
-
-
-def decode_map_in_pandas(df, out_schema: str = None):
-    """mapInPandas plumbing demo for heavyweight decode pipelines: yields
-    (image_id, h, w, mean_luma) with bounded batches."""
-    from pyspark.sql.types import StructType
-
-    def gen(batches):
-        for pdf in batches:
-            n = len(pdf)
-            luma = np.empty(n)
-            for i, (b, f) in enumerate(zip(pdf["bytes"], pdf["fmt"])):
-                px = im.decode_image(bytes(b), str(f))
-                luma[i] = float(px.astype(np.float64).mean())
-            yield pd.DataFrame(
-                {"image_id": pdf["image_id"], "w": pdf["w"], "h": pdf["h"], "mean_luma": luma}
-            )
-
-    schema = "image_id string, w int, h int, mean_luma double"
-    return df.mapInPandas(gen, schema=schema)

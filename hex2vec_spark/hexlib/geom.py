@@ -270,12 +270,6 @@ def haversine_m(lat1, lng1, lat2, lng2) -> np.ndarray:
     return 2.0 * EARTH_R * np.arcsin(np.sqrt(np.clip(a, 0, 1)))
 
 
-def polygon_area_deg2(ring_lat: np.ndarray, ring_lng: np.ndarray) -> float:
-    """Shoelace area in squared degrees (sign gives winding)."""
-    x, y = np.asarray(ring_lng), np.asarray(ring_lat)
-    return 0.5 * float(np.sum(x * np.roll(y, -1) - np.roll(x, -1) * y))
-
-
 def _unit_xyz(lat, lng):
     la, lo = np.radians(lat), np.radians(lng)
     cl = np.cos(la)

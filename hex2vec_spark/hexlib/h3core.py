@@ -87,11 +87,6 @@ def string_to_h3(s) -> np.ndarray:
     return np.array(flat, dtype=np.uint64).reshape(arr.shape)
 
 
-def is_pentagon(h: np.ndarray) -> np.ndarray:
-    _, bc, _ = unpack(np.asarray(h, dtype=np.uint64))
-    return ic.BC_PENTAGON[bc]
-
-
 # ---------------------------------------------------------------- encode
 
 # Hierarchical stray bound: a res-r descendant of a base cell strays at

@@ -211,13 +211,6 @@ def axial_to_hex2d(a: np.ndarray, b: np.ndarray) -> tuple[np.ndarray, np.ndarray
     return a - 0.5 * b, b * SQRT3_2
 
 
-def axial_to_ijk(a: np.ndarray, b: np.ndarray) -> np.ndarray:
-    z = np.zeros_like(a)
-    out = np.stack([a, b, z], axis=-1)
-    out -= out.min(axis=-1, keepdims=True)
-    return out
-
-
 # coset lookup tables for the integer chain: a res-r lattice point c
 # relates to its parent p as c = M p + d with M the det-7 down matrix
 # and d one of the 7 digit offsets — the 7 distinct cosets of the

@@ -123,13 +123,3 @@ def pivot_wide(features: DataFrame, vocab: list[str]) -> DataFrame:
         .agg(F.first("count"))
         .na.fill(0.0)
     )
-
-
-def top_level_presence(assignments: DataFrame, cols: list[str]) -> DataFrame:
-    """A3: per-hex presence counts of non-null top-level attributes
-    (group_city_top_level_tags, make_dataset.py:174-190)."""
-    aggs = [
-        F.sum(F.when(F.col(c).isNotNull(), 1).otherwise(0)).cast("double").alias(f"n_{c}")
-        for c in cols
-    ]
-    return assignments.groupBy("h3").agg(*aggs)

@@ -53,6 +53,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
 
+from ..functions.geo_expr import point_in_polygon_with_holes_expr
 from ..hexlib import geom
 from ..hexlib.geom import EARTH_R
 
@@ -330,13 +331,13 @@ def _bbox_bucket_candidates(
     carry: dict[str, Column],
     broadcast_polys: bool = False,
 ) -> DataFrame:
-    """Shared candidate stage for pip_join and streaming_geofence:
+    """Candidate stage of pip_join (and so of streaming_geofence):
     polygons explode to every ``cell_deg`` grid bucket their bbox
-    touches (id/payload columns per ``carry`` — caller controls whether
-    ring arrays travel), points hash to their single home bucket, one
-    equi-join on the bucket key, then the pure-JVM bbox containment
-    prefilter.  Returns every point column plus the ``carry`` columns;
-    all internal columns are dropped.  Raises on reserved-name clashes
+    touches (id/payload columns per ``carry``), points hash to their
+    single home bucket, one equi-join on the bucket key, then the
+    pure-JVM bbox containment prefilter.  Returns every point column
+    plus the ``carry`` columns; all internal columns are dropped.
+    Raises on reserved-name clashes
     (points streams/tables already carrying ``_band`` etc. would
     otherwise fail with an ambiguous-reference error mid-plan)."""
     s = float(cell_deg)
@@ -416,171 +417,82 @@ def pip_join(
     ring_lng_col: str = "ring_lng",
     holes_lat_col: str = "holes_lat",
     holes_lng_col: str = "holes_lng",
-    verify_target: int = 1_000_000,
-    materialize: bool = True,
-    broadcast_salt_map: bool = True,
+    broadcast_polys: bool = False,
+    dedupe_parts: bool = True,
 ) -> DataFrame:
-    """Big x big point-in-polygon join: (point, polygon) pairs where the
-    point lies inside the polygon ring — for polygon sides too large to
-    broadcast (the scale path past ``spatial.spatial_join``'s broadcast
-    tiling and ``strict_region_assign``'s broadcast rings; north_star's
-    PIP assignment at 10^8 polygons).
+    """Point-in-polygon join: (point, polygon) pairs where the point lies
+    inside the polygon ring — the reference's ``gpd.sjoin`` assignment
+    (make_dataset.py:96-99), for polygon sides of any size (the scale
+    path past ``spatial.spatial_join``'s broadcast tiling and
+    ``strict_region_assign``'s broadcast rings).
 
-    Shape (three stages, all candidate-bounded):
+    Shape (two stages, all JVM — no Python worker anywhere, plan-pinned):
 
       1. CANDIDATES — polygons explode to every ``cell_deg``-degree grid
          bucket their bbox touches (JVM ``sequence`` over band/idx
-         ranges, NO ring payload — just id + bbox scalars); points hash
-         to their single home bucket; one equi-join on the bucket key,
-         then a pure-JVM bbox containment prefilter kills the grid slop
-         before anything heavy moves.
-      2. DEDUP — ``distinct`` collapses the same (point, polygon id)
-         candidate reached via several rings/buckets.
-      3. VERIFY — an *adaptively salted cogroup*: candidates group by
-         (poly id, salt), rings group by (poly id, salt), and an
-         applyInPandas kernel ray-casts each ring ONCE against all its
-         candidate points (vectorized ``geom.points_in_polygon``).
-         Rings cross Arrow once per (polygon, salt) — NOT once per
-         candidate pair, which ships ring arrays per pair and measured
-         strictly slower at 2M x 20k.  The salt count is computed PER
-         POLYGON from its candidate count (``ceil(cnt /
-         verify_target)``, capped at 64): ordinary polygons get salt 1
-         (a uniform salt of 8 cost 4.5x in per-group overhead — 6.0 s
-         vs 27 s at 2M x 20k), while a viral city-sized ring with 10^7
-         candidates splits across tasks instead of straggling.
+         ranges), carrying their ring and hole arrays; points hash to
+         their single home bucket; one equi-join on the bucket key, then
+         a pure-JVM bbox containment prefilter kills the grid slop.
+      2. VERIFY — the Catalyst even-odd ray cast
+         (``functions/geo_expr.point_in_polygon_with_holes_expr``,
+         bit-identical to the NumPy kernel) filters the candidates.
+
+    The bucket join is an ordinary shuffled equi-join, so a hot bucket
+    (a city-sized ring under millions of points) is split by AQE's
+    skew-join (on in ``plans/session.py``); there is no hand-built salt.
+    ``broadcast_polys=True`` broadcasts the bucket-exploded polygons
+    instead, so the point side is never shuffled — for dim-sized
+    polygon sides and streams (``streaming_geofence``).
 
     ``cell_deg`` trades polygon-side explosion against candidate
     fan-in: size it near the typical polygon diameter.  Polygons
     crossing the antimeridian are not supported (their bbox would span
-    the globe); split them at 180 first.  MultiPolygons (several rows
-    sharing an id): a point inside ANY ring matches, one output row per
-    (point, polygon id).
+    the globe; the candidate stage raises); split them at 180 first.
+    MultiPolygons (several rows sharing an id): a point inside ANY ring
+    matches; ``dedupe_parts`` keeps one output row per (point, polygon
+    id) — pass False for one row per containing ring and no extra
+    exchange (streams, where a dropDuplicates would hold state).
 
-    Interior rings (round 5): if the polygon side carries
+    Interior rings: if the polygon side carries
     ``holes_lat_col``/``holes_lng_col`` (``array<array<double>>`` — a
     list of hole rings per row), a point inside a hole does NOT match
-    that ring (even-odd over exterior + holes,
-    geom.points_in_polygon_with_holes — the reference's sjoin semantics
-    on shapely polygons with interiors).  The candidate stage is
-    unchanged: holes only shrink the exterior's area, so the exterior
-    bbox still bounds the polygon.  Columns absent -> hole-free
-    behavior, byte-identical plan.
+    that ring (even-odd over exterior + holes — the reference's sjoin
+    semantics on shapely polygons with interiors).  Holes only shrink
+    the exterior's area, so the exterior bbox still bounds the polygon.
 
-    Returns every point column plus ``poly_id_col``.  NOTE: the dedup
-    stage is a ``distinct`` over ALL point columns — rows that are
+    Returns every point column plus ``poly_id_col``.  NOTE: the part
+    dedup is a ``dropDuplicates`` over ALL point columns — rows that are
     byte-identical across every column collapse to one output row, so
     include a unique id column when input multiplicity matters
     (``distance_join`` by contrast preserves multiplicity).
     """
-    reserved = {"_pid", "_salt", "_ns", "_rla", "_rlg", "_hla", "_hlg"}
-    clash = reserved & (set(points.columns) | set(polygons.columns))
-    if clash:
-        raise ValueError(f"pip_join reserves column names {sorted(clash)}")
     if poly_id_col in points.columns:
-        # the output appends poly_id_col to the point columns; a point
-        # column of the same name would produce a duplicate field in the
-        # applyInPandas schema and be silently overwritten in the kernel
         raise ValueError(
             f"pip_join output column {poly_id_col!r} already exists in points"
         )
-    cand = (
-        _bbox_bucket_candidates(
-            points, polygons, cell_deg, lat_col, lng_col,
-            ring_lat_col, ring_lng_col, carry={"_pid": F.col(poly_id_col)},
-        )
-        .select(*points.columns, "_pid")
-        .distinct()
-    )
-    # the adaptive salt map aggregates over the SAME candidate table the
-    # verify consumes — localCheckpoint so the bucket join runs once,
-    # not once per consumer (the repo-wide self-reuse pattern)
-    if materialize:
-        cand = cand.localCheckpoint(eager=False)
-    salt_map = cand.groupBy("_pid").agg(
-        F.greatest(
-            F.lit(1).cast("long"),
-            F.least(F.lit(64).cast("long"), F.ceil(F.count(F.lit(1)) / F.lit(verify_target))),
-        ).alias("_ns")
-    )
-    # round 6 (guide §3.1): the salt map is one (_pid, _ns) row per
-    # polygon WITH candidates — dimension-sized next to the candidate
-    # table — so BROADCAST it into both attach joins. The round-5 plan
-    # left both as SortMergeJoins (the checkpointed candidate RDD has
-    # no stats, so auto-broadcast never fires): candidates AND ring
-    # payloads each paid an Exchange + Sort just to pick up one long.
-    # Broadcasting removes 4 Exchanges/4 Sorts (12 -> 8 exchanges on
-    # the holed-fixture query) and, at scale, stops the ring arrays
-    # from shuffling twice (once for the salt join, once for the
-    # cogroup). ``broadcast_salt_map=False`` keeps the old shape for
-    # adversarial runs where even one long per polygon id is too big
-    # to broadcast (>10^8 candidate-bearing polygons).
-    sm = F.broadcast(salt_map) if broadcast_salt_map else salt_map
-    cand = cand.join(sm, "_pid").withColumn(
-        "_salt", F.pmod(F.xxhash64(F.col(lat_col), F.col(lng_col)), F.col("_ns"))
-    ).drop("_ns")
     has_holes = holes_lat_col in polygons.columns and holes_lng_col in polygons.columns
-    hole_sel = (
-        [
-            F.col(holes_lat_col).alias("_hla"),
-            F.col(holes_lng_col).alias("_hlg"),
-        ]
-        if has_holes
-        else []
+    null_rings = F.lit(None).cast("array<array<double>>")
+    cand = _bbox_bucket_candidates(
+        points, polygons, cell_deg, lat_col, lng_col,
+        ring_lat_col, ring_lng_col,
+        carry={
+            poly_id_col: F.col(poly_id_col),
+            "_rla": F.col(ring_lat_col),
+            "_rlg": F.col(ring_lng_col),
+            "_hla": F.col(holes_lat_col) if has_holes else null_rings,
+            "_hlg": F.col(holes_lng_col) if has_holes else null_rings,
+        },
+        broadcast_polys=broadcast_polys,
     )
-    rings = (
-        polygons.select(
-            F.col(poly_id_col).alias("_pid"),
-            F.col(ring_lat_col).alias("_rla"),
-            F.col(ring_lng_col).alias("_rlg"),
-            *hole_sel,
+    out = cand.where(
+        point_in_polygon_with_holes_expr(
+            F.col(lat_col), F.col(lng_col),
+            F.col("_rla"), F.col("_rlg"), F.col("_hla"), F.col("_hlg"),
         )
-        .join(sm, "_pid")
-        .select(
-            "_pid", "_rla", "_rlg",
-            *(["_hla", "_hlg"] if has_holes else []),
-            F.explode(F.sequence(F.lit(0).cast("long"), F.col("_ns") - 1)).alias("_salt"),
-        )
-    )
-
-    out_fields = ", ".join(
-        f"`{f.name}` {f.dataType.simpleString()}" for f in points.schema.fields
-    )
-    pid_type = polygons.schema[poly_id_col].dataType.simpleString()
-    out_schema = f"{out_fields}, `{poly_id_col}` {pid_type}"
-    pcols = list(points.columns)
-
-    def verify(left, right):
-        if len(left) == 0 or len(right) == 0:
-            return pd.DataFrame(columns=pcols + [poly_id_col])
-        la = left[lat_col].to_numpy(dtype=np.float64)
-        lg = left[lng_col].to_numpy(dtype=np.float64)
-        inside = np.zeros(len(left), dtype=bool)
-        # plain-tuple itertuples (underscore names would be renamed by
-        # namedtuple) over ~1 ring per (polygon, salt) group; holes XOR
-        # the crossing parity per ring (even-odd), parts OR across rows
-        rcols = list(right.columns)
-        i_rla, i_rlg = rcols.index("_rla"), rcols.index("_rlg")
-        i_hla = rcols.index("_hla") if has_holes else -1
-        i_hlg = rcols.index("_hlg") if has_holes else -1
-        for ring in right.itertuples(index=False, name=None):
-            holes = []
-            if has_holes and ring[i_hla] is not None and ring[i_hlg] is not None:
-                holes = list(zip(ring[i_hla], ring[i_hlg]))
-            inside |= geom.points_in_polygon_with_holes(
-                la, lg,
-                np.asarray(ring[i_rla], dtype=np.float64),
-                np.asarray(ring[i_rlg], dtype=np.float64),
-                holes,
-            )
-        hit = left.loc[inside, pcols].copy()
-        hit[poly_id_col] = left.loc[inside, "_pid"].to_numpy()
-        return hit
-
-    return (
-        cand.groupBy("_pid", "_salt")
-        .cogroup(rings.groupBy("_pid", "_salt"))
-        .applyInPandas(verify, schema=out_schema)
-    )
+    ).drop("_rla", "_rlg", "_hla", "_hlg")
+    if dedupe_parts:
+        out = out.dropDuplicates(list(points.columns) + [poly_id_col])
+    return out
 
 
 def knn_join_full(
@@ -652,71 +564,6 @@ def knn_join_full(
         if last or remaining.isEmpty():
             break
         radius *= 2.0
-    return out
-
-
-def pip_join_broadcast(
-    points: DataFrame,
-    polygons: DataFrame,
-    cell_deg: float = 0.05,
-    lat_col: str = "lat",
-    lng_col: str = "lng",
-    poly_id_col: str = "obj_id",
-    ring_lat_col: str = "ring_lat",
-    ring_lng_col: str = "ring_lng",
-    holes_lat_col: str = "holes_lat",
-    holes_lng_col: str = "holes_lng",
-    dedupe_parts: bool = True,
-) -> DataFrame:
-    """Point-in-polygon join for a DIM-SIZED polygon side (round 5):
-    the all-JVM broadcast twin of :func:`pip_join`, sharing its grid
-    candidate stage but replacing the cogrouped Arrow verify with the
-    Catalyst ray-cast expression (functions/geo_expr).
-
-    Plan: fences explode to their bbox buckets WITH ring (and hole)
-    arrays attached and broadcast; points compute one home bucket as a
-    pure projection; one BroadcastHashJoin; the JVM bbox prefilter and
-    the even-odd expression do the rest — the point table is never
-    shuffled and NO Python worker runs anywhere (plan-pinned). This is
-    exactly ``streaming_geofence``'s plan, exposed for batch (the
-    streaming operator delegates here), plus an optional
-    ``dedupe_parts`` dropDuplicates so MultiPolygon parts emit one row
-    per (point, polygon id) like ``pip_join`` — pass False to keep the
-    exchange-free per-ring row semantics.
-
-    Use :func:`pip_join` when the polygon side is itself fact-sized
-    (too big to broadcast); results agree (asserted in tests).
-    Same antimeridian and distinct-row caveats as pip_join."""
-    if poly_id_col in points.columns:
-        raise ValueError(
-            f"pip_join_broadcast output column {poly_id_col!r} already exists in points"
-        )
-    from ..functions.geo_expr import point_in_polygon_with_holes_expr
-
-    has_holes = (
-        holes_lat_col in polygons.columns and holes_lng_col in polygons.columns
-    )
-    null_rings = F.lit(None).cast("array<array<double>>")
-    cand = _bbox_bucket_candidates(
-        points, polygons, cell_deg, lat_col, lng_col,
-        ring_lat_col, ring_lng_col,
-        carry={
-            poly_id_col: F.col(poly_id_col),
-            "_rla": F.col(ring_lat_col),
-            "_rlg": F.col(ring_lng_col),
-            "_hla": F.col(holes_lat_col) if has_holes else null_rings,
-            "_hlg": F.col(holes_lng_col) if has_holes else null_rings,
-        },
-        broadcast_polys=True,
-    )
-    out = cand.where(
-        point_in_polygon_with_holes_expr(
-            F.col(lat_col), F.col(lng_col),
-            F.col("_rla"), F.col("_rlg"), F.col("_hla"), F.col("_hlg"),
-        )
-    ).drop("_rla", "_rlg", "_hla", "_hlg")
-    if dedupe_parts:
-        out = out.dropDuplicates(list(points.columns) + [poly_id_col])
     return out
 
 

@@ -113,14 +113,6 @@ def write_table(
     return snapshot
 
 
-def read_snapshot(path: str) -> dict | None:
-    p = os.path.join(_meta_path(path), "snapshot.json")
-    if not os.path.exists(p):
-        return None
-    with open(p) as f:
-        return json.load(f)
-
-
 def _parquet_row_count(path: str) -> int:
     """Row count from parquet FOOTERS (no data scan, no Spark job) — the
     commit metadata would otherwise cost a full re-read of the data just

@@ -188,11 +188,6 @@ def images_pandas(n: int, start: int = 0) -> pd.DataFrame:
     return images_pandas_ids(np.arange(start, start + n, dtype=np.int64))
 
 
-def make_image_row(i: int) -> dict:
-    """Single-row convenience wrapper (same pure function)."""
-    return images_pandas_ids(np.array([i], dtype=np.int64)).iloc[0].to_dict()
-
-
 def images_table(spark, n: int, num_partitions: int | None = None):
     """Distributed deterministic generation of the input table."""
     num_partitions = num_partitions or spark.sparkContext.defaultParallelism

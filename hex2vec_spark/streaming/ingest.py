@@ -98,41 +98,34 @@ def streaming_geofence(
     equi-join on the same ``cell_deg`` grid-bucket key pip_join uses:
     static fences pre-explode to their bbox buckets, streamed points
     compute their single home bucket as pure projections
-    (streaming-safe), and the JVM bbox prefilter + an Arrow pairwise
+    (streaming-safe), and the JVM bbox prefilter + the Catalyst
     ray-cast verify run per micro-batch.  No state, no watermark — every
     micro-batch row is independently checked, so throughput scales with
     executor count like any stateless map.
 
-    The verify here ships rings per candidate row (the batched
-    per-distinct-ring kernel): the right tradeoff for micro-batch-sized
-    candidate sets, vs pip_join's cogroup for backfill-sized ones.  The
-    candidate stage (bbox-bucket explode + home bucket + bbox prefilter)
-    is shared with pip_join via ``geo_join._bbox_bucket_candidates`` —
-    one copy of the bucketing math, and the same reserved-column guard.
+    The plan is ``geo_join.pip_join`` with ``broadcast_polys=True``:
+    one copy of the bucketing math, the same reserved-column guard and
+    the same JVM ray-cast verify as the batch join.
 
     Like ``pip_join``, fences crossing the antimeridian are not
     supported — the shared candidate stage raises on any ring whose
     longitude extent reaches 180°; split such fences at 180 first.
     """
-    # The shared plan lives in geo_join.pip_join_broadcast (round 5):
-    # broadcast bucket-exploded fences + home-bucket projection + JVM
-    # bbox prefilter + the PURE-JVM ray-cast expression
-    # (functions/geo_expr, bit-identical to the NumPy kernel) — no
-    # Python worker in the micro-batch path (the pre-round-5 Arrow
-    # _pip_pair UDF shipped ring arrays through a Python worker per
-    # batch). dedupe_parts=False: dropDuplicates on a stream would
-    # allocate unbounded state, and each point meets each fence RING at
-    # most once (single home bucket) — only multi-ring fences can emit
-    # one row per containing ring, acceptable geofence semantics;
-    # dedupe downstream per micro-batch if needed.
-    from ..operators.geo_join import pip_join_broadcast
+    # Broadcast bucket-exploded fences + home-bucket projection + JVM
+    # bbox prefilter + the pure-JVM ray-cast expression — no Python
+    # worker in the micro-batch path. dedupe_parts=False: dropDuplicates
+    # on a stream would allocate unbounded state, and each point meets
+    # each fence RING at most once (single home bucket) — only
+    # multi-ring fences can emit one row per containing ring, acceptable
+    # geofence semantics; dedupe downstream per micro-batch if needed.
+    from ..operators.geo_join import pip_join
 
-    return pip_join_broadcast(
+    return pip_join(
         points_stream, polygons_sdf, cell_deg,
         lat_col=lat_col, lng_col=lng_col, poly_id_col=poly_id_col,
         ring_lat_col=ring_lat_col, ring_lng_col=ring_lng_col,
         holes_lat_col=holes_lat_col, holes_lng_col=holes_lng_col,
-        dedupe_parts=False,
+        broadcast_polys=True, dedupe_parts=False,
     )
 
 

@@ -2,6 +2,8 @@
 points incl. pole caps + antimeridian), boundary-straddling adversarial
 pairs, grid_radius_m decoupling, and an all-JVM plan assertion."""
 
+import contextlib
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -16,6 +18,21 @@ from hex2vec_spark.operators.geo_join import (
     knn_join,
     pip_join,
 )
+
+
+@contextlib.contextmanager
+def _sql_conf(spark, conf):
+    prev = {k: spark.conf.get(k) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in prev.items():
+            spark.conf.set(k, v)
+
+
+_NO_AUTO_BROADCAST = {"spark.sql.autoBroadcastJoinThreshold": "-1"}
 
 
 def _points(seed=3, n=800):
@@ -218,31 +235,76 @@ class TestDistanceJoin:
         both = {p for p, _ in res[0] if (p, "a") in res[0] and (p, "b") in res[0]}
         assert both  # the fixture overlaps by construction
 
-    def test_pip_join_plan_no_ring_payload_in_bucket_join(self, spark):
-        # design claim pinned: ring arrays must NOT travel through the
-        # candidate bucket join (they cross Arrow only in the cogroup
-        # verify, once per (polygon, salt))
-        polys = pd.DataFrame(
+    def test_pip_join_plan_all_jvm_no_checkpoint(self, spark):
+        # design claim pinned: one all-JVM plan — bucket equi-join, ray-
+        # cast filter, part dedup. No Python node, no checkpoint (its
+        # LogicalRDD would add to the inputs' own), and the bucket join
+        # shuffles both sides unless broadcast_polys=True
+        polys = spark.createDataFrame(pd.DataFrame(
             {
                 "obj_id": ["a"],
                 "ring_lat": [[45.1, 45.4, 45.4, 45.1]],
                 "ring_lng": [[10.1, 10.1, 10.5, 10.5]],
             }
+        ))
+        pts = spark.createDataFrame(
+            pd.DataFrame({"pid": [1, 2], "lat": [45.2, 45.9], "lng": [10.2, 10.9]})
         )
-        pts = pd.DataFrame({"pid": [1, 2], "lat": [45.2, 45.9], "lng": [10.2, 10.9]})
-        out = pip_join(
-            spark.createDataFrame(pts), spark.createDataFrame(polys), materialize=False
-        )
-        plan = out._jdf.queryExecution().optimizedPlan().toString()
-        assert plan.count("FlatMapCoGroupsInPandas") == 1
-        # the candidate subtree (everything between the cogroup's left
-        # child marker ':-' and its right child '+- Proj') must not
-        # reference the ring columns — rings cross only into the verify
-        # top-level children sit at zero indentation: ':- ' opens the
-        # left (candidates), '\n+- ' opens the right (rings)
-        left_subtree = plan[plan.index(":- ") : plan.index("\n+- ")]
-        assert "Join" in left_subtree                 # the bucket joins live here
-        assert "_rla" not in left_subtree and "_rlg" not in left_subtree
+
+        def rdds(df):
+            return df._jdf.queryExecution().optimizedPlan().toString().count("LogicalRDD")
+
+        with _sql_conf(spark, _NO_AUTO_BROADCAST):
+            for bc in (False, True):
+                out = pip_join(pts, polys, broadcast_polys=bc)
+                opt = out._jdf.queryExecution().optimizedPlan().toString()
+                for node in ("FlatMapCoGroupsInPandas", "ArrowEvalPython", "BatchEvalPython"):
+                    assert node not in opt
+                assert rdds(out) == rdds(pts) + rdds(polys)
+                phys = out._jdf.queryExecution().executedPlan().toString()
+                assert ("BroadcastHashJoin" in phys) == bc
+                assert ("SortMergeJoin" in phys) == (not bc)
+                assert {r["pid"] for r in out.collect()} == {1}
+
+    def test_pip_join_hot_bucket_skew_split(self, spark):
+        # planted hot bucket: 3x10^5 points in ONE cell_deg cell inside
+        # one ring, plus background. With auto-broadcast off the bucket
+        # join is a SortMergeJoin and AQE's skew-join splits the hot
+        # bucket's partition — the job the removed hand-built salt did.
+        # Thresholds scaled to the fixture: the hot partition is ~10 MB,
+        # below the 64 MB default advisory size a split aims for.
+        rng = np.random.default_rng(41)
+        n_hot, n_bg = 300_000, 20_000
+        lat = np.concatenate([rng.uniform(45.21, 45.29, n_hot), rng.uniform(44.0, 47.0, n_bg)])
+        lng = np.concatenate([rng.uniform(10.21, 10.29, n_hot), rng.uniform(9.0, 12.0, n_bg)])
+        pts = pd.DataFrame({"pid": np.arange(n_hot + n_bg), "lat": lat, "lng": lng})
+        rings = [("hot", [45.0, 45.0, 45.5, 45.5], [10.0, 10.5, 10.5, 10.0])]
+        for p in range(30):
+            cy, cx = rng.uniform(44.2, 46.8), rng.uniform(9.2, 11.8)
+            ang = np.sort(rng.uniform(0, 2 * np.pi, 6))
+            r = rng.uniform(0.05, 0.2, 6)
+            rings.append((f"p{p:02d}", (cy + r * np.sin(ang)).tolist(),
+                          (cx + r * np.cos(ang)).tolist()))
+        polys = pd.DataFrame(rings, columns=["obj_id", "ring_lat", "ring_lng"])
+        conf = {
+            **_NO_AUTO_BROADCAST,
+            "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes": "256k",
+            "spark.sql.adaptive.advisoryPartitionSizeInBytes": "1m",
+        }
+        with _sql_conf(spark, conf):
+            out = pip_join(
+                spark.createDataFrame(pts), spark.createDataFrame(polys), cell_deg=0.1
+            ).select("pid", "obj_id")
+            got = set(map(tuple, out.toPandas().values))
+            plan = out._jdf.queryExecution().executedPlan().toString()
+        want = set()
+        for oid, rla, rlg in rings:
+            inside = geom.points_in_polygon(
+                lat, lng, np.asarray(rla), np.asarray(rlg)
+            )
+            want |= {(pid, oid) for pid in pts["pid"].to_numpy()[inside]}
+        assert got == want and len(want) > n_hot
+        assert "SortMergeJoin(skew=true)" in plan
 
     def test_convex_hull_vs_bruteforce(self, spark):
         from hex2vec_spark.operators.geo_join import convex_hull
@@ -785,11 +847,9 @@ class TestPipExpr:
 
 
 class TestPipJoinBroadcast:
-    def test_equals_cogrouped_pip_join_with_holes(self, spark):
-        """All-JVM broadcast PIP join == the cogrouped big x big path on
-        the interior-ring fixture (incl. MultiPolygon parts + holes)."""
-        from hex2vec_spark.operators.geo_join import pip_join_broadcast
-
+    def test_broadcast_equals_shuffled_with_holes(self, spark):
+        """pip_join broadcast_polys=True == the shuffled plan on the
+        interior-ring fixture (incl. MultiPolygon parts + holes)."""
         rng = np.random.default_rng(7)
         n = 2500
         pts = spark.createDataFrame(pd.DataFrame({
@@ -802,15 +862,17 @@ class TestPipJoinBroadcast:
             schema="obj_id string, ring_lat array<double>, ring_lng array<double>, "
                    "holes_lat array<array<double>>, holes_lng array<array<double>>",
         )
-        a = {(int(r["pid"]), r["obj_id"])
-             for r in pip_join(pts, polys, cell_deg=0.3).collect()}
-        b = {(int(r["pid"]), r["obj_id"])
-             for r in pip_join_broadcast(pts, polys, cell_deg=0.3).collect()}
+        # auto-broadcast off, or the tiny polygon side would be
+        # broadcast on both sides of the comparison
+        with _sql_conf(spark, _NO_AUTO_BROADCAST):
+            a, b = (
+                {(int(r["pid"]), r["obj_id"])
+                 for r in pip_join(pts, polys, cell_deg=0.3, broadcast_polys=bc).collect()}
+                for bc in (False, True)
+            )
         assert a == b and len(a) > 0
 
     def test_plan_all_jvm_no_point_shuffle(self, spark):
-        from hex2vec_spark.operators.geo_join import pip_join_broadcast
-
         pts = spark.createDataFrame(
             pd.DataFrame({"pid": [1], "lat": [41.0], "lng": [15.5]})
         )
@@ -818,7 +880,7 @@ class TestPipJoinBroadcast:
             "obj_id": ["p"], "ring_lat": [[40.0, 40.0, 42.0, 42.0]],
             "ring_lng": [[15.0, 16.0, 16.0, 15.0]],
         }))
-        out = pip_join_broadcast(pts, polys, cell_deg=0.5, dedupe_parts=False)
+        out = pip_join(pts, polys, cell_deg=0.5, broadcast_polys=True, dedupe_parts=False)
         plan = out._jdf.queryExecution().executedPlan().toString()
         assert "BroadcastHashJoin" in plan
         assert "Exchange hashpartitioning" not in plan
