@@ -3,17 +3,30 @@ exact, MinHash+LSH, SimHash, n-gram Jaccard, embedding-cosine near-dup,
 and pHash near-dup for images.
 
 Shapes chosen for 100 TB scale: every pipeline is
-(narrow per-row signature) -> (band/bucket key) -> (self-join only within
-buckets) -> (pair verify). The candidate self-join joins on bucket keys,
-never all-pairs; bucket skew is bounded by band width.
+(narrow per-row signature) -> (band/bucket key) -> (pairs only within
+buckets) -> (pair verify), never all-pairs. The text and pHash operators
+build the pairs with a self-join on the bucket keys; embedding near-dup
+hands each bucket to one Arrow kernel that verifies its pairs in bounded
+chunks, because its cosine costs far more per pair than a join row.
 """
 
 from __future__ import annotations
 
+from collections.abc import Iterator
+
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window, functions as F
-from pyspark.sql.types import ArrayType, LongType
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.types import (
+    ArrayType,
+    DoubleType,
+    IntegerType,
+    LongType,
+    StructField,
+    StructType,
+)
 
 # deterministic 64-bit mix (splitmix64-style) used by several signatures
 _MIX = 0xFF51AFD7ED558CCD
@@ -109,9 +122,6 @@ def _batch_word_hashes(text: pd.Series) -> tuple[np.ndarray, np.ndarray]:
     (same byte-segment kernel; pinned by a pytest equivalence sweep).
     Zero-length tokens (boundary whitespace artifacts of the Arrow
     split; Python's str.split drops them) are filtered by length."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
     n = len(text)
     if n == 0:
         return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.uint64)
@@ -398,6 +408,132 @@ def phash_near_dup(images: DataFrame, max_hamming: int = 6, id_col: str = "image
     )
 
 
+# cap on the (a-row, b-row) cells of one embedding verify chunk: the
+# chunk's dot-product block and each temporary beside it hold this many
+# values (8 MiB as doubles), whatever the bucket size
+_VERIFY_CHUNK_CELLS = 1 << 20
+
+
+def _ordered_dots(V: np.ndarray, W: np.ndarray) -> np.ndarray:
+    """(n, d) x (m, d) -> (n, m) dot products, each summed left to right
+    over the dims with a separate multiply and add. That is exactly the
+    arithmetic of Catalyst's ``aggregate(zip_with(v, w, x*y), 0.0,
+    acc + x)``, so the results are bit-identical to it; ``@`` would
+    reorder (and may fuse) the sums."""
+    acc = np.zeros((V.shape[0], W.shape[0]))
+    prod = np.empty_like(acc)
+    for k in range(V.shape[1]):
+        np.multiply.outer(V[:, k], W[:, k], out=prod)
+        acc += prod
+    return acc
+
+
+def _ordered_norms(V: np.ndarray) -> np.ndarray:
+    """Row norms in the order of ``sqrt(aggregate(v, 0.0, acc + x*x))``."""
+    acc = np.zeros(V.shape[0])
+    for k in range(V.shape[1]):
+        acc += V[:, k] * V[:, k]
+    return np.sqrt(acc)
+
+
+def _vector_rows(ids: pa.Array, vecs: pa.Array) -> tuple[pa.Array, pa.Array, np.ndarray]:
+    """The rows of a batch that can pair -> (ids, list vectors, (n, dim)
+    float64 values). A null id, a null vector or a null element makes
+    the Catalyst predicate or cosine null, so such a row never pairs and
+    is dropped here. Vectors of different lengths raise."""
+    ok = pc.and_(ids.is_valid(), vecs.is_valid())
+    flat = vecs.flatten()
+    if flat.null_count:
+        bad = np.asarray(pc.list_parent_indices(vecs))[np.asarray(flat.is_null())]
+        ok_np = np.asarray(ok).copy()
+        ok_np[bad] = False
+        ok = pa.array(ok_np)
+    if not pc.all(ok).as_py():
+        ids, vecs = ids.filter(ok), vecs.filter(ok)
+        flat = vecs.flatten()
+    n = len(vecs)
+    lens = np.asarray(pc.list_value_length(vecs))
+    if n and (lens != lens[0]).any():
+        raise ValueError(
+            f"embedding_near_dup needs vectors of one length, got {sorted(set(lens.tolist()))}"
+        )
+    dim = int(lens[0]) if n else 0
+    return ids, vecs, flat.to_numpy(zero_copy_only=False).reshape(n, dim)
+
+
+def _signature_kernel(n_planes: int, n_tables: int, seed: int):
+    """mapInArrow kernel: (id, v) -> (id, tbl, key, nrm, v), one row per
+    vector and table. Bit p of a table's key is ``dot(v, plane) >= 0``
+    with Spark's ordering, which puts NaN above every number."""
+
+    def kernel(batches):
+        for b in batches:
+            ids, vecs, V = _vector_rows(b.column(0), b.column(1))
+            n, dim = V.shape
+            if n == 0:
+                continue
+            planes = np.random.default_rng(seed).standard_normal((n_tables, n_planes, dim))
+            dots = _ordered_dots(V, planes.reshape(-1, dim)).reshape(n, n_tables, n_planes)
+            bits = ((dots >= 0) | np.isnan(dots)).astype(np.int32)
+            key = np.zeros((n, n_tables), dtype=np.int32)
+            for p in range(n_planes):  # (key << 1) + bit: int32 wrap, as Spark's
+                key = (key << 1) + bits[:, :, p]
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.concat_arrays([ids] * n_tables),
+                    pa.array(np.repeat(np.arange(n_tables, dtype=np.int32), n)),
+                    pa.array(key.T.ravel()),
+                    pa.array(np.tile(_ordered_norms(V), n_tables)),
+                    pa.concat_arrays([vecs] * n_tables),
+                ],
+                names=["id", "tbl", "key", "nrm", "v"],
+            )
+
+    return kernel
+
+
+def _verify_kernel(threshold: float):
+    """applyInArrow kernel: one (tbl, key) bucket -> its (id_a, id_b,
+    cosine) pairs with ``id_a < id_b`` and ``cosine >= threshold``.
+
+    Rows are sorted by dense id rank, so pairs come from the upper
+    triangle; they are formed in chunks of at most _VERIFY_CHUNK_CELLS
+    cells, which bounds memory on a hot bucket. ``cosine`` is
+    ``dot / (nrm_a * nrm_b)`` as Catalyst evaluates it; a NaN cosine
+    passes (Spark's ordering) and a zero denominator never pairs."""
+
+    def verify(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        t = pa.Table.from_batches(list(batches)).combine_chunks()
+        ids, _, V = _vector_rows(t.column("id").chunk(0), t.column("v").chunk(0))
+        n = len(ids)
+        if n < 2:
+            return
+        rank = np.asarray(pc.rank(ids, tiebreaker="dense"))
+        order = np.argsort(rank, kind="stable")
+        ids, rank, V = ids.take(pa.array(order)), rank[order], V[order]
+        nrm = np.asarray(t.column("nrm").chunk(0))[order]
+        s = 0
+        while s < n - 1:
+            e = min(n - 1, s + max(1, _VERIFY_CHUNK_CELLS // (n - 1 - s)))
+            den = nrm[s:e, None] * nrm[None, s + 1 :]
+            with np.errstate(divide="ignore", invalid="ignore"):
+                cos = _ordered_dots(V[s:e], V[s + 1 :]) / den
+            keep = (
+                (rank[None, s + 1 :] > rank[s:e, None])
+                & (den != 0)
+                & ((cos >= threshold) | np.isnan(cos))
+            )
+            ia, ib = np.nonzero(keep)
+            if len(ia):
+                yield pa.RecordBatch.from_arrays(
+                    [ids.take(pa.array(ia + s)), ids.take(pa.array(ib + s + 1)), pa.array(cos[ia, ib])],
+                    names=["id_a", "id_b", "cosine"],
+                )
+            s = e
+
+    return verify
+
+
 def embedding_near_dup(
     emb: DataFrame,
     threshold: float = 0.95,
@@ -406,59 +542,56 @@ def embedding_near_dup(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     seed: int = 7,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Embedding-cosine near-dup: banded random-hyperplane LSH (OR over
-    ``n_tables`` independent tables of ``n_planes`` planes each), join
-    within (table, bucket), verify cosine >= threshold.
+    ``n_tables`` independent tables of ``n_planes`` planes each), then
+    an exact cosine >= threshold verify inside each (table, bucket).
 
     Recall math (sign-LSH): a pair at angle theta agrees on one plane
     with p = 1 - theta/pi. A single AND-only table of 8 planes keeps a
     cosine-0.95 pair (theta ~ 18deg, p ~ 0.90) with p^8 ~ 0.43 — it
     MISSES most qualifying pairs (the round-2 defect). OR'ing T
     independent tables lifts recall to 1 - (1 - p^k)^T; the default
-    (k=8, T=8) gives ~0.99 at cosine 0.95 while each join still only
-    compares rows sharing a full 8-bit bucket. ``distinct`` folds pairs
-    that collide in several tables. Same banded OR-construction as
-    ``minhash_lsh_pairs`` above; precision is exact (cosine verified).
+    (k=8, T=8) gives ~0.99 at cosine 0.95. ``distinct`` folds pairs
+    that collide in several tables; precision is exact.
+
+    Two Arrow kernels, so Python is crossed once per batch of vectors
+    and once per bucket, never once per pair, and building the plan
+    starts no job:
+
+    * a ``mapInArrow`` signature (_signature_kernel): the planes are
+      ``default_rng(seed).standard_normal((n_tables, n_planes, dim))``
+      with ``dim`` read from the batch, and each vector yields one
+      (id, tbl, key, nrm, v) row per table;
+    * ``groupBy("tbl", "key").applyInArrow`` (_verify_kernel): all
+      ``id_a < id_b`` pairs of a bucket, in bounded chunks. One hot
+      bucket still runs in one task.
+
+    Dots and norms are summed in Catalyst's order (_ordered_dots), so
+    the keys and ``cosine`` are bit-identical to the SQL expression
+    ``aggregate(zip_with(a.v, b.v, x*y), 0.0, acc + x) / (a.nrm *
+    b.nrm)``. Rows with a null id, vector or element never pair;
+    vectors of different lengths raise.
     """
-    from .knn import _dot, _norm, _sniff_dim
-
-    dim = _sniff_dim(emb, vec_col)
-    rng = np.random.default_rng(seed)
-    planes = rng.standard_normal((n_tables, n_planes, dim))
-
-    vc = F.col(vec_col).cast("array<double>")
-    table_structs = []
-    for t in range(n_tables):
-        bucket = F.lit(0)
-        for p in range(n_planes):
-            bucket = F.shiftleft(bucket, 1) + F.when(
-                _dot(vc, planes[t, p].tolist()) >= 0, 1
-            ).otherwise(0)
-        table_structs.append(F.struct(F.lit(t).alias("tbl"), bucket.alias("key")))
-    norm = _norm(vc)
+    id_type = emb.schema[id_col].dataType
     sig = emb.select(
-        F.col(id_col),
-        vc.alias("v"),
-        norm.alias("nrm"),
-        F.explode(F.array(*table_structs)).alias("tk"),
-    ).select(id_col, "v", "nrm", F.col("tk.tbl").alias("tbl"), F.col("tk.key").alias("key"))
-    # self-join: materialize the signatures once (n_tables*n_planes dot
-    # products per row would otherwise run on both sides); reliable
-    # when a checkpoint_dir is given (operators/ckpt)
-    from .ckpt import Checkpointer
-
-    sig = Checkpointer(emb.sparkSession, checkpoint_dir).reliable(sig, eager=False)
-    a, b = sig.alias("a"), sig.alias("b")
-    dot_ab = F.aggregate(
-        F.zip_with(F.col("a.v"), F.col("b.v"), lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
+        F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("v")
+    ).mapInArrow(
+        _signature_kernel(n_planes, n_tables, seed),
+        StructType([
+            StructField("id", id_type),
+            StructField("tbl", IntegerType()),
+            StructField("key", IntegerType()),
+            StructField("nrm", DoubleType()),
+            StructField("v", ArrayType(DoubleType())),
+        ]),
     )
-    return (
-        a.join(b, ["tbl", "key"])
-        .where(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-        .withColumn("cosine", dot_ab / (F.col("a.nrm") * F.col("b.nrm")))
-        .where(F.col("cosine") >= threshold)
-        .select(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"), "cosine")
-        .distinct()
+    pairs = sig.groupBy("tbl", "key").applyInArrow(
+        _verify_kernel(threshold),
+        StructType([
+            StructField("id_a", id_type),
+            StructField("id_b", id_type),
+            StructField("cosine", DoubleType()),
+        ]),
     )
+    return pairs.distinct()

@@ -214,11 +214,14 @@ def images_cache_path(n: int, base_dir: str = "/tmp") -> str:
     return os.path.join(base_dir, f"hexscale_cache_{n}{suffix}")
 
 
-# round 6: weak-keyed per-(session, path) memo of the LAZY scan plan —
+# round 6: per-(session, path) memo of the LAZY scan plan —
 # spark.read.parquet re-infers the footer schema per call (~0.07 s, paid
 # by every entry-query build); the cache dir is immutable once written
 # (generator-versioned path), so the reused file listing cannot go
-# stale. Plan object only — no data is cached.
+# stale. Plan object only — no data is cached. The dict is weak-keyed,
+# but each cached DataFrame holds its session, so entries are never
+# dropped; ROADMAP direction 5 replaces this memo and __spark_entry__'s
+# _LOAD_MEMO with one session plan cache that clears on stop.
 import weakref as _weakref
 
 _IMG_SCAN_MEMO: "_weakref.WeakKeyDictionary" = _weakref.WeakKeyDictionary()

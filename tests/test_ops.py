@@ -462,6 +462,155 @@ class TestPlantedDups:
         assert d12 <= 8 < d13
 
 
+def _near_dup_reference(ids, V, threshold, n_planes, n_tables, seed):
+    """NumPy reference for embedding_near_dup over non-null vectors: the
+    same planes, every dot and norm summed left to right over the dims
+    (Catalyst's aggregate(zip_with) order), OR over the tables, pairs
+    with id_a < id_b and cosine >= threshold, distinct."""
+    n, dim = V.shape
+    planes = np.random.default_rng(seed).standard_normal((n_tables, n_planes, dim))
+    keys = np.zeros((n_tables, n), dtype=np.int64)
+    for t in range(n_tables):
+        for p in range(n_planes):
+            d = np.zeros(n)
+            for k in range(dim):
+                d = d + V[:, k] * planes[t, p, k]
+            keys[t] = 2 * keys[t] + (d >= 0)
+    sq = np.zeros(n)
+    for k in range(dim):
+        sq = sq + V[:, k] * V[:, k]
+    nrm = np.sqrt(sq)
+    ia, ib = np.nonzero(
+        np.array([[x < y for y in ids] for x in ids])
+        & (keys[:, :, None] == keys[:, None, :]).any(axis=0)
+    )
+    dot = np.zeros(len(ia))
+    for k in range(dim):
+        dot = dot + V[ia, k] * V[ib, k]
+    cos = dot / (nrm[ia] * nrm[ib])
+    keep = cos >= threshold
+    return {(ids[a], ids[b], float(c)) for a, b, c in zip(ia[keep], ib[keep], cos[keep])}
+
+
+class TestEmbeddingNearDupKernels:
+    @pytest.mark.parametrize(
+        "dim,n_planes,n_tables,seed,threshold,id_kind",
+        [
+            (16, 4, 8, 7, 0.35, "long"),
+            (5, 3, 2, 11, 0.6, "string"),
+            (64, 8, 8, 3, 0.2, "long"),
+            (24, 2, 3, 19, 0.5, "float32"),
+        ],
+    )
+    def test_equals_numpy_reference(self, spark, dim, n_planes, n_tables, seed, threshold, id_kind):
+        # exact semantics, cosine compared with ==: clustered vectors so
+        # buckets hold pairs on both sides of the threshold, shuffled ids
+        # (string ids compare as strings: "10" < "9") with one repeated
+        # id, one null vector and one vector with a null element
+        from hex2vec_spark.operators.dedup import embedding_near_dup
+
+        rng = np.random.default_rng(seed + 100)
+        n = 160
+        centers = rng.standard_normal((12, dim))
+        V = centers[rng.integers(0, 12, n)] + 0.8 * rng.standard_normal((n, dim))
+        if id_kind == "float32":
+            V = V.astype(np.float32).astype(np.float64)
+        ids = rng.permutation(10 * n)[: n + 2].tolist()
+        ids[5] = ids[3]
+        if id_kind == "string":
+            ids = [str(i) for i in ids]
+        vec_type = "float" if id_kind == "float32" else "double"
+        id_type = "string" if id_kind == "string" else "long"
+        rows = [(i, v.tolist()) for i, v in zip(ids, V)] + [
+            (ids[n], None),
+            (ids[n + 1], [None] + V[0, 1:].tolist()),
+        ]
+        df = spark.createDataFrame(
+            rows, f"vec_id {id_type}, embedding array<{vec_type}>"
+        ).repartition(3)
+        got = embedding_near_dup(
+            df, threshold=threshold, n_planes=n_planes, n_tables=n_tables, seed=seed
+        )
+        id_t = df.schema["vec_id"].dataType.simpleString()
+        assert got.schema.simpleString() == f"struct<id_a:{id_t},id_b:{id_t},cosine:double>"
+        got_rows = [(r["id_a"], r["id_b"], r["cosine"]) for r in got.collect()]
+        want = _near_dup_reference(ids[:n], V, threshold, n_planes, n_tables, seed)
+        assert len(want) >= 10
+        assert len(got_rows) == len(set(got_rows))
+        assert set(got_rows) == want
+
+    def test_hot_bucket_all_pairs_over_many_chunks(self, spark):
+        # ~3,000 vectors in a narrow cone: every table puts them all in
+        # one bucket, so one verify call sees 4.5M candidate pairs and
+        # must split them across several bounded chunks
+        from hex2vec_spark.operators import dedup
+
+        n, dim, n_planes, n_tables, seed = 3000, 8, 4, 2, 5
+        assert n * (n - 1) // 2 > 3 * dedup._VERIFY_CHUNK_CELLS
+        planes = np.random.default_rng(seed).standard_normal((n_tables * n_planes, dim))
+        unit = planes / np.linalg.norm(planes, axis=1, keepdims=True)
+        rng = np.random.default_rng(1)
+        u = rng.standard_normal(dim)
+        while np.abs(unit @ (u / np.linalg.norm(u))).min() < 0.1:
+            u = rng.standard_normal(dim)
+        u /= np.linalg.norm(u)
+        V = u + 1e-3 * rng.standard_normal((n, dim))
+        assert (np.sign(V @ planes.T) == np.sign(u @ planes.T)).all()  # one bucket per table
+        ids = rng.permutation(n).tolist()
+        # the threshold keeps ~2,000 of the 4.5M pairs
+        order = np.argsort(ids)
+        Vs = V[order]
+        sq = np.zeros(n)
+        for k in range(dim):
+            sq = sq + Vs[:, k] * Vs[:, k]
+        nrm = np.sqrt(sq)
+        ia, ib = np.triu_indices(n, 1)
+        dot = np.zeros(len(ia))
+        for k in range(dim):
+            dot = dot + Vs[ia, k] * Vs[ib, k]
+        cos = dot / (nrm[ia] * nrm[ib])
+        threshold = float(np.sort(cos)[-2000])
+        keep = cos >= threshold
+        want = set(zip(ia[keep].tolist(), ib[keep].tolist(), cos[keep].tolist()))
+        df = spark.createDataFrame(
+            pd.DataFrame({"vec_id": ids, "embedding": V.tolist()})
+        )
+        got = dedup.embedding_near_dup(
+            df, threshold=threshold, n_planes=n_planes, n_tables=n_tables, seed=seed
+        ).collect()
+        assert len(got) == len(want) >= 2000
+        assert {(r["id_a"], r["id_b"], r["cosine"]) for r in got} == want
+
+    def test_ragged_vectors_raise(self, spark):
+        from hex2vec_spark.operators.dedup import embedding_near_dup
+
+        df = spark.createDataFrame(
+            [(1, [1.0, 0.0]), (2, [1.0, 0.0, 0.0])], "vec_id long, embedding array<double>"
+        ).coalesce(1)
+        with pytest.raises(Exception, match="vectors of one length"):
+            embedding_near_dup(df, threshold=0.5).collect()
+
+
+class TestKnnQueryFetch:
+    def test_spark_written_directory_matches_single_file(self, spark, tmp_path):
+        # the pyarrow shortcut reads only a local single parquet file; a
+        # Spark-written directory of the same rows takes the Spark fetch
+        import os
+
+        import __spark_entry__ as entry
+
+        sf_dir = str(tmp_path / "sf")
+        spark.read.parquet(f"{SF_DIR}/embeddings.parquet").write.parquet(
+            f"{sf_dir}/embeddings.parquet"
+        )
+        assert os.path.isfile(f"{SF_DIR}/embeddings.parquet")
+        assert not os.path.isfile(f"{sf_dir}/embeddings.parquet")
+        q = entry.queries()["knn_bruteforce"]
+        want = q(spark, SF_DIR).collect()
+        assert len(want) == 10
+        assert q(spark, sf_dir).collect() == want
+
+
 class TestWinnow:
     def test_shared_run_shares_fingerprint(self, spark):
         from hex2vec_spark.operators.text import winnow_fingerprints

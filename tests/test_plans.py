@@ -10,6 +10,8 @@ the physical strategy the 100 TB design depends on.
     pruned (ReadSchema carries only what the query needs).
   * A1 skew-bounded agg: one hash exchange over a partial aggregate
     that collapses a hot key to one row per map task.
+  * Embedding near-dup: two Arrow kernels, no self-join, and no job
+    while the plan is built.
 
 Plus snapshot history / time-travel reads for the iceberg-lite layout.
 """
@@ -239,6 +241,29 @@ class TestAggPlans:
         assert len(partial) == 1
         partial_rows = partial[0].metrics().apply("numOutputRows").value()
         assert 0 < partial_rows <= n_map * len(want), partial_rows
+
+
+class TestDedupPlans:
+    def test_embedding_near_dup_is_two_arrow_kernels_built_without_jobs(self, spark):
+        # the signature is a mapInArrow and the verify one applyInArrow
+        # per (table, bucket): no self-join, no checkpoint, and no job
+        # (such as a dim sniff) while the plan is built
+        from hex2vec_spark.operators.dedup import embedding_near_dup
+
+        emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+        tracker = spark.sparkContext.statusTracker()
+        before = set(tracker.getJobIdsForGroup(None))
+        q = embedding_near_dup(emb, threshold=0.35, n_planes=4)
+        assert set(tracker.getJobIdsForGroup(None)) - before == set()
+
+        def names(df):
+            return [node.nodeName() for node in plan_nodes(df._jdf.queryExecution().optimizedPlan())]
+
+        got = names(q)
+        assert got.count("MapInArrow") == 1, got
+        assert got.count("FlatMapGroupsInArrow") == 1, got
+        assert "Join" not in got, got
+        assert got.count("LogicalRDD") == names(emb).count("LogicalRDD"), got
 
 
 class TestDynamicPartitionPruning:
