@@ -1,43 +1,56 @@
-"""Distributed cell-embedding trainer — the "2vec" in hex2vec.
+"""Distributed cell-embedding trainers — the "2vec" in hex2vec.
 
-Reference: src/models/combined.py:1-74 trains an encoder so that
-k-ring context pairs score high (dot product + sigmoid) and excluded
-negatives score low (binary skip-gram objective, cluster-word2vec.ipynb
-cells 20-27), over the H3NeighborDataset this engine rebuilds as
-``plans.pipeline.build_neighbor_dataset`` (input_h3, context_h3,
-neg_h3s). No torch ships here, so the model is the classic SGNS
-factorization (two V x dim matrices) trained with full-batch synchronous
-gradient descent in the engine's own mapInPandas partial-aggregate shape
-(operators/cluster.py:34-59 is the same pattern for KMeans):
+The reference trains three models: skip-gram with negative sampling
+over k-ring context pairs (cluster-word2vec.ipynb cells 20-27, over the
+H3NeighborDataset this engine rebuilds as
+``plans.pipeline.build_neighbor_dataset``), an autoencoder over per-hex
+feature vectors (src/models/autoencoder.py:1-56) and the Combined /
+BinaryNN model (src/models/combined.py:7-74). No torch ships here: each
+model is a NumPy forward/backward ``grad_fn``, and one loop,
+:func:`_fit`, trains them all with full-batch synchronous steps:
 
-  * weights are driver-side (V x dim x 2, float64) and broadcast per
-    iteration — the vocabulary is the distinct-cell dimension, orders of
-    magnitude smaller than the training pairs;
-  * each partition computes its LOCAL gradient over its pairs
-    (vectorized sigmoid/GEMM over index arrays) and emits only the
-    SPARSE touched rows (word_idx, grad) — shuffle volume is
-    O(touched_words x dim) per partition, never O(V x dim), and the
-    pairs table itself never shuffles;
-  * partials are combined CLUSTER-SIDE (round-3 fix; the round-2 code
-    collected every partition's partials and summed on the driver —
-    O(partitions x touched x dim) through one process): groupBy
-    (matrix, word) + a JVM zip_with fold over the per-partition
-    gradient list, sorted by partition id so float addition order is
-    fixed -> the driver receives AT MOST 2V+1 summed rows per
-    iteration regardless of partition count (asserted by
-    tests/test_embed.py::test_driver_rows_bounded);
-  * the driver applies one dense step from those <=2V+1 rows.
+  * the weights stay on the driver (vocabulary- or layer-sized, never
+    fact-sized) and are broadcast once per iteration;
+  * one ``mapInArrow`` pass runs ``grad_fn`` over each partition's Arrow
+    batches — list columns are read as flat ``values`` views reshaped to
+    matrices — and emits the partition's partial gradients as one
+    RecordBatch of (m, i, g) rows: the touched word rows for SGNS
+    (shuffle volume O(touched words x dim), never O(V x dim)), one row
+    per parameter tensor for the MLPs. The training table never
+    shuffles;
+  * :func:`_reduce_partials` sums the partials cluster-side in
+    partition-id order, so float addition order is fixed for a fixed
+    partitioning and the driver collects one row per (m, i) — at most
+    2V+1 for SGNS, whatever the partition count;
+  * the driver applies the step: plain gradient descent for SGNS,
+    :func:`_adam` for the autoencoder and Combined.
 
-Full-batch GD is deterministic and embarrassingly data-parallel — the
-right first trainer for a 10^12-row cluster job (hogwild-style async
-SGD trades determinism for faster convergence; noted, not built).
+Every job an iteration starts is labelled ``embed.<trainer> iter k/n``
+(``spark.job.description``), so status-store readers can split a
+trainer's wall time by iteration.
+
+:func:`skipgram_fit_sharded` keeps the weights as a DataFrame and takes
+each step with joins, for vocabularies too large for one process; it
+shares the SGNS gradient kernel (:func:`_sgns_grad`) with the dense
+trainer.
+
+Full-batch GD is deterministic and embarrassingly data-parallel
+(hogwild-style async SGD trades determinism for faster convergence;
+noted, not built).
 """
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession, functions as F
+
+_PARTIALS = "m int, i long, g array<double>"
+_JOB_DESC = "spark.job.description"
 
 
 def _sigmoid(x: np.ndarray) -> np.ndarray:
@@ -49,7 +62,7 @@ _M64 = (1 << 64) - 1
 
 
 def _hash_init_row(seed: int, key: int, dim: int) -> np.ndarray:
-    """Deterministic per-WORD-ID initial input-embedding row (round 4).
+    """Deterministic per-WORD-ID initial input-embedding row.
 
     Position-independent: the same (seed, word id) yields the same row
     no matter where the word lands in a vocabulary ordering — the
@@ -59,6 +72,121 @@ def _hash_init_row(seed: int, key: int, dim: int) -> np.ndarray:
     trajectories can be compared directly (tests/test_embed.py)."""
     rng = np.random.default_rng([seed & _M64, 0x9E3779B9, key & _M64])
     return (rng.standard_normal(dim) / np.sqrt(dim)) * 0.1
+
+
+def _matrix(col: pa.ListArray, width: int) -> np.ndarray:
+    """A list<double> column's non-null rows as a (rows, width) view of
+    its flat values (no per-row conversion)."""
+    return col.flatten().to_numpy().reshape(-1, width)
+
+
+def _lists(flat: np.ndarray, lens) -> pa.ListArray:
+    """A list<double> column from flat values and per-row lengths."""
+    offsets = np.zeros(len(lens) + 1, np.int32)
+    np.cumsum(lens, out=offsets[1:])
+    return pa.ListArray.from_arrays(pa.array(offsets), pa.array(flat, pa.float64()))
+
+
+def _partials_batch(rows: list) -> pa.RecordBatch:
+    """One partition's (m, i, g) partial-gradient rows as one batch."""
+    m, i, g = zip(*rows)
+    g = [np.ravel(x) for x in g]
+    return pa.RecordBatch.from_arrays(
+        [pa.array(m, pa.int32()), pa.array(i, pa.int64()),
+         _lists(np.concatenate(g), [len(x) for x in g])],
+        names=["m", "i", "g"],
+    )
+
+
+@contextmanager
+def _iteration_tags(sc, name: str, n_iter: int):
+    """Yield ``tag(k)``, which labels the jobs started after it
+    ``embed.<name> iter k/n``; the caller's job description is restored
+    on exit."""
+    prev = sc.getLocalProperty(_JOB_DESC)
+    try:
+        yield lambda k: sc.setJobDescription(f"embed.{name} iter {k}/{n_iter}")
+    finally:
+        sc.setLocalProperty(_JOB_DESC, prev)
+
+
+def _fit(src: DataFrame, params, grad_fn, step_fn, n_iter: int, name: str) -> list:
+    """The training loop shared by the driver-weight trainers.
+
+    Per iteration k (1-based): broadcast ``params``; run
+    ``grad_fn(batches, params) -> [(m, i, g), ...]`` once per partition
+    of ``src`` (one mapInArrow pass over the partition's Arrow batches);
+    sum the partials with :func:`_reduce_partials` and collect them; call
+    ``step_fn(rows, k)``, which updates ``params`` in place and returns
+    the iteration's loss. ``grad_fn`` must read the weights only from its
+    ``params`` argument — anything it closes over ships with every task.
+    Returns the per-iteration losses."""
+    sc = src.sparkSession.sparkContext
+    losses = []
+    with _iteration_tags(sc, name, n_iter) as tag:
+        for k in range(1, n_iter + 1):
+            tag(k)
+            bw = sc.broadcast(params)
+            try:
+                def part(batches):
+                    yield _partials_batch(grad_fn(batches, bw.value))
+
+                rows = _reduce_partials(src.mapInArrow(part, _PARTIALS)).collect()
+            finally:
+                bw.destroy()
+            losses.append(step_fn(rows, k))
+    return losses
+
+
+def _sgns_table(
+    pairs: DataFrame, input_col: str, context_col: str, negs_col: str
+) -> DataFrame:
+    """(t, c, n) long word ids; a null negatives list becomes []."""
+    return pairs.select(
+        F.col(input_col).cast("long").alias("t"),
+        F.col(context_col).cast("long").alias("c"),
+        F.coalesce(
+            F.col(negs_col).cast("array<long>"), F.array().cast("array<long>")
+        ).alias("n"),
+    )
+
+
+def _sgns_grad(batches, unpack) -> list:
+    """SGNS gradient of one partition's pairs as (m, i, g) partial rows.
+
+    ``unpack(batch)`` returns ``(tk, ck, nk, lens, u, v, vn)``: the
+    input, context and flattened negative word keys, each pair's
+    negative count, and the matching input-, context- and
+    negative-vector matrices. Rows: m=0 input-matrix and m=1
+    output-matrix gradient sums per touched key, m=2 [loss sum, pair
+    count]."""
+    gi: dict[int, np.ndarray] = {}
+    go: dict[int, np.ndarray] = {}
+    loss = 0.0
+    cnt = 0
+    for b in batches:
+        if not b.num_rows:
+            continue
+        tk, ck, nk, lens, u, v, vn = unpack(b)
+        cnt += b.num_rows
+        s_pos = _sigmoid((u * v).sum(axis=1))
+        loss += float(-np.log(np.maximum(s_pos, 1e-12)).sum())
+        coef = (s_pos - 1.0)[:, None]
+        _acc(gi, tk, coef * v)
+        _acc(go, ck, coef * u)
+        if len(nk):
+            ridx = np.repeat(np.arange(len(tk)), lens)
+            utn = u[ridx]
+            s_neg = _sigmoid((utn * vn).sum(axis=1))
+            loss += float(-np.log(np.maximum(1.0 - s_neg, 1e-12)).sum())
+            coef_n = s_neg[:, None]
+            _acc(gi, tk[ridx], coef_n * vn)
+            _acc(go, nk, coef_n * utn)
+    return (
+        [(0, k, g) for k, g in gi.items()]
+        + [(1, k, g) for k, g in go.items()]
+        + [(2, 0, [loss, float(cnt)])]
+    )
 
 
 def skipgram_fit(
@@ -80,22 +208,21 @@ def skipgram_fit(
     rows whose exclusion ring ate all candidates).
 
     ``init='position'`` (default) draws the whole V x dim init from one
-    seeded stream over the sorted vocabulary (the engine's historical
-    behavior); ``init='hash'`` initializes each row from its WORD ID
-    (:func:`_hash_init_row`) — position-independent, and bit-identical
-    to :func:`skipgram_fit_sharded`'s executor-side init, which is how
-    the dense and sharded paths are trajectory-compared.
+    seeded stream over the sorted vocabulary; ``init='hash'``
+    initializes each row from its WORD ID (:func:`_hash_init_row`) —
+    position-independent, and bit-identical to
+    :func:`skipgram_fit_sharded`'s executor-side init, which is how the
+    dense and sharded paths are trajectory-compared.
     """
-    spark = pairs.sparkSession
-    # vocabulary = distinct cells on either side (dimension-sized)
+    data = _sgns_table(pairs, input_col, context_col, negs_col).localCheckpoint(
+        eager=True
+    )  # scanned n_iter times
+    # vocabulary = distinct cells on either side (dimension-sized),
+    # sorted so executors map ids to rows with searchsorted
     vocab_rows = (
-        pairs.select(F.col(input_col).alias("h3"))
-        .unionByName(pairs.select(F.col(context_col).alias("h3")))
-        .unionByName(
-            pairs.select(F.explode_outer(F.col(negs_col)).alias("h3")).where(
-                F.col("h3").isNotNull()
-            )
-        )
+        data.select(F.col("t").alias("h3"))
+        .union(data.select("c"))
+        .union(data.select(F.explode("n")))
         .distinct()
         .orderBy("h3")
         .collect()
@@ -104,37 +231,6 @@ def skipgram_fit(
     V = len(vocab)
     if V == 0:
         return vocab, np.zeros((0, dim)), []
-    idx_of = {int(h): i for i, h in enumerate(vocab)}
-
-    # index-encode once (broadcast map; narrow projection), cache the
-    # tiny (t, c, negs) index table — it is scanned every iteration
-    b_idx = spark.sparkContext.broadcast(idx_of)
-
-    def to_idx(batches):
-        m = b_idx.value
-        for pdf in batches:
-            # vectorized dict lookup (round-4: Series.map(dict) runs in
-            # pandas' C path; the old per-row lambdas were the one
-            # per-row-Python residue in the trainer). The ragged negs
-            # lists flatten to one mapped Series and re-split by length.
-            t = pdf[input_col].map(m).astype(np.int64)
-            c = pdf[context_col].map(m).astype(np.int64)
-            negs = pdf[negs_col]
-            lens = negs.map(len, na_action="ignore").fillna(0).astype(np.int64).to_numpy()
-            if lens.sum():
-                flat = np.concatenate(
-                    [np.asarray(x, dtype=np.int64) for x in negs if x is not None]
-                )
-                mapped = pd.Series(flat).map(m).to_numpy()
-                n = pd.Series(
-                    [a.tolist() for a in np.split(mapped, np.cumsum(lens)[:-1])]
-                )
-            else:
-                n = pd.Series([[] for _ in range(len(pdf))], dtype=object)
-            yield pd.DataFrame({"t": t, "c": c, "n": n})
-
-    data = pairs.mapInPandas(to_idx, "t long, c long, n array<long>")
-    data = data.localCheckpoint(eager=True)  # scanned n_iter times
 
     if init == "hash":
         w_in = np.stack([_hash_init_row(seed, int(h), dim) for h in vocab])
@@ -144,69 +240,32 @@ def skipgram_fit(
     else:
         raise ValueError(f"init must be position|hash, got {init!r}")
     w_out = np.zeros((V, dim))
-    losses: list[float] = []
-    n_rows = data.count()
 
-    for _ in range(n_iter):
-        b_w = spark.sparkContext.broadcast((w_in, w_out))
+    def grad_fn(batches, params):
+        voc, wi, wo = params
 
-        def grad_part(batches):
-            wi, wo = b_w.value
-            gi: dict[int, np.ndarray] = {}
-            go: dict[int, np.ndarray] = {}
-            loss_sum = 0.0
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                t = pdf["t"].to_numpy()
-                c = pdf["c"].to_numpy()
-                ut, vc = wi[t], wo[c]
-                s_pos = _sigmoid((ut * vc).sum(axis=1))
-                loss_sum += float(-np.log(np.maximum(s_pos, 1e-12)).sum())
-                coef = (s_pos - 1.0)[:, None]
-                _acc(gi, t, coef * vc)
-                _acc(go, c, coef * ut)
-                # negatives: flatten the ragged lists
-                lens = pdf["n"].map(len).to_numpy()
-                if lens.sum():
-                    nn = np.concatenate([np.asarray(x, dtype=np.int64) for x in pdf["n"]])
-                    tt = np.repeat(t, lens)
-                    utn, vn = wi[tt], wo[nn]
-                    s_neg = _sigmoid((utn * vn).sum(axis=1))
-                    loss_sum += float(-np.log(np.maximum(1.0 - s_neg, 1e-12)).sum())
-                    coef_n = s_neg[:, None]
-                    _acc(gi, tt, coef_n * vn)
-                    _acc(go, nn, coef_n * utn)
-            rows = [
-                {"m": 0, "i": int(k), "g": v.tolist()} for k, v in gi.items()
-            ] + [{"m": 1, "i": int(k), "g": v.tolist()} for k, v in go.items()]
-            rows.append({"m": 2, "i": 0, "g": [loss_sum] + [0.0] * (dim - 1)})
-            yield pd.DataFrame(rows, columns=["m", "i", "g"])
+        def unpack(b):
+            t = np.searchsorted(voc, b.column(0).to_numpy())
+            c = np.searchsorted(voc, b.column(1).to_numpy())
+            n = b.column(2)
+            nk = np.searchsorted(voc, n.flatten().to_numpy())
+            lens = pc.list_value_length(n).to_numpy()
+            return t, c, nk, lens, wi[t], wo[c], wo[nk]
 
-        # cluster-side combine: tag each partial with its partition id,
-        # group by (matrix, word), sort the per-key partial list by
-        # partition id (array_sort on struct<p,g> orders by p first —
-        # one partial per partition per key, so the order is total) and
-        # fold with zip_with. Deterministic float addition order for a
-        # fixed partitioning; the driver receives <= 2V+1 dense rows.
-        gdf = _reduce_partials(
-            data.mapInPandas(grad_part, "m int, i long, g array<double>"), dim
-        )
-        parts = gdf.collect()
-        g_in = np.zeros_like(w_in)
-        g_out = np.zeros_like(w_out)
-        loss = 0.0
-        for r in parts:
-            if r["m"] == 0:
-                g_in[r["i"]] = np.asarray(r["g"])
-            elif r["m"] == 1:
-                g_out[r["i"]] = np.asarray(r["g"])
+        return _sgns_grad(batches, unpack)
+
+    def step(rows, _k):
+        grads = (np.zeros_like(w_in), np.zeros_like(w_out))
+        for r in rows:
+            if r["m"] <= 1:
+                grads[r["m"]][r["i"]] = np.asarray(r["g"])
             else:
-                loss = r["g"][0]
-        b_w.destroy()
-        w_in -= (lr / n_rows) * g_in
-        w_out -= (lr / n_rows) * g_out
-        losses.append(loss / n_rows)
+                loss, n_rows = r["g"][0], int(r["g"][1])
+        for w, g in zip((w_in, w_out), grads):
+            w -= (lr / n_rows) * g
+        return loss / n_rows
+
+    losses = _fit(data, (vocab, w_in, w_out), grad_fn, step, n_iter, "skipgram_fit")
     return vocab, w_in, losses
 
 
@@ -223,7 +282,7 @@ def skipgram_fit_sharded(
     checkpoint_dir: str | None = None,
     checkpoint_every: int = 5,
 ) -> tuple[DataFrame, list[float]]:
-    """SGNS trainer with CLUSTER-RESIDENT weights (round-4 scale fix).
+    """SGNS trainer with CLUSTER-RESIDENT weights.
 
     :func:`skipgram_fit` keeps the V x dim weight matrices on the
     driver and broadcasts them per iteration — optimal while they fit
@@ -242,13 +301,13 @@ def skipgram_fit_sharded(
          per-iteration weights join reuses its layout.
       2. Per iteration: ``touch`` JOIN ``weights`` on (m, key) — only
          the V-sized weights side shuffles — then one pairs-scale
-         groupBy(rid) reassembles each pair's vectors, a mapInPandas
-         kernel emits sparse per-partition gradient rows, and
-         :func:`_reduce_partials` combines them cluster-side exactly
-         as the dense path does.
+         groupBy(rid) reassembles each pair's vectors, a mapInArrow
+         pass runs the shared SGNS gradient (:func:`_sgns_grad`),
+         and :func:`_reduce_partials` combines the partials
+         cluster-side exactly as the dense path does.
       3. The summed gradient (<= 2V rows) LEFT-JOINs back onto the
          weights DataFrame for the step — the driver only ever
-         collects the 2-row loss/count aggregate.
+         collects the 1-row loss/count aggregate.
 
     Honest cost statement: the ceiling is bought with ONE extra
     pairs-scale shuffle per iteration (the groupBy(rid) reassembly;
@@ -277,13 +336,9 @@ def skipgram_fit_sharded(
     spark = pairs.sparkSession
     ckpt = Checkpointer(spark, checkpoint_dir, checkpoint_every)
 
-    base = pairs.select(
-        F.col(input_col).cast("long").alias("t"),
-        F.col(context_col).cast("long").alias("c"),
-        F.coalesce(
-            F.col(negs_col).cast("array<long>"), F.array().cast("array<long>")
-        ).alias("n"),
-    ).withColumn("rid", F.monotonically_increasing_id())
+    base = _sgns_table(pairs, input_col, context_col, negs_col).withColumn(
+        "rid", F.monotonically_increasing_id()
+    )
     touch = base.select(
         "rid",
         F.explode(
@@ -324,19 +379,18 @@ def skipgram_fit_sharded(
         return empty, []
 
     wseed = int(seed)
-    out_dim = dim
 
     def init_fn(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            vecs = [
-                _hash_init_row(wseed, int(k), out_dim).tolist()
-                if m == 0
-                else [0.0] * out_dim
-                for m, k in zip(pdf["m"], pdf["key"])
-            ]
-            yield pd.DataFrame({"m": pdf["m"], "key": pdf["key"], "vec": vecs})
+        for b in batches:
+            m, key = b.column("m"), b.column("key")
+            vec = np.zeros((b.num_rows, dim))
+            keys = key.to_numpy()
+            for r in np.flatnonzero(m.to_numpy() == 0):
+                vec[r] = _hash_init_row(wseed, int(keys[r]), dim)
+            yield pa.RecordBatch.from_arrays(
+                [m, key, _lists(vec.ravel(), np.full(b.num_rows, dim))],
+                names=["m", "key", "vec"],
+            )
 
     # full vocabulary x both matrices, initialized EXECUTOR-SIDE — the
     # driver never materializes V rows, let alone V x dim floats
@@ -344,94 +398,74 @@ def skipgram_fit_sharded(
     weights = (
         vocab_df.crossJoin(spark.createDataFrame([(0,), (1,)], "m int"))
         .repartition("m", "key")
-        .mapInPandas(init_fn, "m int, key long, vec array<double>")
+        .mapInArrow(init_fn, "m int, key long, vec array<double>")
     )
     weights = ckpt.reliable(weights, eager=True)
 
+    def unpack(b):
+        negs = b.column("negs")
+        nk, nv = negs.flatten().flatten()
+        return (
+            b.column("tk").to_numpy(),
+            b.column("ck").to_numpy(),
+            nk.to_numpy(),
+            pc.list_value_length(negs).to_numpy(),
+            _matrix(b.column("tu"), dim),
+            _matrix(b.column("cv"), dim),
+            _matrix(nv, dim),
+        )
+
     def grad_part(batches):
-        gi: dict[int, np.ndarray] = {}
-        go: dict[int, np.ndarray] = {}
-        loss_sum = 0.0
-        cnt = 0
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            u = np.stack(pdf["tu"].to_numpy())
-            v = np.stack(pdf["cv"].to_numpy())
-            tk = pdf["tk"].to_numpy().astype(np.int64)
-            ck = pdf["ck"].to_numpy().astype(np.int64)
-            cnt += len(pdf)
-            s_pos = _sigmoid((u * v).sum(axis=1))
-            loss_sum += float(-np.log(np.maximum(s_pos, 1e-12)).sum())
-            coef = (s_pos - 1.0)[:, None]
-            _acc(gi, tk, coef * v)
-            _acc(go, ck, coef * u)
-            lens = pdf["negs"].map(len).to_numpy()
-            if lens.sum():
-                flat = [w for lst in pdf["negs"] for w in lst]
-                nk = np.array([w["key"] for w in flat], dtype=np.int64)
-                vn = np.stack([np.asarray(w["vec"]) for w in flat])
-                ridx = np.repeat(np.arange(len(pdf)), lens)
-                utn = u[ridx]
-                s_neg = _sigmoid((utn * vn).sum(axis=1))
-                loss_sum += float(-np.log(np.maximum(1.0 - s_neg, 1e-12)).sum())
-                coef_n = s_neg[:, None]
-                _acc(gi, tk[ridx], coef_n * vn)
-                _acc(go, nk, coef_n * utn)
-        rows = [
-            {"m": 0, "i": int(k), "g": v_.tolist()} for k, v_ in gi.items()
-        ] + [{"m": 1, "i": int(k), "g": v_.tolist()} for k, v_ in go.items()]
-        rows.append({"m": 2, "i": 0, "g": [loss_sum] + [0.0] * (out_dim - 1)})
-        rows.append({"m": 3, "i": 0, "g": [float(cnt)] + [0.0] * (out_dim - 1)})
-        yield pd.DataFrame(rows, columns=["m", "i", "g"])
+        yield _partials_batch(_sgns_grad(batches, unpack))
 
     losses: list[float] = []
-    for it in range(n_iter):
-        touch_it = touch
-        if batch_fraction is not None:
-            # deterministic per-iteration row sample keyed on rid: the
-            # SAME pairs are kept across all of a row's touch entries,
-            # no join and no second scan to draw the batch
-            touch_it = touch.where(
-                F.pmod(
-                    F.xxhash64(F.col("rid"), F.lit(int(seed)), F.lit(it)),
-                    F.lit(1_000_000),
+    with _iteration_tags(spark.sparkContext, "skipgram_fit_sharded", n_iter) as tag:
+        for it in range(n_iter):
+            tag(it + 1)
+            touch_it = touch
+            if batch_fraction is not None:
+                # deterministic per-iteration row sample keyed on rid: the
+                # SAME pairs are kept across all of a row's touch entries,
+                # no join and no second scan to draw the batch
+                touch_it = touch.where(
+                    F.pmod(
+                        F.xxhash64(F.col("rid"), F.lit(int(seed)), F.lit(it)),
+                        F.lit(1_000_000),
+                    )
+                    < F.lit(int(batch_fraction * 1_000_000))
                 )
-                < F.lit(int(batch_fraction * 1_000_000))
+            j = touch_it.join(weights, ["m", "key"])
+            asm = j.groupBy("rid").agg(
+                F.max(F.when(F.col("role") == 0, F.col("key"))).alias("tk"),
+                F.first(F.when(F.col("role") == 0, F.col("vec")), ignorenulls=True).alias("tu"),
+                F.max(F.when(F.col("role") == 1, F.col("key"))).alias("ck"),
+                F.first(F.when(F.col("role") == 1, F.col("vec")), ignorenulls=True).alias("cv"),
+                F.collect_list(
+                    F.when(F.col("role") == 2, F.struct("key", "vec"))
+                ).alias("negs"),
             )
-        j = touch_it.join(weights, ["m", "key"])
-        asm = j.groupBy("rid").agg(
-            F.max(F.when(F.col("role") == 0, F.col("key"))).alias("tk"),
-            F.first(F.when(F.col("role") == 0, F.col("vec")), ignorenulls=True).alias("tu"),
-            F.max(F.when(F.col("role") == 1, F.col("key"))).alias("ck"),
-            F.first(F.when(F.col("role") == 1, F.col("vec")), ignorenulls=True).alias("cv"),
-            F.collect_list(
-                F.when(F.col("role") == 2, F.struct("key", "vec"))
-            ).alias("negs"),
-        )
-        partials = asm.mapInPandas(grad_part, "m int, i long, g array<double>")
-        summed = _reduce_partials(partials, dim).localCheckpoint(eager=True)
-        meta = {r["m"]: r["g"] for r in summed.where(F.col("m") >= 2).collect()}
-        n_eff = int(meta[3][0]) if batch_fraction is not None else n_rows
-        n_eff = max(n_eff, 1)
-        grads = summed.where(F.col("m") <= 1).select(
-            "m", F.col("i").alias("key"), F.col("g").alias("_g")
-        )
-        step = float(lr / n_eff)
-        weights = (
-            weights.join(grads, ["m", "key"], "left")
-            .select(
-                "m",
-                "key",
-                F.when(F.col("_g").isNull(), F.col("vec"))
-                .otherwise(
-                    F.zip_with("vec", "_g", lambda u_, g_: u_ - F.lit(step) * g_)
+            partials = asm.mapInArrow(grad_part, _PARTIALS)
+            summed = _reduce_partials(partials).localCheckpoint(eager=True)
+            loss, cnt = summed.where(F.col("m") == 2).first()["g"]
+            n_eff = max(int(cnt) if batch_fraction is not None else n_rows, 1)
+            grads = summed.where(F.col("m") <= 1).select(
+                "m", F.col("i").alias("key"), F.col("g").alias("_g")
+            )
+            step = float(lr / n_eff)
+            weights = (
+                weights.join(grads, ["m", "key"], "left")
+                .select(
+                    "m",
+                    "key",
+                    F.when(F.col("_g").isNull(), F.col("vec"))
+                    .otherwise(
+                        F.zip_with("vec", "_g", lambda u_, g_: u_ - F.lit(step) * g_)
+                    )
+                    .alias("vec"),
                 )
-                .alias("vec"),
             )
-        )
-        weights = ckpt(weights, eager=True)
-        losses.append(meta[2][0] / n_eff)
+            weights = ckpt(weights, eager=True)
+            losses.append(loss / n_eff)
     return weights, losses
 
 
@@ -491,6 +525,42 @@ def _acc(d: dict, idx: np.ndarray, grads: np.ndarray) -> None:
             cur += row
 
 
+def _coder_init(sizes: list[int], seed: int, decoder: bool) -> tuple[list, ...]:
+    """(enc_w, enc_b, dec_w, dec_b): an encoder over ``sizes`` and, if
+    ``decoder``, its mirror. Weights N(0, 1/fan_in) drawn from one
+    seeded stream, encoder layers first; biases zero."""
+    enc = list(zip(sizes[:-1], sizes[1:]))
+    dec = [(o, i) for i, o in enc][::-1] if decoder else []
+    rng = np.random.default_rng(seed)
+    ws = [rng.standard_normal((i, o)) / np.sqrt(i) for i, o in enc + dec]
+    bs = [np.zeros(o) for _, o in enc + dec]
+    return ws[: len(enc)], bs[: len(enc)], ws[len(enc):], bs[len(enc):]
+
+
+def _adam(params: list, lr: float):
+    """Return ``step(grads, t)``: one in-place Adam update (torch
+    defaults b1=0.9, b2=0.999, eps=1e-8) of ``params`` at step t."""
+    b1, b2, eps = 0.9, 0.999, 1e-8
+    m = [np.zeros_like(p) for p in params]
+    v = [np.zeros_like(p) for p in params]
+
+    def step(grads: list, t: int) -> None:
+        for k, (p, g) in enumerate(zip(params, grads)):
+            m[k] = b1 * m[k] + (1 - b1) * g
+            v[k] = b2 * v[k] + (1 - b2) * g * g
+            mh = m[k] / (1 - b1 ** t)
+            vh = v[k] / (1 - b2 ** t)
+            p -= lr * mh / (np.sqrt(vh) + eps)
+
+    return step
+
+
+def _tensor_rows(grads: list, loss_terms: list) -> list:
+    """Partial rows for dense parameters: m = the tensor's position in
+    ``grads``, then one row of loss terms."""
+    return [(m, 0, g) for m, g in enumerate(grads)] + [(len(grads), 0, loss_terms)]
+
+
 def autoencoder_fit(
     feats: DataFrame,
     sizes: list[int],
@@ -502,9 +572,7 @@ def autoencoder_fit(
 ) -> tuple[DataFrame, list[float]]:
     """Distributed autoencoder embedder — the reference's SECOND
     embedding method (src/models/autoencoder.py:1-56: stacked
-    Linear+ReLU encoder/decoder, MSE reconstruction, Adam(1e-3)),
-    re-expressed in the engine's broadcast-weights + mapInPandas
-    partial-gradient shape (same machinery as skipgram_fit/KMeans).
+    Linear+ReLU encoder/decoder, MSE reconstruction, Adam(1e-3)).
 
     ``sizes`` mirrors the reference ctor: [D, d] is the linear AE
     (single Linear each way — create_layers puts ReLU after every layer
@@ -512,117 +580,47 @@ def autoencoder_fit(
     hidden layer in both coder halves (decoder mirrored, reference
     autoencoder.py:21-27).
 
-    Full-batch synchronous GD with driver-side Adam state: per
-    iteration each partition emits per-layer DENSE gradients of the
-    summed squared error over ITS rows; partials are combined
-    cluster-side (_reduce_partials — driver receives one row per
-    parameter tensor regardless of partition count) and the driver
-    applies one Adam step on the (layers x D x h)-sized weights —
-    vocabulary-scale, never fact-scale. Returns ((id, embedding)
-    DataFrame via a final broadcast-encode pass, per-iter MSE losses).
+    Trained by :func:`_fit`: each partition emits the summed squared
+    error's per-tensor gradients over ITS rows and the driver applies
+    one Adam step on the (layers x D x h)-sized weights. Returns ((id,
+    embedding) DataFrame — :func:`encode_features` over the rows
+    trained on — and the per-iteration MSE losses).
     """
-    spark = feats.sparkSession
-    enc_sizes = list(zip(sizes[:-1], sizes[1:]))
-    dec_sizes = [(o, i) for i, o in enc_sizes][::-1]
-    rng = np.random.default_rng(seed)
-    # Glorot-ish deterministic init; decoder mirrors encoder shapes
-    weights: list[np.ndarray] = []
-    biases: list[np.ndarray] = []
-    for i, o in enc_sizes + dec_sizes:
-        weights.append(rng.standard_normal((i, o)) / np.sqrt(i))
-        biases.append(np.zeros(o))
-    n_enc = len(enc_sizes)
-    n_lay = len(weights)
-
     src = feats.select(
         F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("x")
     ).localCheckpoint(eager=True)  # scanned n_iter+1 times
     n_rows = src.count()
     if n_rows == 0:
         return src.select("id", F.col("x").alias("embedding")), []
-    denom = float(n_rows * sizes[0])  # MSE normalizer (mean over elements)
+    D = sizes[0]
+    denom = float(n_rows * D)  # MSE normalizer (mean over elements)
+    ew, eb, dw, db = _coder_init(sizes, seed, decoder=True)
+    params = [*ew, *eb, *dw, *db]
+    adam = _adam(params, lr)
 
-    def forward(X, ws, bs):
-        acts = [X]
-        h = X
-        for li in range(n_lay):
-            z = h @ ws[li] + bs[li]
-            # ReLU after every layer except the last of each coder half
-            if li != n_enc - 1 and li != n_lay - 1:
-                z = np.maximum(z, 0.0)
-            acts.append(z)
-            h = z
-        return acts
-
-    adam_m = [np.zeros_like(w) for w in weights] + [np.zeros_like(b) for b in biases]
-    adam_v = [np.zeros_like(w) for w in weights] + [np.zeros_like(b) for b in biases]
-    b1, b2, eps = 0.9, 0.999, 1e-8
-    losses: list[float] = []
-    for it in range(n_iter):
-        bw = spark.sparkContext.broadcast((weights, biases))
-
-        def grad_part(batches):
-            ws, bs = bw.value
-            gw = [np.zeros_like(w) for w in ws]
-            gb = [np.zeros_like(b) for b in bs]
-            sse = 0.0
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                X = np.stack(pdf["x"].to_numpy())
-                acts = forward(X, ws, bs)
-                xhat = acts[-1]
-                diff = xhat - X
-                sse += float((diff * diff).sum())
-                delta = 2.0 * diff  # d(sse)/d(xhat)
-                for li in range(n_lay - 1, -1, -1):
-                    if li != n_enc - 1 and li != n_lay - 1:
-                        delta = delta * (acts[li + 1] > 0.0)
-                    gw[li] += acts[li].T @ delta
-                    gb[li] += delta.sum(axis=0)
-                    if li:
-                        delta = delta @ ws[li].T
-            rows = []
-            for li in range(n_lay):
-                rows.append({"m": li, "i": 0, "g": gw[li].ravel().tolist()})
-                rows.append({"m": n_lay + li, "i": 0, "g": gb[li].tolist()})
-            rows.append({"m": 2 * n_lay, "i": 0, "g": [sse]})
-            yield pd.DataFrame(rows, columns=["m", "i", "g"])
-
-        parts = _reduce_partials(
-            src.mapInPandas(grad_part, "m int, i long, g array<double>")
-        ).collect()
-        grads: dict[int, np.ndarray] = {r["m"]: np.asarray(r["g"]) for r in parts}
-        losses.append(grads[2 * n_lay][0] / denom)
-        t = it + 1
-        for li in range(n_lay):
-            for slot, param, g in (
-                (li, weights[li], grads[li].reshape(weights[li].shape) / denom),
-                (n_lay + li, biases[li], grads[n_lay + li] / denom),
-            ):
-                adam_m[slot] = b1 * adam_m[slot] + (1 - b1) * g
-                adam_v[slot] = b2 * adam_v[slot] + (1 - b2) * g * g
-                mh = adam_m[slot] / (1 - b1 ** t)
-                vh = adam_v[slot] / (1 - b2 ** t)
-                param -= lr * mh / (np.sqrt(vh) + eps)
-        bw.destroy()
-
-    bw_f = spark.sparkContext.broadcast((weights[:n_enc], biases[:n_enc]))
-
-    def encode_part(batches):
-        ws, bs = bw_f.value
-        for pdf in batches:
-            if not len(pdf):
+    def grad_fn(batches, p):
+        ews, ebs, dws, dbs = p
+        gew, geb, gdw, gdb = ([np.zeros_like(a) for a in x] for x in p)
+        sse = 0.0
+        for b in batches:
+            if not b.num_rows:
                 continue
-            X = np.stack(pdf["x"].to_numpy())
-            h = X
-            for li in range(n_enc):
-                h = h @ ws[li] + bs[li]
-                if li != n_enc - 1:
-                    h = np.maximum(h, 0.0)
-            yield pd.DataFrame({"id": pdf["id"], "embedding": [r.tolist() for r in h]})
+            X = _matrix(b.column("x"), D)
+            ae = _stack_fwd(X, ews, ebs)
+            ad = _stack_fwd(ae[-1], dws, dbs)
+            diff = ad[-1] - X
+            sse += float((diff * diff).sum())
+            # d(sse)/d(xhat) back through the decoder, then the encoder
+            _stack_bwd(_stack_bwd(2.0 * diff, ad, dws, gdw, gdb), ae, ews, gew, geb)
+        return _tensor_rows([*gew, *geb, *gdw, *gdb], [sse])
 
-    emb = src.mapInPandas(encode_part, f"id {src.schema['id'].dataType.simpleString()}, embedding array<double>")
+    def step(rows, t):
+        g = {r["m"]: np.asarray(r["g"]) for r in rows}
+        adam([g[k].reshape(q.shape) / denom for k, q in enumerate(params)], t)
+        return g[len(params)][0] / denom
+
+    losses = _fit(src, (ew, eb, dw, db), grad_fn, step, n_iter, "autoencoder_fit")
+    emb = encode_features(src, {"enc_w": ew, "enc_b": eb}, id_col="id", vec_col="x")
     return emb, losses
 
 
@@ -679,26 +677,17 @@ def combined_fit(
     exclusion ring ate all candidates contribute only the positive and
     reconstruction terms, mirroring H3NeighborDataset's behavior).
 
-    Distribution shape: identical to skipgram_fit/autoencoder_fit —
-    weights broadcast per iteration, per-partition dense parameter
-    grads via mapInPandas over the three shared-encoder streams,
-    cluster-side combine (_reduce_partials: one driver row per
-    parameter tensor), driver-side deterministic Adam. The triple
+    Trained by :func:`_fit`: per-partition dense parameter grads over
+    the three shared-encoder streams, driver-side Adam. The triple
     table never shuffles.
 
     Returns (model dict {enc_w, enc_b, dec_w, dec_b, sizes}, per-iter
     loss dicts {loss, pred, recon}). Encode any features table with
     :func:`encode_features`.
     """
-    spark = triples.sparkSession
-    enc_shapes = list(zip(encoder_sizes[:-1], encoder_sizes[1:]))
-    dec_shapes = [(o, i) for i, o in enc_shapes][::-1] if recon else []
-    rng = np.random.default_rng(seed)
-    ew = [rng.standard_normal((i, o)) / np.sqrt(i) for i, o in enc_shapes]
-    eb = [np.zeros(o) for _, o in enc_shapes]
-    dw = [rng.standard_normal((i, o)) / np.sqrt(i) for i, o in dec_shapes]
-    db = [np.zeros(o) for _, o in dec_shapes]
-    Le, Ld = len(ew), len(dw)
+    ew, eb, dw, db = _coder_init(encoder_sizes, seed, decoder=recon)
+    model = {"enc_w": ew, "enc_b": eb, "dec_w": dw, "dec_b": db,
+             "sizes": encoder_sizes}
     D = encoder_sizes[0]
 
     src = triples.select(
@@ -706,124 +695,86 @@ def combined_fit(
         F.col(xc_col).cast("array<double>").alias("xc"),
         F.col(xn_col).cast("array<double>").alias("xn"),
     ).localCheckpoint(eager=True)  # scanned n_iter times
-    n_pos = src.count()
-    n_neg = src.where(F.col("xn").isNotNull()).count()
+    n_pos, n_neg = src.agg(F.count(F.lit(1)), F.count("xn")).first()
     if n_pos == 0:
-        return {"enc_w": ew, "enc_b": eb, "dec_w": dw, "dec_b": db,
-                "sizes": encoder_sizes}, []
-
-    # m-slot layout for _reduce_partials: enc W | enc b | dec W | dec b | loss
+        return model, []
     params = [*ew, *eb, *dw, *db]
-    adam_m = [np.zeros_like(p) for p in params]
-    adam_v = [np.zeros_like(p) for p in params]
-    b1, b2, eps = 0.9, 0.999, 1e-8
-    losses: list[dict] = []
-    LOSS_M = 2 * (Le + Ld)
-    for it in range(n_iter):
-        bw = spark.sparkContext.broadcast((ew, eb, dw, db))
+    adam = _adam(params, lr)
 
-        def grad_part(batches):
-            # accumulators derive from the BROADCAST weights — capturing
-            # the driver-side arrays in this closure would ship them a
-            # second time with every task
-            ews, ebs, dws, dbs = bw.value
-            gew = [np.zeros_like(w) for w in ews]
-            geb = [np.zeros_like(b) for b in ebs]
-            gdw = [np.zeros_like(w) for w in dws]
-            gdb = [np.zeros_like(b) for b in dbs]
-            bce_pos = bce_neg = sse_t = sse_c = sse_n = 0.0
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                Xt = np.stack(pdf["xt"].to_numpy())
-                Xc = np.stack(pdf["xc"].to_numpy())
-                has_n = pdf["xn"].notna().to_numpy()
-                at = _stack_fwd(Xt, ews, ebs)
-                ac = _stack_fwd(Xc, ews, ebs)
-                zt, zc = at[-1], ac[-1]
-                s_pos = (zt * zc).sum(axis=1)
-                sp = _sigmoid(s_pos)
-                bce_pos += float(-np.log(np.maximum(sp, 1e-12)).sum())
-                # d(sum BCE_pos)/ds scaled by the GLOBAL mean factors
-                g_spos = (sp - 1.0) / (2.0 * n_pos)
-                # decoder/reconstruction paths (sum-of-squares form,
-                # scaled to torch mse_loss mean-over-elements); skipped
-                # wholesale in BinaryNN mode
+    def grad_fn(batches, p):
+        ews, ebs, dws, dbs = p
+        gew, geb, gdw, gdb = ([np.zeros_like(a) for a in x] for x in p)
+        bce_pos = bce_neg = sse_t = sse_c = sse_n = 0.0
+        for b in batches:
+            if not b.num_rows:
+                continue
+            Xt = _matrix(b.column("xt"), D)
+            Xc = _matrix(b.column("xc"), D)
+            has_n = b.column("xn").is_valid().to_numpy(zero_copy_only=False)
+            at = _stack_fwd(Xt, ews, ebs)
+            ac = _stack_fwd(Xc, ews, ebs)
+            zt, zc = at[-1], ac[-1]
+            s_pos = (zt * zc).sum(axis=1)
+            sp = _sigmoid(s_pos)
+            bce_pos += float(-np.log(np.maximum(sp, 1e-12)).sum())
+            # d(sum BCE_pos)/ds scaled by the GLOBAL mean factors
+            g_spos = (sp - 1.0) / (2.0 * n_pos)
+            # decoder/reconstruction paths (sum-of-squares form,
+            # scaled to torch mse_loss mean-over-elements); skipped
+            # wholesale in BinaryNN mode
+            if dws:
+                ht = _stack_fwd(zt, dws, dbs)
+                hc = _stack_fwd(zc, dws, dbs)
+                dt = ht[-1] - Xt
+                dc = hc[-1] - Xc
+                sse_t += float((dt * dt).sum())
+                sse_c += float((dc * dc).sum())
+                d_zt = _stack_bwd(2.0 * dt / (3.0 * n_pos * D), ht, dws, gdw, gdb)
+                d_zc = _stack_bwd(2.0 * dc / (3.0 * n_pos * D), hc, dws, gdw, gdb)
+            else:
+                d_zt = np.zeros_like(zt)
+                d_zc = np.zeros_like(zc)
+            d_zt = d_zt + g_spos[:, None] * zc
+            d_zc = d_zc + g_spos[:, None] * zt
+            if has_n.any():
+                Xn = _matrix(b.column("xn"), D)
+                an = _stack_fwd(Xn, ews, ebs)
+                zn = an[-1]
+                s_neg = (zt[has_n] * zn).sum(axis=1)
+                sn = _sigmoid(s_neg)
+                bce_neg += float(-np.log(np.maximum(1.0 - sn, 1e-12)).sum())
+                g_sneg = sn / (2.0 * max(n_neg, 1))
                 if dws:
-                    ht = _stack_fwd(zt, dws, dbs)
-                    hc = _stack_fwd(zc, dws, dbs)
-                    dt = ht[-1] - Xt
-                    dc = hc[-1] - Xc
-                    sse_t += float((dt * dt).sum())
-                    sse_c += float((dc * dc).sum())
-                    d_zt = _stack_bwd(2.0 * dt / (3.0 * n_pos * D), ht, dws, gdw, gdb)
-                    d_zc = _stack_bwd(2.0 * dc / (3.0 * n_pos * D), hc, dws, gdw, gdb)
+                    hn = _stack_fwd(zn, dws, dbs)
+                    dn = hn[-1] - Xn
+                    sse_n += float((dn * dn).sum())
+                    d_zn = _stack_bwd(
+                        2.0 * dn / (3.0 * max(n_neg, 1) * D), hn, dws, gdw, gdb
+                    )
                 else:
-                    d_zt = np.zeros_like(zt)
-                    d_zc = np.zeros_like(zc)
-                d_zt = d_zt + g_spos[:, None] * zc
-                d_zc = d_zc + g_spos[:, None] * zt
-                if has_n.any():
-                    Xn = np.stack(pdf["xn"][has_n].to_numpy())
-                    an = _stack_fwd(Xn, ews, ebs)
-                    zn = an[-1]
-                    s_neg = (zt[has_n] * zn).sum(axis=1)
-                    sn = _sigmoid(s_neg)
-                    bce_neg += float(-np.log(np.maximum(1.0 - sn, 1e-12)).sum())
-                    g_sneg = sn / (2.0 * max(n_neg, 1))
-                    if dws:
-                        hn = _stack_fwd(zn, dws, dbs)
-                        dn = hn[-1] - Xn
-                        sse_n += float((dn * dn).sum())
-                        d_zn = _stack_bwd(
-                            2.0 * dn / (3.0 * max(n_neg, 1) * D), hn, dws, gdw, gdb
-                        )
-                    else:
-                        d_zn = np.zeros_like(zn)
-                    d_zn = d_zn + g_sneg[:, None] * zt[has_n]
-                    d_zt[has_n] += g_sneg[:, None] * zn
-                    _stack_bwd(d_zn, an, ews, gew, geb)
-                _stack_bwd(d_zt, at, ews, gew, geb)
-                _stack_bwd(d_zc, ac, ews, gew, geb)
-            rows = []
-            for li in range(Le):
-                rows.append({"m": li, "i": 0, "g": gew[li].ravel().tolist()})
-                rows.append({"m": Le + li, "i": 0, "g": geb[li].tolist()})
-            for li in range(Ld):
-                rows.append({"m": 2 * Le + li, "i": 0, "g": gdw[li].ravel().tolist()})
-                rows.append({"m": 2 * Le + Ld + li, "i": 0, "g": gdb[li].tolist()})
-            rows.append({"m": LOSS_M, "i": 0,
-                         "g": [bce_pos, bce_neg, sse_t, sse_c, sse_n]})
-            yield pd.DataFrame(rows, columns=["m", "i", "g"])
+                    d_zn = np.zeros_like(zn)
+                d_zn = d_zn + g_sneg[:, None] * zt[has_n]
+                d_zt[has_n] += g_sneg[:, None] * zn
+                _stack_bwd(d_zn, an, ews, gew, geb)
+            _stack_bwd(d_zt, at, ews, gew, geb)
+            _stack_bwd(d_zc, ac, ews, gew, geb)
+        return _tensor_rows(
+            [*gew, *geb, *gdw, *gdb], [bce_pos, bce_neg, sse_t, sse_c, sse_n]
+        )
 
-        parts = _reduce_partials(
-            src.mapInPandas(grad_part, "m int, i long, g array<double>")
-        ).collect()
-        grads = {r["m"]: np.asarray(r["g"]) for r in parts}
-        lv = grads[LOSS_M]
+    def step(rows, t):
+        g = {r["m"]: np.asarray(r["g"]) for r in rows}
+        lv = g[len(params)]
         pred = lv[0] / n_pos / 2.0 + (lv[1] / max(n_neg, 1) / 2.0 if n_neg else 0.0)
         rec = (
             (lv[2] + lv[3]) / (3.0 * n_pos * D)
             + (lv[4] / (3.0 * n_neg * D) if n_neg else 0.0)
-        ) if Ld else 0.0
-        losses.append({"loss": pred + rec, "pred": pred, "recon": rec})
-        t = it + 1
-        # match the params/adam slot ORDER (ew*, eb*, dw*, db*)
-        ordered = (
-            [(ew[li], grads[li].reshape(ew[li].shape)) for li in range(Le)]
-            + [(eb[li], grads[Le + li]) for li in range(Le)]
-            + [(dw[li], grads[2 * Le + li].reshape(dw[li].shape)) for li in range(Ld)]
-            + [(db[li], grads[2 * Le + Ld + li]) for li in range(Ld)]
-        )
-        for slot, (param, g) in enumerate(ordered):
-            adam_m[slot] = b1 * adam_m[slot] + (1 - b1) * g
-            adam_v[slot] = b2 * adam_v[slot] + (1 - b2) * g * g
-            mh = adam_m[slot] / (1 - b1 ** t)
-            vh = adam_v[slot] / (1 - b2 ** t)
-            param -= lr * mh / (np.sqrt(vh) + eps)
-        bw.destroy()
-    return {"enc_w": ew, "enc_b": eb, "dec_w": dw, "dec_b": db,
-            "sizes": encoder_sizes}, losses
+        ) if dw else 0.0
+        adam([g[k].reshape(q.shape) for k, q in enumerate(params)], t)
+        return {"loss": pred + rec, "pred": pred, "recon": rec}
+
+    losses = _fit(src, (ew, eb, dw, db), grad_fn, step, n_iter, "combined_fit")
+    return model, losses
 
 
 def encode_features(
@@ -832,8 +783,8 @@ def encode_features(
     id_col: str = "h3",
     vec_col: str = "features",
 ) -> DataFrame:
-    """Encode a features table through a trained Combined/BinaryNN
-    encoder (broadcast weights, one mapInPandas pass) -> (id,
+    """Encode a features table through a trained encoder (``model``'s
+    enc_w/enc_b; broadcast weights, one mapInArrow pass) -> (id,
     embedding)."""
     spark = feats.sparkSession
     bw = spark.sparkContext.broadcast((model["enc_w"], model["enc_b"]))
@@ -843,13 +794,14 @@ def encode_features(
 
     def enc_part(batches):
         ws, bs = bw.value
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            h = _stack_fwd(np.stack(pdf["x"].to_numpy()), ws, bs)[-1]
-            yield pd.DataFrame({"id": pdf["id"], "embedding": [r.tolist() for r in h]})
+        for b in batches:
+            h = _stack_fwd(_matrix(b.column("x"), ws[0].shape[0]), ws, bs)[-1]
+            yield pa.RecordBatch.from_arrays(
+                [b.column("id"), _lists(h.ravel(), np.full(len(h), h.shape[1]))],
+                names=["id", "embedding"],
+            )
 
-    return src.mapInPandas(
+    return src.mapInArrow(
         enc_part, f"id {src.schema['id'].dataType.simpleString()}, embedding array<double>"
     )
 

@@ -425,3 +425,178 @@ class TestShardedSkipgram:
                 np.testing.assert_allclose(
                     got[int(h)], w[i], rtol=1e-8, atol=1e-12
                 )
+
+
+def _ae_features_df(spark, n=10, D=5, seed=8):
+    rng = np.random.default_rng(seed)
+    rows = [(i, rng.standard_normal(D).tolist()) for i in range(n)]
+    return spark.createDataFrame(pd.DataFrame(rows, columns=["h3", "features"]))
+
+
+def _triples_df(spark, n=12, D=4, seed=2):
+    # every third row has no negative (nullable xn)
+    rng = np.random.default_rng(seed)
+    return spark.createDataFrame(pd.DataFrame({
+        "xt": [rng.standard_normal(D).tolist() for _ in range(n)],
+        "xc": [rng.standard_normal(D).tolist() for _ in range(n)],
+        "xn": [None if i % 3 == 0 else rng.standard_normal(D).tolist() for i in range(n)],
+    }))
+
+
+def _sig(x):
+    return 1.0 / (1.0 + np.exp(-np.clip(x, -30, 30)))
+
+
+class TestTrainingLoop:
+    def test_skipgram_matches_numpy_replica(self, spark):
+        # full-batch SGNS in one process: sorted vocabulary, the
+        # init='position' weights rebuilt from the seed, w_out from zero.
+        # Three iterations, because the first step cannot move w_in
+        # (its gradient is a sum over w_out rows, all zero at init).
+        df = _two_cliques_df(spark).repartition(3)
+        dim, lr, seed, n_iter = 6, 1.5, 4, 3
+        vocab, w, losses = skipgram_fit(df, dim=dim, n_iter=n_iter, lr=lr, seed=seed)
+
+        pdf = df.toPandas()
+        voc = np.unique(np.concatenate(
+            [pdf.input_h3, pdf.context_h3, np.concatenate(pdf.neg_h3s.to_list())]
+        ))
+        assert np.array_equal(vocab, voc)
+        t = np.searchsorted(voc, pdf.input_h3.to_numpy())
+        c = np.searchsorted(voc, pdf.context_h3.to_numpy())
+        lens = pdf.neg_h3s.map(len).to_numpy()
+        tn = np.repeat(t, lens)
+        nn = np.searchsorted(voc, np.concatenate(pdf.neg_h3s.to_list()))
+        n, V = len(pdf), len(voc)
+        wi = (np.random.default_rng(seed).standard_normal((V, dim)) / np.sqrt(dim)) * 0.1
+        wo = np.zeros((V, dim))
+        want = []
+        for _ in range(n_iter):
+            sp = _sig((wi[t] * wo[c]).sum(1))
+            sn = _sig((wi[tn] * wo[nn]).sum(1))
+            want.append((-np.log(np.maximum(sp, 1e-12)).sum()
+                         - np.log(np.maximum(1 - sn, 1e-12)).sum()) / n)
+            gi, go = np.zeros_like(wi), np.zeros_like(wo)
+            np.add.at(gi, t, (sp - 1)[:, None] * wo[c])
+            np.add.at(go, c, (sp - 1)[:, None] * wi[t])
+            np.add.at(gi, tn, sn[:, None] * wo[nn])
+            np.add.at(go, nn, sn[:, None] * wi[tn])
+            wi, wo = wi - lr / n * gi, wo - lr / n * go
+        np.testing.assert_allclose(losses, want, rtol=1e-12)
+        np.testing.assert_allclose(w, wi, rtol=1e-12)
+
+    def test_autoencoder_gradcheck_sign(self, spark, monkeypatch):
+        # the one-Adam-step sign check of test_combined_gradcheck_sign
+        # for the autoencoder. sizes=[D, h, d] puts a ReLU in both coder
+        # halves, and the decoder's mask shapes the encoder's gradient,
+        # so the encoder step checks both. The trained encoder is read
+        # from the encode_features call that builds the returned table.
+        from hex2vec_spark.operators import embed
+
+        seen = {}
+        orig = embed.encode_features
+
+        def spy(feats, model, **kw):
+            seen.update(model)
+            return orig(feats, model, **kw)
+
+        monkeypatch.setattr(embed, "encode_features", spy)
+        D, h, d, seed, lr = 5, 4, 2, 12, 1e-4
+        df = _ae_features_df(spark, D=D).repartition(2)
+        X = np.asarray(df.orderBy("h3").toPandas().features.to_list())
+        emb, losses = embed.autoencoder_fit(df, sizes=[D, h, d], n_iter=1, lr=lr, seed=seed)
+
+        r = np.random.default_rng(seed)
+        ws = [r.standard_normal((i, o)) / np.sqrt(i)
+              for i, o in ((D, h), (h, d), (d, h), (h, D))]
+        bs = [np.zeros(w.shape[1]) for w in ws]
+
+        def loss_of():
+            a = X
+            for li, (w, b) in enumerate(zip(ws, bs)):
+                a = a @ w + b
+                if li in (0, 2):  # ReLU after each coder half's hidden layer
+                    a = np.maximum(a, 0.0)
+            return ((a - X) ** 2).mean()
+
+        assert abs(losses[0] - loss_of()) < 1e-12
+        eps, checked = 1e-6, 0
+        trained = [*seen["enc_w"], *seen["enc_b"]]
+        for p0, p1 in zip([*ws[:2], *bs[:2]], trained):
+            it = np.nditer(p0, flags=["multi_index"])
+            for _ in it:
+                ix = it.multi_index
+                orig_v = p0[ix]
+                p0[ix] = orig_v + eps
+                lp = loss_of()
+                p0[ix] = orig_v - eps
+                lm = loss_of()
+                p0[ix] = orig_v
+                g = (lp - lm) / (2 * eps)
+                if abs(g) < 1e-6:
+                    continue  # sign unreliable near zero (or a dead unit)
+                assert np.sign(p1[ix] - orig_v) == -np.sign(g), (ix, g)
+                checked += 1
+        assert checked > 15
+        # the returned table is the trained encoder over the same rows
+        Z = {row["id"]: np.asarray(row["embedding"]) for row in emb.collect()}
+        enc = np.maximum(X @ trained[0] + trained[2], 0.0) @ trained[1] + trained[3]
+        np.testing.assert_allclose(np.stack([Z[i] for i in range(len(X))]), enc,
+                                   rtol=1e-12, atol=1e-15)
+
+    def test_no_mapInPandas(self, spark, monkeypatch):
+        # every trainer and the encoder pass move their batches as Arrow
+        from pyspark.sql.classic.dataframe import DataFrame as ClassicDF
+
+        from hex2vec_spark.operators.embed import (
+            autoencoder_fit,
+            combined_fit,
+            encode_features,
+            sharded_embeddings,
+            skipgram_fit_sharded,
+        )
+
+        def refuse(*_a, **_k):
+            raise AssertionError("mapInPandas called")
+
+        monkeypatch.setattr(ClassicDF, "mapInPandas", refuse)
+        pairs = _two_cliques_df(spark)
+        vocab, w, l1 = skipgram_fit(pairs, dim=4, n_iter=2, lr=1.0, seed=1)
+        assert len(l1) == 2 and np.isfinite(w).all()
+        wdf, l2 = skipgram_fit_sharded(pairs, dim=4, n_iter=2, lr=1.0, seed=1)
+        assert len(l2) == 2 and sharded_embeddings(wdf).count() == len(vocab)
+        feats = _ae_features_df(spark)
+        emb, l3 = autoencoder_fit(feats, sizes=[5, 3, 2], n_iter=2, lr=1e-2, seed=1)
+        assert len(l3) == 2 and len(emb.collect()) == 10
+        model, l4 = combined_fit(_triples_df(spark), [4, 2], n_iter=2, lr=1e-2, seed=1)
+        assert len(l4) == 2
+        feats4 = spark.createDataFrame(
+            pd.DataFrame({"h3": [1, 2], "features": [[0.1, 0.2, 0.3, 0.4], [1.0, 0.0, 0.0, 1.0]]})
+        )
+        assert [len(r["embedding"]) for r in encode_features(feats4, model).collect()] == [2, 2]
+
+    def test_iterations_carry_job_descriptions(self, spark):
+        from hex2vec_spark.operators.embed import skipgram_fit_sharded
+
+        sc = spark.sparkContext
+        jsc = sc._jsc.sc()
+        pairs = _two_cliques_df(spark)
+        sc.setJobGroup("embed-tags", "caller")  # also sets the caller's description
+        try:
+            skipgram_fit(pairs, dim=4, n_iter=3, lr=1.0, seed=1)
+            skipgram_fit_sharded(pairs, dim=4, n_iter=2, lr=1.0, seed=1)
+            assert sc.getLocalProperty("spark.job.description") == "caller"
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        jsc.listenerBus().waitUntilEmpty()
+        descs = [jsc.statusStore().job(j).description()
+                 for j in sc.statusTracker().getJobIdsForGroup("embed-tags")]
+        tags = {o.get() for o in descs if o.isDefined() and o.get() != "caller"}
+        assert tags == {
+            "embed.skipgram_fit iter 1/3",
+            "embed.skipgram_fit iter 2/3",
+            "embed.skipgram_fit iter 3/3",
+            "embed.skipgram_fit_sharded iter 1/2",
+            "embed.skipgram_fit_sharded iter 2/2",
+        }
