@@ -81,29 +81,16 @@ def entry(spark: SparkSession) -> DataFrame:
     return salted_count(tags, ["region_id", "h3", "feature"], count_alias="count")
 
 
-# Round 6: per-(session, path) memo of the LAZY scan DataFrame. Every
-# query build paid ~0.1 s of parquet footer/schema inference per pass
-# (cProfile: spark.read.parquet dominated several builds); the memo
-# reuses the immutable plan object — never data, and never across
-# sessions. It is weak-keyed, but each cached DataFrame holds its
-# session, so an entry pins its key and is never dropped; ROADMAP
-# direction 5 replaces this memo and _IMG_SCAN_MEMO with one session
-# plan cache that clears on stop. The fixture tables
-# under sf_dir are static for a gate/bench run, so the cached file
-# listing cannot go stale; paths that get rewritten (pipeline stage
-# dirs) do not go through _load.
-import weakref as _weakref
-
-_LOAD_MEMO: "_weakref.WeakKeyDictionary" = _weakref.WeakKeyDictionary()
-
-
 def _load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    # the lazy scan is reused per session: spark.read.parquet re-reads
+    # the footer schema on every call (~0.1 s per query build). The
+    # fixture tables under sf_dir do not change during a gate or bench
+    # run; paths that get rewritten (pipeline stage dirs) do not come
+    # through here.
+    from hex2vec_spark.plans.session import session_cached
+
     path = f"{sf_dir}/{name}.parquet"
-    per = _LOAD_MEMO.setdefault(spark, {})
-    df = per.get(path)
-    if df is None:
-        df = per[path] = spark.read.parquet(path)
-    return df
+    return session_cached(spark, ("load", path), lambda: spark.read.parquet(path))
 
 
 def _docs_parallel(spark: SparkSession, sf_dir: str, limit: int | None = None) -> DataFrame:

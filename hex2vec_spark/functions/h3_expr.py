@@ -60,6 +60,9 @@ _SQRT3 = float(np.sqrt(3.0))
 
 # ------------------------------------------------------------- validation
 
+# (bbox, res) -> jvm_encode_support's result: a pure function of its
+# arguments that holds no Spark object, so it is per process, not per
+# session (plans.session.session_cached)
 _SUPPORT_MEMO: dict[tuple, tuple[int, dict[int, int]]] = {}
 
 

@@ -27,12 +27,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from ..hexlib import geom, h3core
 from ..functions.h3_fns import DEFAULT_BBOX, DEFAULT_RES, h3_from_phash_res
-
-# driver-side memo: the tiling is a pure function of (regions, res,
-# buffer_k) and costs ~1s/res8, ~8s/res9 to polyfill — build once per
-# process (the reference caches the same artifact as GeoJSON,
-# make_dataset.py:84-93)
-_TILING_MEMO: dict[tuple, pd.DataFrame] = {}
+from ..plans.session import session_cached
 
 
 def _row_holes(row) -> list[tuple[np.ndarray, np.ndarray]]:
@@ -101,25 +96,6 @@ def build_tiling(regions_pdf: pd.DataFrame, res: int = DEFAULT_RES, buffer_k: in
     return tiling.drop_duplicates(["region_id", "h3"]).reset_index(drop=True)
 
 
-def build_tiling_cached(
-    regions_pdf: pd.DataFrame, res: int = DEFAULT_RES, buffer_k: int = 2
-) -> pd.DataFrame:
-    """Memoized ``build_tiling`` keyed by (region ids + ring bytes, res,
-    buffer_k)."""
-    key_parts = [res, buffer_k]
-    for _, row in regions_pdf.iterrows():
-        holes = tuple(
-            (tuple(a.tolist()), tuple(b.tolist())) for a, b in _row_holes(row)
-        )
-        key_parts.append(
-            (row["region_id"], tuple(row["ring_lat"]), tuple(row["ring_lng"]), holes)
-        )
-    key = tuple(key_parts)
-    if key not in _TILING_MEMO:
-        _TILING_MEMO[key] = build_tiling(regions_pdf, res=res, buffer_k=buffer_k)
-    return _TILING_MEMO[key]
-
-
 def write_tiling_parquet(pdf: pd.DataFrame, path: str) -> None:
     """Write the tiling dimension as parquet directly via pyarrow —
     ``spark.createDataFrame`` embeds a local relation in the plan and the
@@ -165,7 +141,12 @@ def tiling_table(
     content-addressed by (res, regions hash) — a marker file alone would
     let a changed res or polygon set reuse a stale tiling. Scanning
     parquet keeps every broadcast build JVM-only and stable; at cluster
-    scale the tiling would live as a table anyway."""
+    scale the tiling would live as a table anyway.
+
+    The polyfill (~1 s at res 8, ~8 s at res 9) runs once per session
+    and content key (plans.session.session_cached): writing the same
+    regions into another path reuses it, as the reference reuses its
+    GeoJSON tiling cache (make_dataset.py:84-93)."""
     from ..sources.synth import regions_pandas
 
     if regions_pdf is None:
@@ -175,56 +156,11 @@ def tiling_table(
             base_dir, f"hextiling_res{res}_{regions_content_key(regions_pdf)}"
         )
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        write_tiling_parquet(build_tiling_cached(regions_pdf, res=res), path)
+        key = ("tiling", res, regions_content_key(regions_pdf))
+        write_tiling_parquet(
+            session_cached(spark, key, lambda: build_tiling(regions_pdf, res=res)), path
+        )
     return spark.read.parquet(path)
-
-
-# Encode-plan memo: {session (weak) -> OrderedDict{subkey -> DataFrame}}.
-# Round-4 advisor fix: the old flat module dict keyed tuples BY session,
-# so entries (and the lazily localCheckpoint'ed blocks the hybrid path
-# pins on executors) outlived the session and grew without bound across
-# stage-dir rewrites. Weak keying drops a session's entries when the
-# session object goes away, an explicit liveness check drops them when
-# it is .stop()ed but still referenced, and an LRU cap bounds the
-# per-session entry count (each miss re-derives a lazy plan — cheap).
-import collections
-import weakref
-
-_ENCODE_MEMO: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
-_ENCODE_MEMO_CAP = 32
-
-
-def _session_live(session) -> bool:
-    try:
-        return session.sparkContext._jsc is not None
-    except Exception:
-        return False
-
-
-def _memo_get(session, subkey):
-    if not _session_live(session):
-        _ENCODE_MEMO.pop(session, None)
-        return None
-    per = _ENCODE_MEMO.get(session)
-    if per is None:
-        return None
-    hit = per.get(subkey)
-    if hit is not None:
-        per.move_to_end(subkey)
-    return hit
-
-
-def _memo_put(session, subkey, df) -> None:
-    # opportunistically drop stopped-but-referenced sessions
-    for s in [s for s in list(_ENCODE_MEMO) if not _session_live(s)]:
-        _ENCODE_MEMO.pop(s, None)
-    if not _session_live(session):
-        return
-    per = _ENCODE_MEMO.setdefault(session, collections.OrderedDict())
-    per[subkey] = df
-    per.move_to_end(subkey)
-    while len(per) > _ENCODE_MEMO_CAP:
-        per.popitem(last=False)
 
 
 def assign_h3(
@@ -258,12 +194,14 @@ def assign_h3(
     ``jvm``: "auto" (fast path when exact), "off" (always Arrow),
     "force" (raise if the fast path isn't exact for this bbox/res).
 
-    The JVM-path result is memoized per (session, source-plan semantic
-    hash, res, bbox): several queries over the same scan (the bench's
-    hex_features + context_pairs, any multi-query pipeline) pay the
-    chain's plan construction once. DataFrames are immutable, so
-    reusing the object is safe; the memo never caches DATA, only the
-    lazy plan.
+    Unless ``jvm="off"``, the result is cached per session
+    (plans.session.session_cached) under the source plan's semantic
+    hash, the hash of its input file names, ``res`` and ``bbox``:
+    several queries over the same scan (the bench's hex_features +
+    context_pairs, any multi-query pipeline) pay the chain's plan
+    construction once. Part-file names are unique per write, so a
+    rewritten source directory gets a new plan over its new files.
+    Only the lazy plan is cached, never data.
     """
     if jvm != "off":
         from ..functions import h3_expr
@@ -272,77 +210,75 @@ def assign_h3(
         if not supported and jvm == "force":
             raise ValueError(f"JVM encode not exact for bbox={bbox} res={res}")
         try:
-            # key includes the SOURCE FILE SNAPSHOT: part-file names
-            # are unique per write, so rewriting the same path (the
-            # pipeline's stage dirs) misses the memo instead of
-            # serving a stale file index (observed FAILED_READ_FILE
-            # when keyed on semantic hash alone)
-            sess = images.sparkSession
+            # the input file names are in the key: keyed on the semantic
+            # hash alone, a rewritten stage dir (same path, new part
+            # files) got the old plan and its stale file index
+            # (observed FAILED_READ_FILE)
             key = (
+                "encode",
                 images._jdf.queryExecution().analyzed().semanticHash(),
                 hash(tuple(sorted(images.inputFiles()))),
                 res, bbox,
             )
-            hit = _memo_get(sess, key)
-            if hit is not None:
-                return hit
-        except Exception:  # non-classic DataFrame: skip the memo
-            sess = key = None
-        if supported:
-            enc = h3_expr.attach_h3_from_phash_jvm(images, res, bbox, out="h3")
-        elif not images.isStreaming:
-            # GLOBAL HYBRID (round 3): the bbox spans faces/seams, so
-            # the single-face chain is out — but ~81% of an
-            # area-uniform global sample still satisfies the kernel's
-            # fast-path condition per row (unambiguous nearest face +
-            # home-homed anchor slot, attach_h3_jvm_global docstring),
-            # and a second JVM pass over the residue replicates the
-            # kernel's FOREIGN branch (home-face re-chain + consistency
-            # check, attach_h3_jvm_home) — only ~2.8% of global rows
-            # (the kernel's own seam-scan band) reach Python. Both
-            # passes are BIT-IDENTICAL to the kernel on every row they
-            # claim.
-            #
-            # COST SHAPE: each pass is lazily localCheckpoint'ed so the
-            # three output branches read MATERIALIZED rows instead of
-            # re-running the chains per branch (measured at 6M rows:
-            # naive 3-branch recompute 19.96 s; checkpointed 2.26 s;
-            # the pure-Arrow kernel 1.75 s). Locally the vectorized
-            # NumPy kernel is ~1.3x faster in wall-clock — the hybrid
-            # is the default anyway because it removes the Python
-            # worker beside every task thread on 97% of rows, which is
-            # exactly what capped multi-executor scaling efficiency
-            # (round-1 flagship: 0.44 raw with Arrow encode). Wall-
-            # clock-first local runs can pass jvm="off". Checkpoint
-            # blocks persist for the session (the memo reuses them).
-            g = h3_expr.attach_h3_from_phash_jvm_global(
-                images, res, bbox, out="h3"
-            ).localCheckpoint(eager=False)
-            good = g.where(F.col("h3").isNotNull())
-            resid = g.where(F.col("h3").isNull()).drop("h3")
-            lat_sql, lng_sql = h3_expr._phash_latlng_sql(bbox)
-            h = h3_expr.attach_h3_jvm_home(
-                resid, res, lat=lat_sql, lng=lng_sql, out="h3"
-            ).localCheckpoint(eager=False)
-            good2 = h.where(F.col("h3").isNotNull())
-            bad = h.where(F.col("h3").isNull()).drop("h3").withColumn(
-                "h3",
-                F.coalesce(h3_from_phash_res(res, bbox)(F.col("phash")), F.lit(-1)),
-            )
-            enc = good.unionByName(good2).unionByName(bad)
-        else:
-            # streaming + unsupported bbox: localCheckpoint is not
-            # available on streams — Arrow kernel end-to-end
-            enc = images.withColumn(
-                "h3",
-                F.coalesce(h3_from_phash_res(res, bbox)(F.col("phash")), F.lit(-1)),
-            )
-        if key is not None:
-            _memo_put(sess, key, enc)
-        return enc
-    return images.withColumn(
+        except Exception:  # non-classic DataFrame: nothing to key on
+            return _encode(images, res, bbox, supported)
+        return session_cached(
+            images.sparkSession, key, lambda: _encode(images, res, bbox, supported)
+        )
+    return _arrow_h3(images, res, bbox)
+
+
+def _arrow_h3(df: DataFrame, res: int, bbox) -> DataFrame:
+    return df.withColumn(
         "h3", F.coalesce(h3_from_phash_res(res, bbox)(F.col("phash")), F.lit(-1))
     )
+
+
+def _encode(images: DataFrame, res: int, bbox, supported: bool) -> DataFrame:
+    """assign_h3's plan unless ``jvm="off"``: the JVM chain when
+    ``supported``, else the global hybrid (on a stream, the Arrow
+    kernel)."""
+    from ..functions import h3_expr
+
+    if supported:
+        return h3_expr.attach_h3_from_phash_jvm(images, res, bbox, out="h3")
+    if images.isStreaming:
+        # localCheckpoint is not available on streams — Arrow kernel
+        # end-to-end
+        return _arrow_h3(images, res, bbox)
+    # GLOBAL HYBRID (round 3): the bbox spans faces/seams, so the
+    # single-face chain is out — but ~81% of an area-uniform global
+    # sample still satisfies the kernel's fast-path condition per row
+    # (unambiguous nearest face + home-homed anchor slot,
+    # attach_h3_jvm_global docstring), and a second JVM pass over the
+    # residue replicates the kernel's FOREIGN branch (home-face re-chain
+    # + consistency check, attach_h3_jvm_home) — only ~2.8% of global
+    # rows (the kernel's own seam-scan band) reach Python. Both passes
+    # are BIT-IDENTICAL to the kernel on every row they claim.
+    #
+    # COST SHAPE: each pass is lazily localCheckpoint'ed so the three
+    # output branches read MATERIALIZED rows instead of re-running the
+    # chains per branch (measured at 6M rows: naive 3-branch recompute
+    # 19.96 s; checkpointed 2.26 s; the pure-Arrow kernel 1.75 s).
+    # Locally the vectorized NumPy kernel is ~1.3x faster in wall-clock
+    # — the hybrid is the default anyway because it removes the Python
+    # worker beside every task thread on 97% of rows, which is exactly
+    # what capped multi-executor scaling efficiency (round-1 flagship:
+    # 0.44 raw with Arrow encode). Wall-clock-first local runs can pass
+    # jvm="off". Checkpoint blocks persist for the session (the session
+    # cache reuses them).
+    g = h3_expr.attach_h3_from_phash_jvm_global(
+        images, res, bbox, out="h3"
+    ).localCheckpoint(eager=False)
+    good = g.where(F.col("h3").isNotNull())
+    resid = g.where(F.col("h3").isNull()).drop("h3")
+    lat_sql, lng_sql = h3_expr._phash_latlng_sql(bbox)
+    h = h3_expr.attach_h3_jvm_home(
+        resid, res, lat=lat_sql, lng=lng_sql, out="h3"
+    ).localCheckpoint(eager=False)
+    good2 = h.where(F.col("h3").isNotNull())
+    bad = _arrow_h3(h.where(F.col("h3").isNull()).drop("h3"), res, bbox)
+    return good.unionByName(good2).unionByName(bad)
 
 
 def spatial_join(

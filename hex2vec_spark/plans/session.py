@@ -9,6 +9,9 @@ overridable for cluster runs via spark-submit --conf.
 from __future__ import annotations
 
 import os
+from collections import OrderedDict
+from collections.abc import Callable
+from typing import Any
 
 from pyspark.sql import SparkSession
 
@@ -18,6 +21,41 @@ from pyspark.sql import SparkSession
 PACKAGE_ROOT = os.path.dirname(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 )
+
+
+# the most entries one session's plan cache keeps (least recently used
+# go first)
+PLAN_CACHE_CAP = 64
+_PLAN_CACHE_ATTR = "_hex2vec_plan_cache"
+
+
+def session_cached(spark: SparkSession, key: tuple, build: Callable[[], Any]) -> Any:
+    """``build()``, memoized per session under ``key`` (tag the key with
+    its kind, e.g. ``("load", path)``).
+
+    The cache is an LRU dict of at most PLAN_CACHE_CAP entries stored as
+    an attribute of the session object, so nothing module-level refers to
+    the session: a cached DataFrame points back at its session, and the
+    garbage collector frees the session, its cache and its plans together.
+    A stopped session (``sparkContext._jsc is None``) drops its cache on
+    the next lookup and caches nothing. Values are lazy plans or small
+    driver-side frames, never query results; DataFrames are immutable, so
+    handing out the same object twice is safe."""
+    try:
+        live = spark.sparkContext._jsc is not None
+    except Exception:  # non-classic session: no SparkContext to check
+        live = False
+    if not live:
+        vars(spark).pop(_PLAN_CACHE_ATTR, None)
+        return build()
+    cache = vars(spark).setdefault(_PLAN_CACHE_ATTR, OrderedDict())
+    if key in cache:
+        cache.move_to_end(key)
+        return cache[key]
+    value = cache[key] = build()
+    while len(cache) > PLAN_CACHE_CAP:
+        cache.popitem(last=False)
+    return value
 
 
 def profile_conf(
@@ -72,6 +110,15 @@ def session_conf(
     return conf
 
 
+def default_driver_mem() -> str:
+    """The driver heap when SPARK_GRAFT_MEM is unset: 40 % of the host's
+    physical memory, 1-48 GB. A fixed large heap lets a local-mode JVM
+    defer collection until its RSS outgrows a small host's RAM, and the
+    OOM killer then ends the session mid-run."""
+    total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, min(48, int(total * 0.4) >> 30))}g"
+
+
 def get_spark(
     app_name: str = "hex2vec-spark",
     master: str | None = None,
@@ -81,7 +128,7 @@ def get_spark(
 ) -> SparkSession:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     master = master or f"local[{cpus}]"
-    mem = os.environ.get("SPARK_GRAFT_MEM", "48g")
+    mem = os.environ.get("SPARK_GRAFT_MEM") or default_driver_mem()
     b = (
         SparkSession.builder.appName(app_name)
         .master(master)

@@ -214,35 +214,25 @@ def images_cache_path(n: int, base_dir: str = "/tmp") -> str:
     return os.path.join(base_dir, f"hexscale_cache_{n}{suffix}")
 
 
-# round 6: per-(session, path) memo of the LAZY scan plan —
-# spark.read.parquet re-infers the footer schema per call (~0.07 s, paid
-# by every entry-query build); the cache dir is immutable once written
-# (generator-versioned path), so the reused file listing cannot go
-# stale. Plan object only — no data is cached. The dict is weak-keyed,
-# but each cached DataFrame holds its session, so entries are never
-# dropped; ROADMAP direction 5 replaces this memo and __spark_entry__'s
-# _LOAD_MEMO with one session plan cache that clears on stop.
-import weakref as _weakref
-
-_IMG_SCAN_MEMO: "_weakref.WeakKeyDictionary" = _weakref.WeakKeyDictionary()
-
-
 def images_table_cached(spark, n: int, base_dir: str = "/tmp"):
     """Parquet-backed images table at the versioned cache path. A
     mapInPandas source regenerates — including the PNG deflate — on
     every action and blocks column pruning; a parquet scan is generated
-    once and prunes."""
+    once and prunes. The lazy scan is reused per session
+    (plans.session.session_cached): the cache dir never changes once
+    written, and re-reading its footer costs ~0.07 s per query build."""
     import os
 
+    from ..plans.session import session_cached
+
     path = images_cache_path(n, base_dir)
-    per = _IMG_SCAN_MEMO.setdefault(spark, {})
-    df = per.get(path)
-    if df is not None:
-        return df
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        images_table(spark, n).write.mode("overwrite").parquet(path)
-    df = per[path] = spark.read.parquet(path)
-    return df
+
+    def scan():
+        if not os.path.exists(os.path.join(path, "_SUCCESS")):
+            images_table(spark, n).write.mode("overwrite").parquet(path)
+        return spark.read.parquet(path)
+
+    return session_cached(spark, ("images", path), scan)
 
 
 # --------------------------------------------------------- polygon objects

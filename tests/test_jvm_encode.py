@@ -340,47 +340,3 @@ class TestRound4AdvisorFixes:
             "FROM (SELECT ARRAY(0.9D, 0.9D, 0.1D) AS d, 0.9D AS mx)"
         ).collect()[0]
         assert row["safe"] is False
-
-
-class TestEncodeMemoHygiene:
-    # round-4 advisor fix: the encode-plan memo must not pin entries for
-    # the process lifetime — weak keying, stopped-session eviction, LRU cap
-    class _SC:
-        def __init__(self):
-            self._jsc = object()
-
-    class _Sess:
-        def __init__(self):
-            self.sparkContext = TestEncodeMemoHygiene._SC()
-
-    def test_cap_lru_and_stopped_session_eviction(self):
-        from hex2vec_spark.operators import spatial as sp
-
-        s = self._Sess()
-        cap = sp._ENCODE_MEMO_CAP
-        for i in range(cap + 5):
-            sp._memo_put(s, ("k", i), f"plan{i}")
-        assert len(sp._ENCODE_MEMO[s]) == cap
-        assert sp._memo_get(s, ("k", 0)) is None           # LRU-evicted
-        assert sp._memo_get(s, ("k", cap + 4)) == f"plan{cap + 4}"
-        # LRU refresh: touching an old key keeps it through new puts
-        assert sp._memo_get(s, ("k", 5)) == "plan5"
-        sp._memo_put(s, ("k", cap + 5), "plannew")
-        assert sp._memo_get(s, ("k", 5)) == "plan5"
-        # stopped session: entries dropped on next access
-        s.sparkContext._jsc = None
-        assert sp._memo_get(s, ("k", cap + 4)) is None
-        assert s not in sp._ENCODE_MEMO
-
-    def test_weak_keying_releases_dead_sessions(self):
-        import gc
-
-        from hex2vec_spark.operators import spatial as sp
-
-        s = self._Sess()
-        sp._memo_put(s, "k", "plan")
-        assert sp._memo_get(s, "k") == "plan"
-        ref = __import__("weakref").ref(s)
-        del s
-        gc.collect()
-        assert ref() is None  # the memo held no strong reference
