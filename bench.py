@@ -27,6 +27,18 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+DEFAULT_SF_DIR = "/root/testdata/sf0.1"
+
+# the headline registry queries timed after the flagship (round 5 added
+# the last two)
+HEADLINE = [
+    "q1_pricing_summary", "explode_trim", "group_pivot", "salted_agg",
+    "topk", "per_group_topk", "self_join", "knn_bruteforce",
+    "dedup_exact", "hex_features", "context_pairs", "tile_hex_bins",
+    "polygon_assign", "distance_pairs", "knn_join_pairs", "path_length",
+    "distance_pairs_broadcast", "pip_join_holes",
+]
+
 
 def build_flagship_input(spark, n_images: int, path: str) -> None:
     from hex2vec_spark.sources.synth import images_table
@@ -38,7 +50,7 @@ def cached_flagship_input(spark, n_images: int) -> tuple[str, float]:
     """Deterministic input, cached at the generator-versioned path from
     sources/synth (one path function for all consumers — an unversioned
     copy here would silently serve stale rows after a generator change).
-    Shared with BENCH/scaling.py."""
+    Shared with tools/profile.py's flagship input set."""
     from hex2vec_spark.sources.synth import images_cache_path
 
     path = images_cache_path(n_images)
@@ -58,27 +70,26 @@ def materialize_tiling(spark, res: int) -> tuple["object", float]:
     return sdf, time.time() - t0
 
 
-def run_flagship(spark, input_path: str, tiling_sdf, res: int, mult: int = 1) -> int:
-    """The timed job: scan -> h3 encode (whole-stage-codegen JVM
-    expressions, functions/h3_expr — no Python workers) -> broadcast
-    tiling join -> caption explode -> salted group-by -> noop sink.
-    ``mult`` unions the input onto itself (scaling runs amortize fixed
-    per-job costs over more rows without regenerating data)."""
-    from functools import reduce
-
+def flagship_plan(spark, input_path: str, tiling_sdf, res: int):
+    """The flagship's lazy plan: scan -> h3 encode (whole-stage-codegen
+    JVM expressions, functions/h3_expr — no Python workers) -> broadcast
+    tiling join -> caption explode -> salted group-by."""
     from hex2vec_spark.operators.agg import explode_caption_tags, salted_count
     from hex2vec_spark.operators.spatial import spatial_join
 
+    joined = spatial_join(spark.read.parquet(input_path), tiling_sdf, res=res)
+    return salted_count(explode_caption_tags(joined), ["region_id", "h3", "feature"])
+
+
+def run_flagship(spark, input_path: str, tiling_sdf, res: int) -> int:
+    """The timed job: flagship_plan into the noop sink."""
     # large Arrow batches kept for the (rare) Arrow-kernel fallback path;
     # harmless for the JVM path. Runtime SQL conf, scoped to this job.
     key = "spark.sql.execution.arrow.maxRecordsPerBatch"
     prev = spark.conf.get(key)
     spark.conf.set(key, "100000")
     try:
-        base = spark.read.parquet(input_path)
-        images = reduce(lambda a, b: a.unionByName(b), [base] * mult) if mult > 1 else base
-        joined = spatial_join(images, tiling_sdf, res=res)
-        feats = salted_count(explode_caption_tags(joined), ["region_id", "h3", "feature"])
+        feats = flagship_plan(spark, input_path, tiling_sdf, res)
         feats.write.format("noop").mode("overwrite").save()
     finally:
         spark.conf.set(key, prev)
@@ -86,7 +97,7 @@ def run_flagship(spark, input_path: str, tiling_sdf, res: int, mult: int = 1) ->
 
 
 def main() -> int:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", DEFAULT_SF_DIR)
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     n_images = int(os.environ.get("BENCH_N_IMAGES", "6000000"))
     res = int(os.environ.get("BENCH_RES", "9"))
@@ -134,13 +145,6 @@ def main() -> int:
 
         # headline per-query timings over the driver tables at sf_dir
         qs = entrymod.queries()
-        headline = [
-            "q1_pricing_summary", "explode_trim", "group_pivot", "salted_agg",
-            "topk", "per_group_topk", "self_join", "knn_bruteforce",
-            "dedup_exact", "hex_features", "context_pairs", "tile_hex_bins",
-            "polygon_assign", "distance_pairs", "knn_join_pairs", "path_length",
-            "distance_pairs_broadcast", "pip_join_holes",  # round 5
-        ]
         # two passes per query: report the min as the headline number
         # (comparable across rounds) and keep both so the spread is
         # visible. noop writes re-execute (no Spark 4.1 result-cache
@@ -148,7 +152,7 @@ def main() -> int:
         # where the operator has no memo — also informative.
         qtimes: dict[str, float] = {}
         qtimes_all: dict[str, list[float]] = {}
-        for name in headline:
+        for name in HEADLINE:
             runs = []
             for _ in range(2):
                 t0 = time.time()

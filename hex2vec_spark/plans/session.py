@@ -9,7 +9,7 @@ overridable for cluster runs via spark-submit --conf.
 from __future__ import annotations
 
 import os
-from collections import OrderedDict
+from collections import Counter, OrderedDict
 from collections.abc import Callable
 from typing import Any
 
@@ -29,6 +29,15 @@ PLAN_CACHE_CAP = 64
 _PLAN_CACHE_ATTR = "_hex2vec_plan_cache"
 
 
+class _PlanCache(OrderedDict):
+    """One session's LRU, plus its lookups counted per key tag
+    (``"load.hit"``, ``"encode.miss"``, ...)."""
+
+    def __init__(self):
+        super().__init__()
+        self.counts: Counter = Counter()
+
+
 def session_cached(spark: SparkSession, key: tuple, build: Callable[[], Any]) -> Any:
     """``build()``, memoized per session under ``key`` (tag the key with
     its kind, e.g. ``("load", path)``).
@@ -40,7 +49,8 @@ def session_cached(spark: SparkSession, key: tuple, build: Callable[[], Any]) ->
     A stopped session (``sparkContext._jsc is None``) drops its cache on
     the next lookup and caches nothing. Values are lazy plans or small
     driver-side frames, never query results; DataFrames are immutable, so
-    handing out the same object twice is safe."""
+    handing out the same object twice is safe. Each lookup counts a hit
+    or a miss under the key's tag (see plan_cache_counts)."""
     try:
         live = spark.sparkContext._jsc is not None
     except Exception:  # non-classic session: no SparkContext to check
@@ -48,14 +58,24 @@ def session_cached(spark: SparkSession, key: tuple, build: Callable[[], Any]) ->
     if not live:
         vars(spark).pop(_PLAN_CACHE_ATTR, None)
         return build()
-    cache = vars(spark).setdefault(_PLAN_CACHE_ATTR, OrderedDict())
+    cache = vars(spark).setdefault(_PLAN_CACHE_ATTR, _PlanCache())
+    tag = key[0] if isinstance(key, tuple) else key
     if key in cache:
+        cache.counts[f"{tag}.hit"] += 1
         cache.move_to_end(key)
         return cache[key]
+    cache.counts[f"{tag}.miss"] += 1
     value = cache[key] = build()
     while len(cache) > PLAN_CACHE_CAP:
         cache.popitem(last=False)
     return value
+
+
+def plan_cache_counts(spark: SparkSession) -> Counter:
+    """A copy of the session's plan-cache hits and misses per key tag
+    since its cache was made (empty before the first lookup)."""
+    cache = vars(spark).get(_PLAN_CACHE_ATTR)
+    return Counter(cache.counts) if cache is not None else Counter()
 
 
 def profile_conf(

@@ -176,6 +176,20 @@ class TestBenchmarkReuse:
         assert assign_h3(spark.read.parquet(path), 8) is assign_h3(scan, 8)
         assert assign_h3(scan, 9) is not assign_h3(scan, 8)
 
+    def test_encode_lookups_counted(self, spark, tmp_path):
+        from hex2vec_spark.operators.spatial import assign_h3
+
+        path = str(tmp_path / "imgs")
+        _write_phash(spark, path, np.arange(10, dtype=np.int64) * 7919)
+        scan = spark.read.parquet(path)
+        before = session.plan_cache_counts(spark)
+        first = assign_h3(scan, 8)
+        mid = session.plan_cache_counts(spark)
+        assert assign_h3(scan, 8) is first
+        after = session.plan_cache_counts(spark)
+        assert mid - before == {"encode.miss": 1}
+        assert after - mid == {"encode.hit": 1}
+
     def test_rewritten_directory_gets_a_new_plan(self, spark, tmp_path):
         from hex2vec_spark.functions.h3_fns import h3_from_phash_np
         from hex2vec_spark.operators.spatial import assign_h3

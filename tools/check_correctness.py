@@ -1,8 +1,12 @@
 """Local replica of the driver's correctness gate: run every queries()
-entry on Spark at sf0.01 and compare against oracle_sql() via DuckDB
-(row count + schema width + order-insensitive value hash).
+entry on Spark and compare against oracle_sql() via DuckDB (row count +
+schema width + order-insensitive value hash).
 
 Usage: python tools/check_correctness.py [--json OUT.json] [query ...]
+
+The tables come from $SPARK_GRAFT_SF_DIR (default sf0.01), and Spark
+runs on local[$SPARK_GRAFT_CPUS] (default 8), as in bench.py:
+  SPARK_GRAFT_SF_DIR=<testdata>/sf0.001 python tools/check_correctness.py
 
 --json writes a driver-format record per query (rows/schema/hash
 match + row counts + err; rows-only queries get mode="rows_only"), so
@@ -22,7 +26,7 @@ import pandas as pd
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-SF_DIR = "/root/testdata/sf0.01"
+SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
 TABLES = [
     "region", "nation", "customer", "supplier", "part", "orders",
     "lineitem", "events", "documents", "embeddings",
@@ -50,7 +54,9 @@ def main(only: list[str]) -> int:
     import __spark_entry__ as entrymod
     from hex2vec_spark.plans.session import get_spark
 
-    spark = get_spark("correctness", master="local[8]")
+    spark = get_spark(
+        "correctness", master=f"local[{os.environ.get('SPARK_GRAFT_CPUS', '8')}]"
+    )
     con = duckdb.connect()
     for t in TABLES:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')")
