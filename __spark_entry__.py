@@ -2101,10 +2101,10 @@ def _q_dedup_components(spark, sf_dir):
 
 
 def _q_global_hybrid_assign(spark, sf_dir):
-    # round 3: GLOBAL (seam-spanning) encode via the per-row-face JVM
-    # chain + Arrow residue (operators/spatial.assign_h3 hybrid path);
-    # rows-only (H3 not SQL-expressible) — kernel bit-identity and the
-    # >70% JVM fraction are pinned in tests/test_jvm_encode.py. Output:
+    # GLOBAL (seam-spanning) encode: the bbox is not face-interior, so
+    # operators/spatial.assign_h3 runs the Arrow NumPy kernel; rows-only
+    # here (H3 not SQL-expressible) — tests/test_ops.py checks
+    # the per-base-cell counts against h3_from_phash_np. Output:
     # per-base-cell counts over a deterministic global sample.
     from hex2vec_spark.operators.spatial import assign_h3
 

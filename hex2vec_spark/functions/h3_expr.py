@@ -1,10 +1,11 @@
 """JVM-side (whole-stage-codegen) H3 encode for face-interior regions.
 
-The general encode path is an Arrow pandas UDF over the NumPy kernel
-(functions/h3_fns.py) — needed for icosahedron seam handling on global
-data. But for a FACE-INTERIOR bbox (the engine's active region, and the
-natural shape of a per-city job like the reference's,
-make_dataset.py:96-99) the kernel reduces to
+The general encode is an Arrow pandas UDF over the NumPy kernel
+(functions/h3_fns.py), which handles the icosahedron seams; every bbox
+that spans a face seam runs it (operators/spatial.assign_h3). But for a
+FACE-INTERIOR bbox (the engine's active region, and the natural shape
+of a per-city job like the reference's, make_dataset.py:96-99) the
+kernel reduces to
 
     gnomonic projection onto ONE face -> hex rounding -> aperture-7
     digit chain -> bit packing
@@ -27,7 +28,7 @@ OOM in round 1). Per-level alias ranks keep the plan linear in res;
 Catalyst's CollapseProject keeps multi-referenced non-cheap aliases as
 separate projects, so no re-explosion happens at optimization time.
 Two sizing constraints, both learned the hard way, are encoded in
-``attach_h3_jvm``: the analyzer's fixed-point iteration cap (one
+``_emit_h3_chain``: the analyzer's fixed-point iteration cap (one
 lateral rank resolved per pass) and the fused-stage JIT bytecode
 budget (see the OPERATOR-COUNT BUDGET comment).
 
@@ -65,13 +66,17 @@ _SQRT3 = float(np.sqrt(3.0))
 # session (plans.session.session_cached)
 _SUPPORT_MEMO: dict[tuple, tuple[int, dict[int, int]]] = {}
 
+# side of the validation grid jvm_encode_support samples the bbox on
+_N_GRID = 400
 
-def jvm_encode_support(bbox: tuple[float, float, float, float], res: int,
-                       n_grid: int = 400) -> tuple[int, dict[int, int]]:
+
+def jvm_encode_support(
+    bbox: tuple[float, float, float, float], res: int
+) -> tuple[int, dict[int, int]]:
     """Validate that every point of ``bbox`` takes encode()'s face-interior
     fast path on a single face, i.e. the JVM expression is exact there.
 
-    Checks on a dense (n_grid x n_grid) grid:
+    Checks on a dense (_N_GRID x _N_GRID) grid:
       * one nearest face for the whole bbox (float32 argmax, matching
         h3core.encode);
       * every chain lands in the res-0 anchor window with a known base
@@ -87,7 +92,7 @@ def jvm_encode_support(bbox: tuple[float, float, float, float], res: int,
         return _SUPPORT_MEMO[key]
     lat0, lat1, lng0, lng1 = bbox
     glat, glng = np.meshgrid(
-        np.linspace(lat0, lat1, n_grid), np.linspace(lng0, lng1, n_grid), indexing="ij"
+        np.linspace(lat0, lat1, _N_GRID), np.linspace(lng0, lng1, _N_GRID), indexing="ij"
     )
     lat, lng = glat.ravel(), glng.ravel()
     xyz = ic.geo_to_xyz(lat, lng)
@@ -172,16 +177,35 @@ def _dlit(v: float) -> str:
     return f"CAST('{v!r}' AS DOUBLE)"
 
 
-def _open_chain(
-    df: DataFrame, lat: Column | str | None, lng: Column | str | None, tag: str
-):
-    """Shared prologue of the three encode paths. Guards the reserved
-    temp prefix, projects Column ``lat``/``lng`` arguments to attributes
-    (one cheap extra select; None means the default columns, str args
-    are SQL fragments used verbatim), and emits rank 0: the unit-sphere
-    x/y/z (icosa.geo_to_xyz op order) as ATTRIBUTES, so no later rank
-    re-derives the trig. Returns (frame, base columns, alias list,
-    ``step``, (x, y, z))."""
+def attach_h3_jvm(
+    df: DataFrame,
+    res: int,
+    bbox: tuple[float, float, float, float],
+    lat: Column | str | None = None,
+    lng: Column | str | None = None,
+    out: str = "h3",
+) -> DataFrame:
+    """Append ``out`` = full H3 cell id (LongType) computed entirely
+    JVM-side from degree columns ``lat``/``lng``. ``bbox`` must pass
+    :func:`jvm_encode_support` (raises ValueError otherwise; callers fall
+    back to the Arrow kernel). Column ``lat``/``lng`` arguments are
+    projected to attributes first (one cheap extra select); None means
+    the default columns, str arguments are SQL fragments used verbatim.
+
+    Reference semantics: h3.geo_to_h3 (kraina-ai/hex2vec
+    src/data/make_dataset.py:96-99) — here as ~200 codegen'd scalar ops.
+
+    Emission strategy (round 3): the whole chain is ONE ``selectExpr``
+    whose intermediate steps are LATERAL COLUMN ALIASES. The analyzer's
+    lateral-alias rule rewrites them into the same nested-Project
+    structure the round-2 code built by hand with ~20 chained
+    ``select`` calls — every multiply-referenced step stays an
+    attribute, so no subtree duplication — but plan construction is one
+    py4j round-trip + one analysis pass instead of ~5,800 Column-op
+    round-trips + 21 eager analyses (measured 1.7-2.5 s per query,
+    BENCH_r02 hex_features/context_pairs regression; now ~0.2 s).
+    """
+    face, bc_map = jvm_encode_support(bbox, res)
     base_cols = list(df.columns)
     # temps are generated under the reserved __h3e_ prefix; guard the
     # whole prefix (round-2 review: a colliding input column would
@@ -208,91 +232,17 @@ def _open_chain(
         ex.append(f"({sql}) AS `{name}`")
         return f"`{name}`"
 
+    # rank 0: the unit-sphere x/y/z (icosa.geo_to_xyz op order) as
+    # ATTRIBUTES, so no later rank re-derives the trig
     d2r = float(np.pi / 180.0)  # np.radians(x) == x * (pi/180) (verified)
     latr = f"(({lat_sql}) * {_dlit(d2r)})"
     lngr = f"(({lng_sql}) * {_dlit(d2r)})"
     xyz = (
-        step(f"__h3e_{tag}X", f"COS({latr}) * COS({lngr})"),
-        step(f"__h3e_{tag}Y", f"COS({latr}) * SIN({lngr})"),
-        step(f"__h3e_{tag}Z", f"SIN({latr})"),
+        step("__h3e_X", f"COS({latr}) * COS({lngr})"),
+        step("__h3e_Y", f"COS({latr}) * SIN({lngr})"),
+        step("__h3e_Z", f"SIN({latr})"),
     )
-    return cur, base_cols, ex, step, xyz
-
-
-def _close_chain(
-    cur: DataFrame, base_cols: list[str], ex: list[str], fence: str, out: str
-) -> DataFrame:
-    """One ``selectExpr`` over every alias rank plus the fenced output,
-    then back to the input columns + ``out``."""
-    quoted_base = [f"`{c}`" for c in base_cols]
-    full = cur.selectExpr(*quoted_base, *ex, f"({fence}) AS `{out}`")
-    return full.select(*base_cols, out)
-
-
-def attach_h3_jvm(
-    df: DataFrame,
-    res: int,
-    bbox: tuple[float, float, float, float],
-    lat: Column | str | None = None,
-    lng: Column | str | None = None,
-    out: str = "h3",
-) -> DataFrame:
-    """Append ``out`` = full H3 cell id (LongType) computed entirely
-    JVM-side from degree columns ``lat``/``lng``. ``bbox`` must pass
-    :func:`jvm_encode_support` (raises ValueError otherwise; callers fall
-    back to the Arrow kernel).
-
-    Reference semantics: h3.geo_to_h3 (kraina-ai/hex2vec
-    src/data/make_dataset.py:96-99) — here as ~200 codegen'd scalar ops.
-
-    Emission strategy (round 3): the whole chain is ONE ``selectExpr``
-    whose intermediate steps are LATERAL COLUMN ALIASES. The analyzer's
-    lateral-alias rule rewrites them into the same nested-Project
-    structure the round-2 code built by hand with ~20 chained
-    ``select`` calls — every multiply-referenced step stays an
-    attribute, so no subtree duplication — but plan construction is one
-    py4j round-trip + one analysis pass instead of ~5,800 Column-op
-    round-trips + 21 eager analyses (measured 1.7-2.5 s per query,
-    BENCH_r02 hex_features/context_pairs regression; now ~0.2 s).
-    """
-    face, bc_map = jvm_encode_support(bbox, res)
-    cur, base_cols, ex, step, xyz = _open_chain(df, lat, lng, "")
-
-    # dense base-cell slot map with the RUNTIME GUARD (round-3 advisor
-    # fix): jvm_encode_support validates the bbox on a sampled grid, so
-    # a sub-grid-spacing sliver could in principle land in an
-    # UNVALIDATED slot at runtime; the old code packed
-    # shiftleft(-1, 45) garbage silently. Now: an in-window but
-    # unmapped slot (-1) raises via RAISE_ERROR, and an out-of-window
-    # anchor key raises via ANSI ELEMENT_AT bounds (with ANSI off,
-    # element_at yields NULL, `NULL >= 0` is not true, and the same
-    # RAISE_ERROR branch fires) — corrupt ids can never escape.
-    dense = [-1] * 25
-    for k, v in bc_map.items():
-        dense[k] = v
-    bc_arr = "ARRAY(" + ", ".join(f"CAST({v} AS BIGINT)" for v in dense) + ")"
-    err = ("h3 jvm encode: point maps to a res-0 anchor slot outside the "
-           "validated bbox support (sampled-grid gap) - widen the bbox or "
-           "use the Arrow kernel path")
-
-    def bc_of(ak: str) -> str:
-        # BOUND-CHECK before ELEMENT_AT (round-4 advisor fix): with ANSI
-        # off, element_at on a NEGATIVE index reads from the array END,
-        # so an anchor key in [-25,-2] would silently resolve to a slot
-        # on the opposite window edge; if that slot were mapped (>=0)
-        # the guard below would pass and a WRONG base cell escape. The
-        # explicit range gate routes every out-of-window key to -1 so
-        # the RAISE_ERROR branch fires, matching the guard's contract.
-        raw = (f"(CASE WHEN ({ak}) >= 0 AND ({ak}) <= 24 "
-               f"THEN ELEMENT_AT({bc_arr}, ({ak}) + 1) "
-               f"ELSE CAST(-1 AS BIGINT) END)")
-        return (f"CASE WHEN {raw} >= 0 THEN {raw} "
-                f"ELSE CAST(RAISE_ERROR('{err}') AS BIGINT) END")
-
-    cx, cy, cz = (_dlit(float(v)) for v in ic.FACE_CENTER[face])
-    t1x, t1y, t1z = (_dlit(float(v)) for v in ic.FACE_T1[face])
-    t2x, t2y, t2z = (_dlit(float(v)) for v in ic.FACE_T2[face])
-    hh = _emit_h3_chain(step, res, xyz, (cx, cy, cz, t1x, t1y, t1z, t2x, t2y, t2z), bc_of)
+    hh = _emit_h3_chain(step, res, xyz, face, bc_map)
     # PUSHDOWN FENCE on the OUTPUT alias: the spark_partition_id()
     # guard (always true; the kernel never yields null) makes this alias
     # NON-DETERMINISTIC, so PushPredicateThroughNonJoin cannot move any
@@ -314,27 +264,24 @@ def attach_h3_jvm(
     # key non-nullable, so joins don't even materialize an IsNotNull.
     fence = (f"COALESCE(CASE WHEN SPARK_PARTITION_ID() >= -1 THEN {hh} END, "
              f"CAST(-1 AS BIGINT))")
-    return _close_chain(cur, base_cols, ex, fence, out)
+    quoted_base = [f"`{c}`" for c in base_cols]
+    full = cur.selectExpr(*quoted_base, *ex, f"({fence}) AS `{out}`")
+    return full.select(*base_cols, out)
 
 
 def _emit_h3_chain(
     step,
     res: int,
     xyz: tuple[str, str, str],
-    consts: tuple[str, str, str, str, str, str, str, str, str],
-    bc_of,
-    pre: str = "",
+    face: int,
+    bc_map: dict[int, int],
 ) -> str:
     """Emit the encode arithmetic as lateral-alias SQL via ``step``;
     returns the reference to the packed (unfenced) cell-id alias.
 
-    ``xyz`` are the rank-0 unit-sphere coordinate attributes
-    (:func:`_open_chain`; the global paths share them with their face
-    argmax); ``consts`` are SQL fragments for the face frame (literals
-    on the bbox path, per-row ELEMENT_AT lookups on the global path);
-    ``bc_of`` maps the anchor-key fragment to the base-cell fragment
-    (raise-guard vs NULL-route); ``pre`` suffixes temp names so two
-    chains can coexist in one query (the home pass stacks two).
+    ``xyz`` are the rank-0 unit-sphere coordinate attributes;
+    ``face`` and ``bc_map`` are :func:`jvm_encode_support`'s validated
+    face and anchor-key -> base-cell map, emitted as literals.
     """
 
     def sub(sql: str) -> str:
@@ -344,7 +291,9 @@ def _emit_h3_chain(
         # count low — see the JIT note below)
         return f"({sql})"
 
-    cx, cy, cz, t1x, t1y, t1z, t2x, t2y, t2z = consts
+    cx, cy, cz = (_dlit(float(v)) for v in ic.FACE_CENTER[face])
+    t1x, t1y, t1z = (_dlit(float(v)) for v in ic.FACE_T1[face])
+    t2x, t2y, t2z = (_dlit(float(v)) for v in ic.FACE_T2[face])
     # OPERATOR-COUNT BUDGET: every lateral-alias rank below becomes one
     # Project operator in the SAME whole-stage-codegen stage as the
     # downstream join/explode/aggregate. Past ~25 operators the stage's
@@ -377,12 +326,12 @@ def _emit_h3_chain(
     s = float(hm.SQRT7 ** res)
     rot = hm.class_rotation(res)
     if rot == 0.0:
-        xr = step(f"__h3e_xr{pre}", f"{xh} * {_dlit(s)}")
-        yr = step(f"__h3e_yr{pre}", f"{yh} * {_dlit(s)}")
+        xr = step("__h3e_xr", f"{xh} * {_dlit(s)}")
+        yr = step("__h3e_yr", f"{yh} * {_dlit(s)}")
     else:
         c_, sn = float(np.cos(rot)), float(np.sin(rot))
-        xr = step(f"__h3e_xr{pre}", f"{_dlit(s)} * ({_dlit(c_)} * {xh} - {_dlit(sn)} * {yh})")
-        yr = step(f"__h3e_yr{pre}", f"{_dlit(s)} * ({_dlit(sn)} * {xh} + {_dlit(c_)} * {yh})")
+        xr = step("__h3e_xr", f"{_dlit(s)} * ({_dlit(c_)} * {xh} - {_dlit(sn)} * {yh})")
+        yr = step("__h3e_yr", f"{_dlit(s)} * ({_dlit(sn)} * {xh} + {_dlit(c_)} * {yh})")
 
     # hexmath.hex2d_to_axial + axial_round (same op order: q=fa-fb,
     # r=fb, y=-q-r, rint, tie-fix; RINT == Math.rint == np.rint,
@@ -392,8 +341,8 @@ def _emit_h3_chain(
     sq3 = _dlit(_SQRT3)
     fa = sub(f"{xr} + {yr} / {sq3}")
     fb = sub(f"({_dlit(2.0)} * {yr}) / {sq3}")
-    q = step(f"__h3e_fq{pre}", f"{fa} - {fb}")
-    rv = step(f"__h3e_fr{pre}", fb)
+    q = step("__h3e_fq", f"{fa} - {fb}")
+    rv = step("__h3e_fr", fb)
     yv = sub(f"(- {q}) - {rv}")
     rq = sub(f"RINT({q})")
     ry = sub(f"RINT({yv})")
@@ -405,8 +354,8 @@ def _emit_h3_chain(
     fixy = sub(f"(NOT {fixq}) AND ({dy} >= {dr})")
     rq2 = sub(f"CASE WHEN {fixq} THEN -({ry} + {rr}) ELSE {rq} END")
     rr2 = sub(f"CASE WHEN NOT ({fixq} OR {fixy}) THEN -({rq2} + {ry}) ELSE {rr} END")
-    a_cur = step(f"__h3e_a{res}{pre}", f"{rq2} + {rr2}")
-    b_cur = step(f"__h3e_b{res}{pre}", f"{rr2}")
+    a_cur = step(f"__h3e_a{res}", f"{rq2} + {rr2}")
+    b_cur = step(f"__h3e_b{res}", f"{rr2}")
 
     # hexmath.chain_up_digits_axial in COSET form (see block comment at
     # _coset_luts): digit from a linear residue mod 7, parent via EXACT
@@ -432,7 +381,7 @@ def _emit_h3_chain(
         # at TWO ranks per level (rs, then {d, a, b}) by inlining the
         # once-referenced ra/rb parent-lattice coordinates — at res 10
         # the original 4-rank version blew past the cap.
-        rs = step(f"__h3e_rs{r}{pre}", f"({resid}) + 1")
+        rs = step(f"__h3e_rs{r}", f"({resid}) + 1")
         ra = f"({a_cur} - ELEMENT_AT({da_of}, {rs}))"
         rb = f"({b_cur} - ELEMENT_AT({db_of}, {rs}))"
         if r % 2 == 1:
@@ -442,19 +391,41 @@ def _emit_h3_chain(
             pa = f"({_dlit(3.0)} * {ra} - {rb}) / {_dlit(7.0)}"
             pb = f"({ra} + {_dlit(2.0)} * {rb}) / {_dlit(7.0)}"
         dig_names.append(step(
-            f"__h3e_d{r}{pre}",
+            f"__h3e_d{r}",
             f"SHIFTLEFT(CAST(ELEMENT_AT({dig_of}, {rs}) AS BIGINT), {3 * (15 - r)})",
         ))
-        a_cur = step(f"__h3e_a{r - 1}{pre}", pa)
-        b_cur = step(f"__h3e_b{r - 1}{pre}", pb)
+        a_cur = step(f"__h3e_a{r - 1}", pa)
+        b_cur = step(f"__h3e_b{r - 1}", pb)
 
-    # base cell from the res-0 anchor key: dense-slot lookup, shape
-    # decided by the caller's bc_of (literal 25-slot array + raise
-    # guard on the validated-bbox path; 20x25 flat per-face array +
-    # NULL routing on the global path)
-    ak = step(f"__h3e_ak{pre}",
+    # base cell from the res-0 anchor key: dense 25-slot lookup with
+    # the RUNTIME GUARD (round-3 advisor fix). jvm_encode_support
+    # validates the bbox on a sampled grid, so a sub-grid-spacing sliver
+    # could in principle land in an UNVALIDATED slot at runtime; the old
+    # code packed shiftleft(-1, 45) garbage silently. Now an in-window
+    # but unmapped slot (-1) raises via RAISE_ERROR, and so does an
+    # out-of-window anchor key (the range gate below) — corrupt ids can
+    # never escape.
+    ak = step("__h3e_ak",
               f"CAST(({a_cur} + {_dlit(2.0)}) * {_dlit(5.0)} + {b_cur} + {_dlit(2.0)} AS INT)")
-    bc = step(f"__h3e_bc{pre}", bc_of(ak))
+    dense = [-1] * 25
+    for k, v in bc_map.items():
+        dense[k] = v
+    bc_arr = "ARRAY(" + ", ".join(f"CAST({v} AS BIGINT)" for v in dense) + ")"
+    err = ("h3 jvm encode: point maps to a res-0 anchor slot outside the "
+           "validated bbox support (sampled-grid gap) - widen the bbox or "
+           "use the Arrow kernel path")
+    # BOUND-CHECK before ELEMENT_AT (round-4 advisor fix): with ANSI off,
+    # element_at on a NEGATIVE index reads from the array END, so an
+    # anchor key in [-25,-2] would silently resolve to a slot on the
+    # opposite window edge; if that slot were mapped (>=0) the guard
+    # would pass and a WRONG base cell escape. The explicit range gate
+    # routes every out-of-window key to -1 so the RAISE_ERROR branch
+    # fires.
+    raw = (f"(CASE WHEN ({ak}) >= 0 AND ({ak}) <= 24 "
+           f"THEN ELEMENT_AT({bc_arr}, ({ak}) + 1) "
+           f"ELSE CAST(-1 AS BIGINT) END)")
+    bc = step("__h3e_bc", f"CASE WHEN {raw} >= 0 THEN {raw} "
+                          f"ELSE CAST(RAISE_ERROR('{err}') AS BIGINT) END")
 
     # h3core.pack: mode 1, res bits, 7-fill for unused digit slots
     n_fill = 15 - res
@@ -463,206 +434,7 @@ def _emit_h3_chain(
     h_sql = f"CAST({const} AS BIGINT) | SHIFTLEFT({bc}, 45)"
     for dn in dig_names:
         h_sql = f"{h_sql} | {dn}"
-    return step(f"__h3e_h{pre}", h_sql)
-
-
-def _f32(v: float) -> float:
-    return float(np.float32(v))
-
-
-def attach_h3_jvm_global(
-    df: DataFrame,
-    res: int,
-    lat: Column | str | None = None,
-    lng: Column | str | None = None,
-    out: str = "h3",
-    margin: float = 1e-5,
-) -> DataFrame:
-    """GLOBAL JVM encode: per-row face selection + the encode chain with
-    per-row face constants; ``out`` is NULLABLE — NULL marks rows the
-    JVM path cannot encode exactly (callers route those through the
-    Arrow kernel; operators/spatial.assign_h3 does).
-
-    A row is JVM-encoded iff BOTH hold, and is then BIT-IDENTICAL to
-    ``h3core.encode``:
-
-    * the float32 nearest-face argmax is UNAMBIGUOUS by ``margin``:
-      the SQL dot products are f64 sums over f32-rounded operands,
-      within ~4e-7 of the kernel's pure-f32 dots, so a winner by 1e-5
-      is provably the kernel's winner too;
-    * the aperture-7 chain (identical f64 arithmetic to the kernel's,
-      given the same face) lands in the res-0 anchor window on a slot
-      whose base cell is HOMED on that face — exactly the kernel's
-      fast-path (`same` branch, h3core.encode) condition, so the
-      kernel computes the very same digits and base cell.
-
-    Everything else — seam slivers, foreign-homed slots, ambiguous
-    faces — is a thin band around icosahedron edges (measured ~3-8% of
-    an area-uniform global sample) and returns NULL. This is what makes
-    GLOBAL 10^12-row data mostly-JVM: the round-2 engine ran the whole
-    input through the Arrow kernel (a Python worker per task) whenever
-    the bbox wasn't face-interior.
-    """
-    # rank 0: unit-sphere xyz as ATTRIBUTES (shared by the 20-face
-    # argmax and the chain — no recomputed trig)
-    cur, base_cols, ex, step, (x3, y3, z3) = _open_chain(df, lat, lng, "g")
-
-    # rank 1: the 20 face dots, f64 arithmetic over f32-rounded
-    # operands (see docstring margin argument)
-    xf = f"CAST(CAST({x3} AS FLOAT) AS DOUBLE)"
-    yf = f"CAST(CAST({y3} AS FLOAT) AS DOUBLE)"
-    zf = f"CAST(CAST({z3} AS FLOAT) AS DOUBLE)"
-    dots_entries = ", ".join(
-        f"{xf} * {_dlit(_f32(c[0]))} + {yf} * {_dlit(_f32(c[1]))} + {zf} * {_dlit(_f32(c[2]))}"
-        for c in ic.FACE_CENTER
-    )
-    dots = step("__h3e_gdots", f"ARRAY({dots_entries})")
-    # rank 2: winner + 1-based face index; rank 3: unambiguity gate
-    mx = step("__h3e_gmx", f"ARRAY_MAX({dots})")
-    fidx = step("__h3e_gfidx", f"CAST(ARRAY_POSITION({dots}, {mx}) AS INT)")
-    # safe = unique maximum AND margin above the runner-up. The SIZE
-    # term (round-4 advisor fix) catches an EXACT two-way tie at the
-    # max: FILTER(v < mx) would drop both maxima and measure the margin
-    # against the third-largest dot, passing `safe` on a point whose
-    # face pick is genuinely ambiguous (the f32 kernel argmax may pick
-    # the other face). Measure-zero, but the bit-identity claim must
-    # hold on every row the chain CLAIMS — ties now NULL-route.
-    safe = step(
-        "__h3e_gsafe",
-        f"(({mx} - ARRAY_MAX(FILTER({dots}, v -> v < {mx}))) > {_dlit(float(margin))})"
-        f" AND SIZE(FILTER({dots}, v -> v = {mx})) = 1",
-    )
-
-    def arr20(vals) -> str:
-        return "ARRAY(" + ", ".join(_dlit(float(v)) for v in vals) + ")"
-
-    consts = tuple(
-        f"ELEMENT_AT({arr20(tbl[:, i])}, {fidx})"
-        for tbl in (ic.FACE_CENTER, ic.FACE_T1, ic.FACE_T2)
-        for i in range(3)
-    )
-    # flattened 20x25 slot map: base cell if present AND homed on the
-    # face, else -1 (NULL-route; the kernel handles those rows via its
-    # foreign re-chain / seam scan — Arrow fallback here)
-    flat = []
-    for f in range(20):
-        for k in range(25):
-            b = int(ic.ANCHOR_KEY_BC[f, k])
-            flat.append(b if (b >= 0 and int(ic.HOME_FACE[b]) == f) else -1)
-    flat_arr = "ARRAY(" + ", ".join(f"CAST({v} AS BIGINT)" for v in flat) + ")"
-
-    def bc_of(ak: str) -> str:
-        return (f"CASE WHEN {ak} >= 0 AND {ak} <= 24 "
-                f"THEN ELEMENT_AT({flat_arr}, ({fidx} - 1) * 25 + {ak} + 1) "
-                f"ELSE CAST(-1 AS BIGINT) END")
-
-    hh = _emit_h3_chain(step, res, (x3, y3, z3), consts, bc_of, pre="g")
-    # nullable fence (same pushdown rationale as attach_h3_jvm; NULL =
-    # route to the Arrow kernel)
-    fence = (
-        f"CASE WHEN SPARK_PARTITION_ID() >= -1 THEN "
-        f"(CASE WHEN {safe} AND `__h3e_bcg` >= 0 THEN {hh} END) END"
-    )
-    return _close_chain(cur, base_cols, ex, fence, out)
-
-
-def attach_h3_jvm_home(
-    df: DataFrame,
-    res: int,
-    lat: Column | str | None = None,
-    lng: Column | str | None = None,
-    out: str = "h3",
-    margin: float = 1e-5,
-) -> DataFrame:
-    """SECOND-pass global JVM encode, replicating the kernel's FOREIGN
-    branch (h3core.encode + _chain_in_home): chain in the point's own
-    face to find the claiming base cell (RAW slot map — homed or not),
-    re-chain the point EXACTLY in that cell's HOME face, accept iff the
-    home chain's res-0 anchor equals the cell's HOME_AXIAL slot (the
-    kernel's `consistent` condition). NULL marks rows only the kernel's
-    seam scan can place (Arrow fallback).
-
-    Bit-identity: with the same face pick (argmax margin as
-    attach_h3_jvm_global) this computes the kernel's foreign branch
-    verbatim — same f64 projection and chain in both frames, same
-    consistency test, digits from the home chain, base cell unchanged —
-    and the SAME-homed case degenerates to the kernel's fast path
-    (the home chain IS the own-face chain then). Intended for the
-    RESIDUE of :func:`attach_h3_jvm_global` (operators/spatial.assign_h3
-    wires it that way): the two stacked chains (~50 Project ranks) sit
-    past the fused-stage JIT budget, so this pass runs interpreted —
-    fine for the ~19% residue scan, still far cheaper than per-row
-    Python — while the 81% fast pass keeps its compiled 28-rank chain.
-    """
-    cur, base_cols, ex, step, (x3, y3, z3) = _open_chain(df, lat, lng, "h")
-
-    xf = f"CAST(CAST({x3} AS FLOAT) AS DOUBLE)"
-    yf = f"CAST(CAST({y3} AS FLOAT) AS DOUBLE)"
-    zf = f"CAST(CAST({z3} AS FLOAT) AS DOUBLE)"
-    dots_entries = ", ".join(
-        f"{xf} * {_dlit(_f32(c[0]))} + {yf} * {_dlit(_f32(c[1]))} + {zf} * {_dlit(_f32(c[2]))}"
-        for c in ic.FACE_CENTER
-    )
-    dots = step("__h3e_hdots", f"ARRAY({dots_entries})")
-    mx = step("__h3e_hmx", f"ARRAY_MAX({dots})")
-    fidx = step("__h3e_hfidx", f"CAST(ARRAY_POSITION({dots}, {mx}) AS INT)")
-    # unique-max + margin gate (same tie rationale as the global chain)
-    safe = step(
-        "__h3e_hsafe",
-        f"(({mx} - ARRAY_MAX(FILTER({dots}, v -> v < {mx}))) > {_dlit(float(margin))})"
-        f" AND SIZE(FILTER({dots}, v -> v = {mx})) = 1",
-    )
-
-    def arr20(vals) -> str:
-        return "ARRAY(" + ", ".join(_dlit(float(v)) for v in vals) + ")"
-
-    consts1 = tuple(
-        f"ELEMENT_AT({arr20(tbl[:, i])}, {fidx})"
-        for tbl in (ic.FACE_CENTER, ic.FACE_T1, ic.FACE_T2)
-        for i in range(3)
-    )
-    # RAW slot map: any claimed base cell, homed or foreign
-    flat_raw = []
-    for f in range(20):
-        for k in range(25):
-            flat_raw.append(int(ic.ANCHOR_KEY_BC[f, k]))
-    flat_arr = "ARRAY(" + ", ".join(f"CAST({v} AS BIGINT)" for v in flat_raw) + ")"
-
-    def bc1_of(ak: str) -> str:
-        return (f"CASE WHEN {ak} >= 0 AND {ak} <= 24 "
-                f"THEN ELEMENT_AT({flat_arr}, ({fidx} - 1) * 25 + {ak} + 1) "
-                f"ELSE CAST(-1 AS BIGINT) END")
-
-    _emit_h3_chain(step, res, (x3, y3, z3), consts1, bc1_of, pre="h1")
-    bc1 = "`__h3e_bch1`"
-    # home face of the claiming cell, 1-based; dummy 1 when unclaimed
-    # (result discarded by the final CASE — ANSI element_at needs a
-    # valid index either way)
-    hf_arr = "ARRAY(" + ", ".join(str(int(v) + 1) for v in ic.HOME_FACE) + ")"
-    hidx = step(
-        "__h3e_hhidx",
-        f"CASE WHEN {bc1} >= 0 THEN ELEMENT_AT({hf_arr}, CAST({bc1} AS INT) + 1) "
-        f"ELSE 1 END",
-    )
-    consts2 = tuple(
-        f"ELEMENT_AT({arr20(tbl[:, i])}, {hidx})"
-        for tbl in (ic.FACE_CENTER, ic.FACE_T1, ic.FACE_T2)
-        for i in range(3)
-    )
-    hh2 = _emit_h3_chain(step, res, (x3, y3, z3), consts2, lambda ak: bc1, pre="h2")
-    # kernel `consistent`: the home chain's res-0 anchor must be the
-    # cell's own home slot (exact integer-valued-double comparison)
-    ha_arr = "ARRAY(" + ", ".join(_dlit(float(v[0])) for v in ic.HOME_AXIAL) + ")"
-    hb_arr = "ARRAY(" + ", ".join(_dlit(float(v[1])) for v in ic.HOME_AXIAL) + ")"
-    consistent = (
-        f"(`__h3e_a0h2` = ELEMENT_AT({ha_arr}, CAST({bc1} AS INT) + 1)) AND "
-        f"(`__h3e_b0h2` = ELEMENT_AT({hb_arr}, CAST({bc1} AS INT) + 1))"
-    )
-    fence = (
-        f"CASE WHEN SPARK_PARTITION_ID() >= -1 THEN "
-        f"(CASE WHEN {safe} AND {bc1} >= 0 AND ({consistent}) THEN {hh2} END) END"
-    )
-    return _close_chain(cur, base_cols, ex, fence, out)
+    return step("__h3e_h", h_sql)
 
 
 def _phash_latlng_sql(bbox: tuple[float, float, float, float]) -> tuple[str, str]:
@@ -684,13 +456,3 @@ def attach_h3_from_phash_jvm(
     bboxes (see :func:`attach_h3_jvm`)."""
     lat, lng = _phash_latlng_sql(bbox)
     return attach_h3_jvm(df, res, bbox, lat=lat, lng=lng, out=out)
-
-
-def attach_h3_from_phash_jvm_global(
-    df: DataFrame, res: int, bbox: tuple[float, float, float, float], out: str = "h3"
-) -> DataFrame:
-    """phash -> NULLABLE H3 cell id via the global per-row-face chain
-    (see :func:`attach_h3_jvm_global`); NULL rows need the Arrow
-    kernel."""
-    lat, lng = _phash_latlng_sql(bbox)
-    return attach_h3_jvm_global(df, res, lat=lat, lng=lng, out=out)

@@ -40,14 +40,6 @@ def h3_from_phash_np(phash: np.ndarray, res: int = DEFAULT_RES, bbox=DEFAULT_BBO
     return h3core.encode(lat, lng, res).view(np.int64)
 
 
-@F.pandas_udf(LongType())
-def h3_from_phash(phash: pd.Series) -> pd.Series:
-    """phash -> res-9 H3 cell (geotag convention + h3_encode fused into
-    one Arrow hop). Reference: h3.geo_to_h3 inside gpd.sjoin pipeline
-    (make_dataset.py:96-99)."""
-    return pd.Series(h3_from_phash_np(phash.to_numpy()))
-
-
 def h3_from_phash_res(res: int, bbox=DEFAULT_BBOX):
     @F.pandas_udf(LongType())
     def _udf(phash: pd.Series) -> pd.Series:

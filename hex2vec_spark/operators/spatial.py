@@ -4,7 +4,8 @@ The reference's core operator is ``gpd.sjoin(objects, hex_polygons,
 predicate='intersects')`` (make_dataset.py:96-99) driven by a buffered
 polyfill tiling (make_dataset.py:26-58). Here the spatial join is
 re-expressed as an **equi-join on H3 cell id** (SURVEY.md J1): points get
-their cell via a vectorized Arrow UDF and join the (broadcast) tiling
+their cell from ``assign_h3`` (a JVM expression chain on face-interior
+bboxes, a vectorized Arrow UDF elsewhere) and join the (broadcast) tiling
 dimension — no R-tree, no geometric test in the hot path, no shuffle of
 the fact table at all for per-region tilings.
 
@@ -26,6 +27,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from ..hexlib import geom, h3core
+from ..functions import h3_expr
 from ..functions.h3_fns import DEFAULT_BBOX, DEFAULT_RES, h3_from_phash_res
 from ..plans.session import session_cached
 
@@ -167,118 +169,60 @@ def assign_h3(
     images: DataFrame,
     res: int = DEFAULT_RES,
     bbox: tuple[float, float, float, float] = DEFAULT_BBOX,
-    jvm: str = "auto",
 ) -> DataFrame:
     """Add the H3 cell column from the geotag convention (J1a: points
     need no geometric test — h3_encode *is* the spatial join key).
 
-    Two physical strategies, same bits out:
+    One strategy per bbox class, same bits out:
 
-    * **JVM expression path** (default when ``jvm_encode_support(bbox,
-      res)`` holds, i.e. the bbox is face-interior — the natural shape of
-      a per-city job like the reference's, make_dataset.py:96-99): the
+    * **JVM expression path** when ``h3_expr.supports_bbox(bbox, res)``
+      holds, i.e. the bbox is face-interior — the natural shape of a
+      per-city job like the reference's, make_dataset.py:96-99: the
       whole encode is emitted as Catalyst expressions
       (functions/h3_expr), runs inside whole-stage codegen with NO
       Python workers, and is bit-identical to the Arrow kernel
       (tests/test_jvm_encode.py). This is what makes the flagship scale
       local[8]->local[32]: the Arrow path pays a JVM task thread + a
       Python worker per task (~2x runnable threads vs cores).
-    * **Arrow-UDF kernel** (global data / seam regions, or
-      ``jvm="off"``): the NumPy icosahedron kernel. The UDF is wrapped
-      in coalesce(.., -1): a nullable Python-UDF join key makes Catalyst
-      extract the UDF TWICE (IsNotNull filter + key projection — two
-      ArrowEvalPython nodes, measured 27% slower on the 6M-row
-      flagship); coalesce folds the null check away so the UDF runs
-      once. The kernel never returns null, so -1 never materializes.
+    * **Arrow-UDF kernel** for every other bbox (global data, seam
+      regions), batch or stream: the NumPy icosahedron kernel. The UDF
+      is wrapped in coalesce(.., -1): a nullable Python-UDF join key
+      makes Catalyst extract the UDF TWICE (IsNotNull filter + key
+      projection — two ArrowEvalPython nodes, measured 27% slower on the
+      6M-row flagship); coalesce folds the null check away so the UDF
+      runs once. The kernel never returns null, so -1 never
+      materializes.
 
-    ``jvm``: "auto" (fast path when exact), "off" (always Arrow),
-    "force" (raise if the fast path isn't exact for this bbox/res).
-
-    Unless ``jvm="off"``, the result is cached per session
-    (plans.session.session_cached) under the source plan's semantic
-    hash, the hash of its input file names, ``res`` and ``bbox``:
-    several queries over the same scan (the bench's hex_features +
-    context_pairs, any multi-query pipeline) pay the chain's plan
-    construction once. Part-file names are unique per write, so a
-    rewritten source directory gets a new plan over its new files.
-    Only the lazy plan is cached, never data.
+    The JVM plan is cached per session (plans.session.session_cached)
+    under the source plan's semantic hash, the hash of its input file
+    names, ``res`` and ``bbox``: several queries over the same scan (the
+    bench's hex_features + context_pairs, any multi-query pipeline) pay
+    the chain's plan construction once. Part-file names are unique per
+    write, so a rewritten source directory gets a new plan over its new
+    files. Only the lazy plan is cached, never data. The Arrow column
+    builds in ~0.02 s and is not cached.
     """
-    if jvm != "off":
-        from ..functions import h3_expr
-
-        supported = h3_expr.supports_bbox(bbox, res)
-        if not supported and jvm == "force":
-            raise ValueError(f"JVM encode not exact for bbox={bbox} res={res}")
-        try:
-            # the input file names are in the key: keyed on the semantic
-            # hash alone, a rewritten stage dir (same path, new part
-            # files) got the old plan and its stale file index
-            # (observed FAILED_READ_FILE)
-            key = (
-                "encode",
-                images._jdf.queryExecution().analyzed().semanticHash(),
-                hash(tuple(sorted(images.inputFiles()))),
-                res, bbox,
-            )
-        except Exception:  # non-classic DataFrame: nothing to key on
-            return _encode(images, res, bbox, supported)
-        return session_cached(
-            images.sparkSession, key, lambda: _encode(images, res, bbox, supported)
+    if not h3_expr.supports_bbox(bbox, res):
+        return images.withColumn(
+            "h3", F.coalesce(h3_from_phash_res(res, bbox)(F.col("phash")), F.lit(-1))
         )
-    return _arrow_h3(images, res, bbox)
-
-
-def _arrow_h3(df: DataFrame, res: int, bbox) -> DataFrame:
-    return df.withColumn(
-        "h3", F.coalesce(h3_from_phash_res(res, bbox)(F.col("phash")), F.lit(-1))
+    try:
+        # the input file names are in the key: keyed on the semantic
+        # hash alone, a rewritten stage dir (same path, new part files)
+        # got the old plan and its stale file index (observed
+        # FAILED_READ_FILE)
+        key = (
+            "encode",
+            images._jdf.queryExecution().analyzed().semanticHash(),
+            hash(tuple(sorted(images.inputFiles()))),
+            res, bbox,
+        )
+    except Exception:  # non-classic DataFrame: nothing to key on
+        return h3_expr.attach_h3_from_phash_jvm(images, res, bbox)
+    return session_cached(
+        images.sparkSession, key,
+        lambda: h3_expr.attach_h3_from_phash_jvm(images, res, bbox),
     )
-
-
-def _encode(images: DataFrame, res: int, bbox, supported: bool) -> DataFrame:
-    """assign_h3's plan unless ``jvm="off"``: the JVM chain when
-    ``supported``, else the global hybrid (on a stream, the Arrow
-    kernel)."""
-    from ..functions import h3_expr
-
-    if supported:
-        return h3_expr.attach_h3_from_phash_jvm(images, res, bbox, out="h3")
-    if images.isStreaming:
-        # localCheckpoint is not available on streams — Arrow kernel
-        # end-to-end
-        return _arrow_h3(images, res, bbox)
-    # GLOBAL HYBRID (round 3): the bbox spans faces/seams, so the
-    # single-face chain is out — but ~81% of an area-uniform global
-    # sample still satisfies the kernel's fast-path condition per row
-    # (unambiguous nearest face + home-homed anchor slot,
-    # attach_h3_jvm_global docstring), and a second JVM pass over the
-    # residue replicates the kernel's FOREIGN branch (home-face re-chain
-    # + consistency check, attach_h3_jvm_home) — only ~2.8% of global
-    # rows (the kernel's own seam-scan band) reach Python. Both passes
-    # are BIT-IDENTICAL to the kernel on every row they claim.
-    #
-    # COST SHAPE: each pass is lazily localCheckpoint'ed so the three
-    # output branches read MATERIALIZED rows instead of re-running the
-    # chains per branch (measured at 6M rows: naive 3-branch recompute
-    # 19.96 s; checkpointed 2.26 s; the pure-Arrow kernel 1.75 s).
-    # Locally the vectorized NumPy kernel is ~1.3x faster in wall-clock
-    # — the hybrid is the default anyway because it removes the Python
-    # worker beside every task thread on 97% of rows, which is exactly
-    # what capped multi-executor scaling efficiency (round-1 flagship:
-    # 0.44 raw with Arrow encode). Wall-clock-first local runs can pass
-    # jvm="off". Checkpoint blocks persist for the session (the session
-    # cache reuses them).
-    g = h3_expr.attach_h3_from_phash_jvm_global(
-        images, res, bbox, out="h3"
-    ).localCheckpoint(eager=False)
-    good = g.where(F.col("h3").isNotNull())
-    resid = g.where(F.col("h3").isNull()).drop("h3")
-    lat_sql, lng_sql = h3_expr._phash_latlng_sql(bbox)
-    h = h3_expr.attach_h3_jvm_home(
-        resid, res, lat=lat_sql, lng=lng_sql, out="h3"
-    ).localCheckpoint(eager=False)
-    good2 = h.where(F.col("h3").isNotNull())
-    bad = _arrow_h3(h.where(F.col("h3").isNull()).drop("h3"), res, bbox)
-    return good.unionByName(good2).unionByName(bad)
 
 
 def spatial_join(
@@ -353,9 +297,7 @@ def strict_region_assign(
     (functions/geo_expr — bit-identical predicates, pinned). The old
     Arrow pandas-UDF PIP is gone: no Python worker beside any task of
     the strict refine (plan-pinned in test_plans)."""
-    from ..functions import h3_expr
     from ..functions.geo_expr import point_in_polygon_with_holes_expr
-    from ..functions.h3_fns import DEFAULT_BBOX
 
     rows = []
     for _, row in regions_pdf.iterrows():

@@ -13,7 +13,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from hex2vec_spark.functions import h3_expr as hx
-from hex2vec_spark.functions.h3_fns import DEFAULT_BBOX, geotag_np, h3_from_phash_np
+from hex2vec_spark.functions.h3_fns import DEFAULT_BBOX, h3_from_phash_np
 from hex2vec_spark.hexlib import h3core
 
 
@@ -132,67 +132,6 @@ class TestRandomBboxes:
         assert accepted >= 5, (accepted, rejected)
 
 
-class TestGlobalHybrid:
-    def test_global_hybrid_exact_and_mostly_jvm(self, spark):
-        # round 3: seam-spanning bboxes no longer send 100% of rows to
-        # the Arrow kernel. The global per-row-face chain must (a) be
-        # BIT-IDENTICAL to the kernel on every row it claims, (b) claim
-        # the large majority of an area-uniform global sample, and
-        # (c) via assign_h3 produce kernel-exact values for ALL rows
-        # (NULL residue routed through Arrow).
-        from hex2vec_spark.operators.spatial import assign_h3
-
-        bbox = (-60.0, 60.0, -170.0, 170.0)
-        ph, df = _phash_df(spark, 30_000, seed=5)
-        expected = h3_from_phash_np(ph, 9, bbox)
-
-        jvm_part = hx.attach_h3_from_phash_jvm_global(df, 9, bbox)
-        rows = jvm_part.collect()
-        got = {r["phash"]: r["h3"] for r in rows}
-        n_jvm = sum(1 for v in got.values() if v is not None)
-        assert n_jvm / len(rows) > 0.7, n_jvm / len(rows)
-        exp_of = dict(zip(ph.tolist(), expected.astype(np.int64).tolist()))
-        for p, v in got.items():
-            if v is not None:
-                assert v == exp_of[p], (p, v, exp_of[p])
-
-        full = assign_h3(df, res=9, bbox=bbox)
-        gf = {r["phash"]: r["h3"] for r in full.collect()}
-        assert len(gf) == len(rows)
-        for p, v in gf.items():
-            assert v == exp_of[p]
-
-    def test_home_pass_claims_foreign_residue_exactly(self, spark):
-        # round-3 second JVM pass: the kernel's FOREIGN branch (home
-        # re-chain + HOME_AXIAL consistency). On the global residue it
-        # must claim the large majority (foreign-homed slots are ~19%
-        # of global rows; the unclaimable rest is the kernel's own
-        # seam-scan fraction ~3%) and be BIT-IDENTICAL on every claim.
-        rng = np.random.default_rng(29)
-        n = 40_000
-        lat = np.degrees(np.arcsin(rng.uniform(-1, 1, n)))
-        lng = rng.uniform(-180, 180, n)
-        from hex2vec_spark.hexlib import h3core
-
-        expected = h3core.encode(lat, lng, 9).astype(np.int64)
-        pdf = pd.DataFrame({"i": np.arange(n), "lat": lat, "lng": lng})
-        g1 = hx.attach_h3_jvm_global(spark.createDataFrame(pdf), 9)
-        resid = g1.where("h3 is null").drop("h3")
-        rows = hx.attach_h3_jvm_home(resid, 9).collect()
-        claimed = [(r["i"], r["h3"]) for r in rows if r["h3"] is not None]
-        assert len(claimed) >= 0.7 * len(rows), (len(claimed), len(rows))
-        assert all(v == expected[i] for i, v in claimed)
-        # combined python residue must be the kernel's seam-scan band
-        assert (len(rows) - len(claimed)) / n < 0.05
-
-    def test_global_hybrid_good_branch_has_no_python(self, spark):
-        _, df = _phash_df(spark, 100)
-        enc = hx.attach_h3_from_phash_jvm_global(df, 9, (-60.0, 60.0, -170.0, 170.0))
-        good = enc.where(F.col("h3").isNotNull())
-        plan = good._jdf.queryExecution().executedPlan().toString()
-        assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
-
-
 class TestSupportGate:
     def test_global_bbox_rejected(self):
         assert not hx.supports_bbox((-60.0, 60.0, -170.0, 170.0), 8)
@@ -201,27 +140,25 @@ class TestSupportGate:
         assert hx.supports_bbox(DEFAULT_BBOX, 8)
         assert hx.supports_bbox(DEFAULT_BBOX, 9)
 
-    def test_force_raises_on_unsupported(self, spark):
-        from hex2vec_spark.operators.spatial import assign_h3
-
-        _, df = _phash_df(spark, 10)
-        with pytest.raises(ValueError):
-            assign_h3(df, res=8, bbox=(-60.0, 60.0, -170.0, 170.0), jvm="force")
-
     def test_auto_falls_back_to_arrow_on_unsupported(self, spark):
         from hex2vec_spark.operators.spatial import assign_h3
 
+        sc = spark.sparkContext._jsc.sc()
+        stored = {i.id() for i in sc.getRDDStorageInfo()}
         _, df = _phash_df(spark, 100)
         out = assign_h3(df, res=8, bbox=(-60.0, 60.0, -170.0, 170.0))
-        plan = out._sc._jvm.PythonSQLUtils.explainString(
-            out._jdf.queryExecution(), "formatted"
-        )
-        assert "ArrowEvalPython" in plan  # fell back to the kernel
+        qe = out._jdf.queryExecution()
+        # one kernel pass over the input: a single ArrowEvalPython and no
+        # checkpointed (LogicalRDD) branch
+        assert qe.executedPlan().toString().count("ArrowEvalPython") == 1
+        assert "LogicalRDD" not in qe.optimizedPlan().toString()
         # and values match the kernel for the same bbox
         ph = np.array([r["phash"] for r in df.select("phash").collect()], dtype=np.int64)
         expected = h3_from_phash_np(ph, 8, (-60.0, 60.0, -170.0, 170.0))
         got = out.toPandas().set_index("phash")["h3"]
         assert (got.loc[ph].to_numpy() != expected).sum() == 0
+        # the encode leaves no data behind in the session
+        assert {i.id() for i in sc.getRDDStorageInfo()} <= stored
 
     def test_unmapped_anchor_slot_raises_not_corrupts(self, spark):
         # round-3 advisor fix: a point landing in a res-0 slot the
@@ -321,22 +258,3 @@ class TestRound4AdvisorFixes:
                 out.collect()
         finally:
             hx._SUPPORT_MEMO[key] = (face, orig)
-
-    def test_face_tie_gate_null_routes(self, spark):
-        # round-4 advisor fix: an EXACT two-way tie at the max face dot
-        # must fail the `safe` gate (the f32 kernel argmax may pick the
-        # other face). (a) wiring: the emitted global chain carries the
-        # unique-max SIZE(FILTER(...)) = 1 term; (b) semantics: the
-        # predicate template is FALSE on a tie, where the old
-        # margin-only form measured against the THIRD-largest dot and
-        # passed.
-        _, df = _phash_df(spark, 3)
-        g = hx.attach_h3_from_phash_jvm_global(df, 9, (-60.0, 60.0, -170.0, 170.0))
-        s = g._jdf.queryExecution().analyzed().toString().lower()
-        assert "size(filter" in s
-        row = spark.sql(
-            "SELECT (((mx - ARRAY_MAX(FILTER(d, v -> v < mx))) > 1e-5D)"
-            "  AND SIZE(FILTER(d, v -> v = mx)) = 1) AS safe "
-            "FROM (SELECT ARRAY(0.9D, 0.9D, 0.1D) AS d, 0.9D AS mx)"
-        ).collect()[0]
-        assert row["safe"] is False

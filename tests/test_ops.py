@@ -86,11 +86,11 @@ class TestIvfIndexAtRest:
 
 class TestAdaptiveSalting:
     def test_detects_planted_hot_cells(self, spark):
-        from hex2vec_spark.functions.h3_fns import h3_from_phash
+        from hex2vec_spark.functions.h3_fns import h3_from_phash_res
         from hex2vec_spark.operators.agg import estimate_heavy_keys
         from hex2vec_spark.sources.synth import images_table
 
-        img = images_table(spark, 3000).withColumn("h3", h3_from_phash(F.col("phash")))
+        img = images_table(spark, 3000).withColumn("h3", h3_from_phash_res(9)(F.col("phash")))
         hot = estimate_heavy_keys(img, ["h3"], sample_frac=0.5, hot_share=0.02)
         # FIXTURES: 3 Zipfian hot cells hold ~20% of rows; the largest
         # alone ~12% -> must surface at a 2% share threshold
@@ -98,11 +98,11 @@ class TestAdaptiveSalting:
         assert max(share for _, share in hot) > 0.05
 
     def test_adaptive_equals_plain(self, spark):
-        from hex2vec_spark.functions.h3_fns import h3_from_phash
+        from hex2vec_spark.functions.h3_fns import h3_from_phash_res
         from hex2vec_spark.operators.agg import adaptive_salted_count, salted_count
         from hex2vec_spark.sources.synth import images_table
 
-        img = images_table(spark, 3000).withColumn("h3", h3_from_phash(F.col("phash")))
+        img = images_table(spark, 3000).withColumn("h3", h3_from_phash_res(9)(F.col("phash")))
         a = adaptive_salted_count(img, ["h3"], salt_src="image_id", sample_frac=0.3).toPandas()
         p = salted_count(img, ["h3"]).toPandas()
         key = lambda d: sorted(map(tuple, d[["h3", "count"]].to_numpy()))
@@ -609,6 +609,25 @@ class TestKnnQueryFetch:
         want = q(spark, SF_DIR).collect()
         assert len(want) == 10
         assert q(spark, sf_dir).collect() == want
+
+
+class TestGlobalEncodeQuery:
+    def test_base_cell_counts_match_kernel(self, spark):
+        # the DuckDB gate checks global_hybrid_assign rows-only (H3 is
+        # not SQL-expressible); its per-base-cell counts must equal the
+        # NumPy kernel's over the same phash column
+        import __spark_entry__ as entry
+        from hex2vec_spark.functions.h3_fns import h3_from_phash_np
+
+        got = entry.queries()["global_hybrid_assign"](spark, SF_DIR).collect()
+        ph = np.array(
+            [r[0] for r in spark.read.parquet(f"{SF_DIR}/events.parquet")
+             .select(F.xxhash64(F.col("event_id").cast("long"))).collect()],
+            dtype=np.int64,
+        )
+        cells = h3_from_phash_np(ph, 8, (-60.0, 60.0, -170.0, 170.0)).view(np.uint64)
+        bc, n = np.unique((cells >> np.uint64(45)) & np.uint64(127), return_counts=True)
+        assert [(r["base_cell"], r["n"]) for r in got] == list(zip(bc.tolist(), n.tolist()))
 
 
 class TestWinnow:

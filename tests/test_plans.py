@@ -130,15 +130,15 @@ class TestJoinPlans:
         assert sizes and max(sizes) < 8000, (res, sizes)
 
     def test_h3_udf_evaluated_once(self, spark):
-        # Arrow fallback (jvm="off"): a nullable Python-UDF join key
-        # makes Catalyst extract the UDF twice (IsNotNull filter + key
-        # projection); assign_h3's coalesce wrapper must keep it to ONE
-        # ArrowEvalPython node (27% measured)
+        # Arrow kernel (a seam-spanning bbox): a nullable Python-UDF
+        # join key makes Catalyst extract the UDF twice (IsNotNull
+        # filter + key projection); assign_h3's coalesce wrapper must
+        # keep it to ONE ArrowEvalPython node (27% measured)
         from hex2vec_spark.operators.spatial import assign_h3, tiling_table
         from hex2vec_spark.sources.synth import images_table
 
         img = images_table(spark, 100)
-        joined = assign_h3(img, res=8, jvm="off").join(
+        joined = assign_h3(img, res=8, bbox=(-60.0, 60.0, -170.0, 170.0)).join(
             F.broadcast(tiling_table(spark, res=8)), "h3"
         )
         plan = plan_of(joined)
