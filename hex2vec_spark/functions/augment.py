@@ -115,7 +115,7 @@ def ssim_roundtrip(data: pd.Series, fmt: pd.Series) -> pd.Series:
     """Perceptual self-degradation score: decode -> 2x area-downsample
     -> nearest-upsample -> SSIM vs original. Near 1.0 for smooth
     images, lower for detail-heavy ones; a quality feature for corpus
-    filtering (complements psnr_roundtrip's codec check)."""
+    filtering."""
     out = np.empty(len(data), dtype=np.float64)
     for idx, (b, f) in enumerate(zip(data.to_numpy(), fmt.to_numpy())):
         px = im.decode_image(bytes(b), str(f))

@@ -85,37 +85,18 @@ def h3_kring_udf(k: int = 1, include_self: bool = True):
 
 
 def h3_cover_udf(res: int = DEFAULT_RES):
-    """(ring_lat, ring_lng) polygon -> array<long> of every res-``res``
-    cell the polygon *intersects* (gpd.sjoin predicate='intersects'
-    semantics for polygon objects, make_dataset.py:96-99). Whole Arrow
-    batch covered in ONE vectorized pass (h3core.cover_intersect_batch:
-    flattened candidate grids -> one encode -> pairwise intersect
-    refine) — the per-polygon loop it replaces measured ~580 polys/s/core
-    of pure Python overhead; batched runs ~10x that (J1b scale path)."""
-
-    @F.pandas_udf(ArrayType(LongType()))
-    def _udf(ring_lat: pd.Series, ring_lng: pd.Series) -> pd.Series:
-        if not len(ring_lat):  # np.split on empty yields ONE empty slice
-            return pd.Series([], dtype=object)
-        poly_idx, cells = h3core.cover_intersect_batch(
-            ring_lat.to_list(), ring_lng.to_list(), res, pad_cells=1.0
-        )
-        cells = cells.view(np.int64)
-        counts = np.bincount(poly_idx, minlength=len(ring_lat))
-        splits = np.split(cells, np.cumsum(counts)[:-1])
-        return pd.Series([s.tolist() for s in splits])
-
-    return _udf
-
-
-def h3_cover_holes_udf(res: int = DEFAULT_RES):
-    """(ring_lat, ring_lng, holes_lat, holes_lng) -> array<long> of
-    cells intersecting (exterior minus holes) — the round-5 hole-aware
-    variant of :func:`h3_cover_udf`: same batched exterior cover, then
-    cells a hole fully swallows (hexlib.geom.hexes_inside_ring — all
-    vertices inside + no edge crossing) are subtracted per polygon;
-    cells crossing a hole boundary still intersect the polygon. Hole
-    columns are ``array<array<double>>``; null -> hole-free."""
+    """(ring_lat, ring_lng, holes_lat, holes_lng) polygon -> array<long>
+    of every res-``res`` cell the polygon (exterior minus holes)
+    *intersects* (gpd.sjoin predicate='intersects' semantics for polygon
+    objects, make_dataset.py:96-99). Whole Arrow batch covered in ONE
+    vectorized pass (h3core.cover_intersect_batch: flattened candidate
+    grids -> one encode -> pairwise intersect refine) — the per-polygon
+    loop it replaces measured ~580 polys/s/core of pure Python overhead;
+    batched runs ~10x that (J1b scale path). Cells a hole fully swallows
+    (hexlib.geom.hexes_inside_ring — all vertices inside + no edge
+    crossing) are then subtracted per polygon; cells crossing a hole
+    boundary still intersect the polygon. Hole columns are
+    ``array<array<double>>``; null -> hole-free."""
     from ..hexlib import geom
 
     @F.pandas_udf(ArrayType(LongType()))
@@ -123,7 +104,7 @@ def h3_cover_holes_udf(res: int = DEFAULT_RES):
         ring_lat: pd.Series, ring_lng: pd.Series,
         holes_lat: pd.Series, holes_lng: pd.Series,
     ) -> pd.Series:
-        if not len(ring_lat):
+        if not len(ring_lat):  # np.split on empty yields ONE empty slice
             return pd.Series([], dtype=object)
         poly_idx, cells = h3core.cover_intersect_batch(
             ring_lat.to_list(), ring_lng.to_list(), res, pad_cells=1.0
@@ -131,69 +112,18 @@ def h3_cover_holes_udf(res: int = DEFAULT_RES):
         counts = np.bincount(poly_idx, minlength=len(ring_lat))
         splits = np.split(cells, np.cumsum(counts)[:-1])
         out = []
-        for i, cs in enumerate(splits):
-            hl, hg = holes_lat.iloc[i], holes_lng.iloc[i]
+        for cs, hl, hg in zip(splits, holes_lat.to_list(), holes_lng.to_list()):
             if hl is not None and hg is not None and len(hl) and len(cs):
-                cs_u = np.asarray(cs, dtype=np.uint64)
-                verts = h3core.cell_boundary(cs_u)
-                keep = np.ones(len(cs_u), dtype=bool)
+                verts = h3core.cell_boundary(cs)
+                keep = np.ones(len(cs), dtype=bool)
                 for a, b in zip(hl, hg):
                     keep &= ~geom.hexes_inside_ring(
                         verts[:, :, 0], verts[:, :, 1],
                         np.asarray(a, dtype=np.float64),
                         np.asarray(b, dtype=np.float64),
                     )
-                cs = cs_u[keep]
-            out.append(np.asarray(cs).view(np.int64).tolist())
-        return pd.Series(out)
-
-    return _udf
-
-
-def h3_polyfill_udf(res: int = DEFAULT_RES):
-    """(ring_lat, ring_lng) polygon -> array<long> of cells whose center
-    is inside (h3.polyfill semantics, make_dataset.py:41)."""
-
-    @F.pandas_udf(ArrayType(LongType()))
-    def _udf(ring_lat: pd.Series, ring_lng: pd.Series) -> pd.Series:
-        out = []
-        for la, ln in zip(ring_lat, ring_lng):
-            cells = h3core.polyfill(
-                np.asarray(la, dtype=np.float64), np.asarray(ln, dtype=np.float64), res
-            )
-            out.append(cells.view(np.int64).tolist())
-        return pd.Series(out)
-
-    return _udf
-
-
-def h3_polyfill_holes_udf(res: int = DEFAULT_RES):
-    """Hole-aware polyfill (round 5): (ring_lat, ring_lng, holes_lat,
-    holes_lng) -> array<long> of cells whose center is inside (exterior
-    minus holes) — h3.polyfill on a GeoJSON polygon with interior
-    rings. Hole columns are ``array<array<double>>``; null ->
-    hole-free."""
-
-    @F.pandas_udf(ArrayType(LongType()))
-    def _udf(
-        ring_lat: pd.Series, ring_lng: pd.Series,
-        holes_lat: pd.Series, holes_lng: pd.Series,
-    ) -> pd.Series:
-        out = []
-        for la, ln, hla, hlg in zip(ring_lat, ring_lng, holes_lat, holes_lng):
-            holes = (
-                [
-                    (np.asarray(a, dtype=np.float64), np.asarray(b, dtype=np.float64))
-                    for a, b in zip(hla, hlg)
-                ]
-                if hla is not None and hlg is not None
-                else []
-            )
-            cells = h3core.polyfill(
-                np.asarray(la, dtype=np.float64), np.asarray(ln, dtype=np.float64),
-                res, holes=holes,
-            )
-            out.append(cells.view(np.int64).tolist())
+                cs = cs[keep]
+            out.append(cs.view(np.int64).tolist())
         return pd.Series(out)
 
     return _udf

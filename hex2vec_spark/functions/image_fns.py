@@ -19,19 +19,6 @@ from ..hexlib import h3core
 from .h3_fns import DEFAULT_BBOX, DEFAULT_RES, geotag_np
 
 
-@F.pandas_udf(DoubleType())
-def psnr_roundtrip(data: pd.Series, fmt: pd.Series) -> pd.Series:
-    """Decode -> re-encode (PNG) -> decode PSNR; inf (reported as 999.0)
-    for lossless round-trips (input_hint: PSNR >= 40 dB gate)."""
-    out = np.empty(len(data), dtype=np.float64)
-    for idx, (b, f) in enumerate(zip(data.to_numpy(), fmt.to_numpy())):
-        px = im.decode_image(bytes(b), str(f))
-        back = im.png_decode(im.png_encode(px))
-        p = im.psnr(px, back)
-        out[idx] = 999.0 if p == float("inf") else p
-    return pd.Series(out)
-
-
 @F.pandas_udf(
     StructType(
         [

@@ -28,6 +28,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from .ckpt import Checkpointer
+
 # deterministic 64-bit mix (splitmix64-style) used by several signatures
 _MIX = 0xFF51AFD7ED558CCD
 
@@ -232,22 +234,22 @@ def minhash_lsh_pairs(
     n_hashes: int = 32,
     bands: int = 8,
     shingle: int = 3,
-    materialize: bool = True,
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """MinHash + banded LSH near-dup candidate pairs: signature ->
     band keys -> self-join per band bucket -> distinct pairs.
 
-    ``materialize`` checkpoints the banded signatures before the
-    self-join: a self-join recomputes its input lineage on BOTH sides,
-    so without it the MinHash UDF (the dominant cost at scale) runs
-    twice over the corpus. ``checkpoint_dir`` makes that materialization
-    a RELIABLE ``df.checkpoint()`` (executor loss mid-join recovers
-    instead of rehashing the corpus — operators/ckpt.Checkpointer);
-    default is executor-local blocks.
+    The banded signatures are checkpointed before the self-join: a
+    self-join recomputes its input lineage on BOTH sides, so without it
+    the MinHash UDF (the dominant cost at scale) runs twice over the
+    corpus. ``checkpoint_dir`` makes that checkpoint a RELIABLE
+    ``df.checkpoint()`` (executor loss mid-join recovers instead of
+    rehashing the corpus — operators/ckpt.Checkpointer); default is
+    executor-local blocks.
 
-    Shingle hashing uses _stable_hash (FNV-1a), never python's ``hash``,
-    which is seed-randomized per process and differs across executors.
+    Word hashing uses _hash_byte_segments (a positional polynomial plus
+    a splitmix64 finalizer), never python's ``hash``, which is
+    seed-randomized per process and differs across executors.
     """
     sig = _shingle_hashes_udf(shingle, n_hashes)
     rows_per_band = n_hashes // bands
@@ -263,12 +265,7 @@ def minhash_lsh_pairs(
         id_col,
         F.explode(F.array(*[F.struct(F.lit(b).alias("band"), F.col(f"_band{b}").alias("key")) for b in range(bands)])).alias("bk"),
     ).select(id_col, F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
-    if materialize:
-        from .ckpt import Checkpointer
-
-        stacked = Checkpointer(df.sparkSession, checkpoint_dir).reliable(
-            stacked, eager=False
-        )
+    stacked = Checkpointer(df.sparkSession, checkpoint_dir).reliable(stacked, eager=False)
     left = stacked.alias("l")
     right = stacked.alias("r")
     return (
@@ -307,30 +304,21 @@ def simhash_udf():
     return _udf
 
 
-def _stable_hash(s: str) -> np.uint64:
-    """Deterministic cross-process 64-bit string hash (FNV-1a)."""
-    h = np.uint64(0xCBF29CE484222325)
-    for ch in s.encode("utf-8"):
-        h = np.uint64((int(h) ^ ch) * 0x100000001B3 & 0xFFFFFFFFFFFFFFFF)
-    return h
-
-
 def ngram_jaccard_pairs(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
     n: int = 3,
     threshold: float = 0.8,
-    materialize: bool = True,
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Exact n-gram Jaccard similarity pairs via explode + join + count
     algebra (SQL-expressible; the oracle computes the same thing).
     |A ∩ B| from a shingle equi-join, |A ∪ B| = |A| + |B| - |A ∩ B|.
-    Quadratic only within shared-shingle groups. ``materialize``
-    checkpoints the gram table, which is otherwise recomputed three
-    times (both self-join sides + the size table); ``checkpoint_dir``
-    makes it a reliable ``df.checkpoint()`` (operators/ckpt)."""
+    Quadratic only within shared-shingle groups. The gram table is
+    checkpointed, since it is otherwise recomputed three times (both
+    self-join sides + the size table); ``checkpoint_dir`` makes it a
+    reliable ``df.checkpoint()`` (operators/ckpt)."""
     words = F.split(F.lower(F.col(text_col)), r"\s+")
     grams = df.select(
         F.col(id_col),
@@ -341,12 +329,7 @@ def ngram_jaccard_pairs(
             )
         ).alias("gram"),
     ).distinct()
-    if materialize:
-        from .ckpt import Checkpointer
-
-        grams = Checkpointer(df.sparkSession, checkpoint_dir).reliable(
-            grams, eager=False
-        )
+    grams = Checkpointer(df.sparkSession, checkpoint_dir).reliable(grams, eager=False)
     sizes = grams.groupBy(id_col).agg(F.count(F.lit(1)).alias("sz"))
     g1 = grams.alias("g1")
     g2 = grams.alias("g2")

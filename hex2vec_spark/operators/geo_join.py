@@ -109,34 +109,6 @@ def destination_expr(
     return F.struct(F.degrees(la2).alias("lat"), lng_out.alias("lng"))
 
 
-def _band(lat: Column, dlat_deg: float) -> Column:
-    return F.floor(lat / F.lit(dlat_deg)).cast("long")
-
-
-def _nbuckets(band: Column, dlat_deg: float, radius_m: float) -> Column:
-    """Longitude bucket count for ``band``: wide enough that any pair
-    within ``radius_m`` whose *right* row sits in this band (left row in
-    band +-1) differs by <= 1 bucket index.
-
-    The sizing latitude takes one extra band of margin so it upper-bounds
-    |lat| of BOTH endpoints (the left row may sit one band further from
-    the equator); cos() of it lower-bounds both cosines in the haversine
-    inequality."""
-    # cap at exactly pi/2: cos -> ~0 there, the ratio saturates at 1 and
-    # the band collapses to n<=2 buckets — pole caps stay fully covered
-    # for ANY radius instead of leaking above an arbitrary 89.xx cutoff
-    worst = F.greatest(F.abs(band), F.abs(band + 1)) + F.lit(1)
-    sizing_lat = F.least(F.lit(math.pi / 2.0), worst * F.lit(math.radians(dlat_deg)))
-    s = math.sin(radius_m / (2.0 * EARTH_R))
-    w = 2.0 * F.asin(F.least(F.lit(1.0), F.lit(s) / F.cos(sizing_lat)))
-    return F.greatest(F.lit(1).cast("long"), F.floor(F.lit(2.0 * math.pi) / w).cast("long"))
-
-
-def _idx(lng: Column, n: Column) -> Column:
-    # lng in [-180, 180]; identical widths per band on both sides
-    return F.pmod(F.floor((lng + F.lit(180.0)) / (F.lit(360.0) / n)).cast("long"), n)
-
-
 def _bkey(band: Column, idx: Column) -> Column:
     """(band, idx) combined into ONE long join key: ``band * 2^32 +
     idx``. Joining on a single long column makes the hash relation a
@@ -187,7 +159,7 @@ def distance_join(
     computes only its single home bucket, and the join is a
     BroadcastHashJoin: the fact table is NEVER shuffled (plan-pinned in
     tests). The bucket-width bound is symmetric in the two endpoints
-    (_nbuckets sizes from the worst latitude of band +-1, covering
+    (_nb_sql sizes from the worst latitude of band +-1, covering
     both), so flipping which side explodes preserves recall 1 —
     asserted equal to the shuffle path in tests."""
     g = float(grid_radius_m if grid_radius_m is not None else radius_m)
@@ -239,7 +211,7 @@ def distance_join(
     # 0.33 s -> ~0.05 s per call (cProfile: 1128 socket recv_into calls
     # dominated the build of distance_pairs). Same operations in the
     # same order with repr-exact double literals, so every computed
-    # value is bit-identical to the Column form; the staged-attribute
+    # value is bit-identical to the Column-op form it replaced; the staged-attribute
     # structure (_b0/_n*/_i* as lateral aliases -> real columns before
     # the explode) is preserved because inlining the trig into the
     # generator measured 25x slower (BENCH/GEOJOIN.md).
@@ -255,6 +227,14 @@ def distance_join(
         return f"CAST(FLOOR(`{la}` / {_dl(dlat_deg)}) AS BIGINT)"
 
     def _nb_sql(band: str) -> str:
+        # longitude bucket count for ``band``: wide enough that any pair
+        # within the radius whose right row sits in this band (left row
+        # in band +-1) differs by <= 1 index. The sizing latitude takes
+        # one extra band of margin so it upper-bounds |lat| of BOTH
+        # endpoints; cos() of it lower-bounds both cosines in the
+        # haversine inequality. Capped at exactly pi/2: cos -> ~0 there,
+        # the ratio saturates at 1 and the band collapses to n <= 2
+        # buckets, so pole caps stay covered for ANY radius.
         worst = f"(GREATEST(ABS({band}), ABS(({band}) + 1)) + 1)"
         sizing = f"LEAST({_dl(math.pi / 2.0)}, {worst} * {_dl(_rad_band)})"
         w = f"({_dl(2.0)} * ASIN(LEAST({_dl(1.0)}, {_dl(_s)} / COS({sizing}))))"

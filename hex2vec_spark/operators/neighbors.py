@@ -108,7 +108,6 @@ def neighborhood_smooth(
     k: int = 1,
     include_self: bool = True,
     weight_self: float = 1.0,
-    materialize: bool = True,
 ) -> DataFrame:
     """Spatially smooth per-cell features over their k-ring neighborhood
     (mean over the neighbors PRESENT in the corpus).
@@ -130,16 +129,15 @@ def neighborhood_smooth(
     ``include_self`` (1.0 = plain mean; 6.0 approximates a center-
     weighted kernel at k=1).
 
-    ``materialize`` localCheckpoints the feature table once before the
-    self-join — same reason as :func:`context_pairs`: both join sides
-    would otherwise carry the full input lineage (often the H3 encode
+    The feature table is localCheckpointed once before the self-join —
+    same reason as :func:`context_pairs`: both join sides would
+    otherwise carry the full input lineage (often the H3 encode
     expression chain), recomputing it AND handing the optimizer a
     self-join of two deep alias stacks to walk.
     """
     if not value_cols:
         raise ValueError("value_cols must be non-empty")
-    if materialize:
-        features = features.localCheckpoint(eager=False)
+    features = features.localCheckpoint(eager=False)
     cells = features.select(
         F.col(h3_col).alias("_c"),
         *[F.col(c) for c in value_cols],

@@ -263,16 +263,17 @@ def polygon_spatial_join(
     Interior rings (round 5): objects carrying ``holes_lat``/
     ``holes_lng`` (``array<array<double>>``) cover to cells
     intersecting (exterior minus holes) — hole-swallowed cells drop,
-    boundary-crossing cells stay (h3_cover_holes_udf)."""
-    from ..functions.h3_fns import h3_cover_holes_udf, h3_cover_udf
+    boundary-crossing cells stay (h3_cover_udf); objects without them
+    pass typed null rings."""
+    from ..functions.h3_fns import h3_cover_udf
 
-    if "holes_lat" in objects.columns and "holes_lng" in objects.columns:
-        cover_col = h3_cover_holes_udf(res)(
-            F.col("ring_lat"), F.col("ring_lng"),
-            F.col("holes_lat"), F.col("holes_lng"),
-        )
-    else:
-        cover_col = h3_cover_udf(res)(F.col("ring_lat"), F.col("ring_lng"))
+    has_holes = "holes_lat" in objects.columns and "holes_lng" in objects.columns
+    null_rings = F.lit(None).cast("array<array<double>>")
+    cover_col = h3_cover_udf(res)(
+        F.col("ring_lat"), F.col("ring_lng"),
+        F.col("holes_lat") if has_holes else null_rings,
+        F.col("holes_lng") if has_holes else null_rings,
+    )
     cover = objects.withColumn("h3", F.explode(cover_col))
     return cover.join(F.broadcast(tiling_sdf), "h3", how)
 

@@ -21,15 +21,6 @@ STOPWORDS_EN = [
 ]
 
 
-def token_count(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Whitespace token count + a BPE-ish subword estimate (chars/4,
-    the common fast heuristic) as JVM expressions."""
-    toks = F.size(F.split(F.trim(F.col(text_col)), r"\s+"))
-    return df.withColumn("n_tokens", toks).withColumn(
-        "n_subwords_est", (F.length(F.col(text_col)) / F.lit(4.0))
-    )
-
-
 # BPE-ish pre-tokenizer regex (GPT-2-style classes: letter runs, digit
 # runs, single punctuation marks) — shared verbatim with the DuckDB oracle
 BPE_PATTERN = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
@@ -86,24 +77,6 @@ def quality_score(df: DataFrame, text_col: str = "text") -> DataFrame:
              + F.when((length >= 20) & (length <= 2000), 0.2).otherwise(0.0)),
         )
     )
-
-
-def lang_id(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Cheap n-gram/stopword language heuristic: 'en' when English
-    stopword density is high, else 'other' (deterministic, SQL-expressible
-    for the oracle)."""
-    words = F.split(F.lower(F.col(text_col)), r"\s+")
-    n_words = F.size(words)
-    n_stop = F.size(F.filter(words, lambda w: w.isin(STOPWORDS_EN)))
-    ratio = F.when(n_words > 0, n_stop / n_words).otherwise(0.0)
-    return df.withColumn("lang_pred", F.when(ratio >= 0.08, "en").otherwise("other"))
-
-
-def fingerprint(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Document fingerprint: md5 of the normalized text (exact-dup key)
-    plus a shingle-set signature column for near-dup stages."""
-    norm = F.lower(F.regexp_replace(F.col(text_col), r"\s+", " "))
-    return df.withColumn("fp_md5", F.md5(norm))
 
 
 def winnow_fingerprints(

@@ -43,7 +43,6 @@ def build_dataset(
     res: int = 9,
     n_buckets: int = 8,
     input_fingerprint: str | None = None,
-    adaptive_salt: bool = False,
 ) -> dict:
     """Run the full build: tiling -> resumable spatial-join stage ->
     feature aggregation -> versioned snapshot commit. Returns the
@@ -64,7 +63,7 @@ def build_dataset(
     """
     import uuid
 
-    from ..operators.agg import adaptive_salted_count, explode_caption_tags, salted_count
+    from ..operators.agg import explode_caption_tags, salted_count
     from ..operators.spatial import spatial_join
     from ..sources.iceberg_lite import commit_table, read_stage, run_stage
 
@@ -92,19 +91,7 @@ def build_dataset(
     # read exactly this run's buckets — a bucket=* glob would mix in
     # stale high-numbered dirs when n_buckets shrank between runs
     tags = explode_caption_tags(read_stage(spark, assign_path, n_buckets=n_buckets))
-    keys = ["region_id", "h3", "feature"]
-    # adaptive_salt is SAFE here (round-2 verdict follow-up): the
-    # heavy-hitter sample re-executes tags' lineage, but that lineage is
-    # a COMMITTED parquet stage (read_stage) + a cheap explode — ~2
-    # extra column-pruned scans of the assign stage, never the raw
-    # decode pipeline. The adaptive_salted_count docstring's warning is
-    # about derived lineages over expensive sources (e.g. the synth
-    # generator); committed-stage reads are the intended usage.
-    feats = (
-        adaptive_salted_count(tags, keys, salt_src="image_id")
-        if adaptive_salt
-        else salted_count(tags, keys)
-    )
+    feats = salted_count(tags, ["region_id", "h3", "feature"])
     n_done = sum(
         1
         for v in manifest["buckets"].values()

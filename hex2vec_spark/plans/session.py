@@ -78,9 +78,7 @@ def plan_cache_counts(spark: SparkSession) -> Counter:
     return Counter(cache.counts) if cache is not None else Counter()
 
 
-def profile_conf(
-    shuffle_partitions: int | None = None, arrow_batch: int = 20_000
-) -> dict[str, str]:
+def profile_conf(shuffle_partitions: int | None = None) -> dict[str, str]:
     """The engine's config profile as a plain dict — get_spark applies
     all of it; spark-submit jobs (tools/submit_job.py) apply only the
     keys the user did NOT pass via --conf, so cluster tuning flags keep
@@ -107,7 +105,7 @@ def profile_conf(
         "spark.sql.adaptive.skewJoin.enabled": "true",
         "spark.sql.shuffle.partitions": str(shuffle_partitions),
         "spark.sql.execution.arrow.pyspark.enabled": "true",
-        "spark.sql.execution.arrow.maxRecordsPerBatch": str(arrow_batch),
+        "spark.sql.execution.arrow.maxRecordsPerBatch": "20000",
         "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
         "spark.sql.optimizer.dynamicPartitionPruning.enabled": "false",
         "spark.sql.analyzer.maxIterations": "300",
@@ -117,15 +115,13 @@ def profile_conf(
 
 
 def session_conf(
-    shuffle_partitions: int | None = None,
-    arrow_batch: int = 20_000,
-    extra: dict | None = None,
+    shuffle_partitions: int | None = None, extra: dict | None = None
 ) -> dict[str, str]:
     """Everything get_spark sets beyond its fixed basics: the worker
     import path, the profile (see profile_conf), then ``extra``, which
     overrides both."""
     conf = {"spark.executorEnv.PYTHONPATH": PACKAGE_ROOT}
-    conf.update(profile_conf(shuffle_partitions, arrow_batch))
+    conf.update(profile_conf(shuffle_partitions))
     conf.update(extra or {})
     return conf
 
@@ -143,7 +139,6 @@ def get_spark(
     app_name: str = "hex2vec-spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
-    arrow_batch: int = 20_000,
     extra: dict | None = None,
 ) -> SparkSession:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
@@ -182,14 +177,14 @@ def get_spark(
     #   fact). DPP is inert for this engine's plan shapes anyway: the
     #   big fact side is scanned in full and dimensions are broadcast;
     #   table layouts prune STATICALLY via h3_p4 partition predicates
-    #   (sources/iceberg_lite.write_table + test_plans). Cluster jobs
+    #   (sources/iceberg_lite.commit_table + test_plans). Cluster jobs
     #   joining runtime-filtered partitioned facts without the JVM
     #   encode chain can re-enable via --conf or extra={...: "true"}.
     # Also: analyzer.maxIterations=300 gives the lateral-alias encode
     # chain headroom (~2 alias ranks per aperture-7 level), and
     # dataFrameDebugging off removes PySpark 4's per-API-call
     # inspect.stack walk (0.5+ s per complex plan construction).
-    for k, v in session_conf(shuffle_partitions, arrow_batch, extra).items():
+    for k, v in session_conf(shuffle_partitions, extra).items():
         b = b.config(k, v)
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -4,12 +4,14 @@ No Iceberg runtime jar ships with this PySpark build (verified: 286 jars,
 none iceberg), so the engine provides a format-compatible *layout* — not
 the Iceberg spec — on plain parquet:
 
-  * data partitioned by a coarse H3 parent (``h3_p4``, the Iceberg
-    partition-transform analog: cell-range predicates prune files) and
-    optionally bucketed;
-  * a JSON snapshot under ``_meta/`` per commit: schema, partition spec,
-    per-partition row counts + input fingerprint (the north_rule
-    "per-partition lineage + row-count metrics");
+  * ``commit_table`` is the one writer that lands a table: data files
+    partitioned by a coarse H3 parent (``h3_p4``, the Iceberg
+    partition-transform analog: cell-range predicates prune files) go
+    under ``data/s<id>/``, and each commit appends a snapshot to
+    ``_meta/snapshots.json`` with the visible data dirs, the schema,
+    the partition spec and per-partition row counts read from parquet
+    footers (the north_rule "per-partition lineage + row-count
+    metrics"); ``read_table`` time-travels over that log;
   * resumable stages: ``run_stage`` partitions work into deterministic
     buckets, records each completed bucket in the manifest, and on
     re-run processes only missing buckets (reference analog: the
@@ -27,6 +29,8 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from ..operators.hierarchy import parent_col
 
 META_DIR = "_meta"
+# run_stage's bucket jobs in flight at once
+_STAGE_CONCURRENCY = 4
 
 
 def _meta_path(path: str) -> str:
@@ -62,55 +66,17 @@ def _with_partition_layout(df: DataFrame, partition_res: int, h3_col: str) -> Da
     )
 
 
-def write_table(
-    df: DataFrame,
-    path: str,
-    partition_res: int | None = 4,
-    h3_col: str = "h3",
-    mode: str = "overwrite",
-    snapshot_extra: dict | None = None,
-) -> dict:
-    """Write parquet partitioned by h3 parent at ``partition_res`` and
-    range-partitioned *within* files by the full cell id (north_rule:
-    range-partitioned shuffles -> cell-adjacent rows colocate, ordered
-    parquet gives min/max pruning on h3)."""
-    out = df
-    parts = []
-    if partition_res is not None and h3_col in df.columns:
-        out = _with_partition_layout(out, partition_res, h3_col)
-        parts = ["h3_p4"]
-    # zstd: ~30-50% smaller than snappy at similar scan speed — at 100 TB
-    # the at-rest and shuffle-read savings dominate the encode cost
-    writer = out.write.mode(mode).option("compression", "zstd")
-    if parts:
-        writer = writer.partitionBy(*parts)
-    writer.parquet(path)
-
-    # per-partition counts from parquet FOOTERS (round-4 fix: the old
-    # code re-read the just-written table with a Spark groupBy.count —
-    # a full second scan per commit at scale; commit_table already used
-    # footer counts, ported here). Schema comes from the written frame
-    # (the footers carry the same columns minus the partition dirs).
-    if parts:
-        counts = {
-            d.split("=", 1)[1]: _parquet_row_count(os.path.join(path, d))
-            for d in os.listdir(path)
-            if d.startswith(f"{parts[0]}=")
-        }
-    else:
-        counts = {"_all": _parquet_row_count(path)}
-    snapshot = {
-        "ts": time.time(),
-        "schema": out.schema.jsonValue(),
-        "partition_spec": parts,
-        "partition_row_counts": counts,
-        "total_rows": int(sum(counts.values())),
-        **(snapshot_extra or {}),
+def _partition_row_counts(path: str, part_col: str | None) -> dict[str, int]:
+    """Rows per ``part_col=`` dir under ``path`` (``{"_all": n}`` when
+    unpartitioned), from parquet footers: each footer is read once."""
+    if part_col is None:
+        return {"_all": _parquet_row_count(path)}
+    prefix = f"{part_col}="
+    return {
+        d[len(prefix):]: _parquet_row_count(os.path.join(path, d))
+        for d in sorted(os.listdir(path))
+        if d.startswith(prefix)
     }
-    os.makedirs(_meta_path(path), exist_ok=True)
-    with open(os.path.join(_meta_path(path), "snapshot.json"), "w") as f:
-        json.dump(snapshot, f, indent=1)
-    return snapshot
 
 
 def _parquet_row_count(path: str) -> int:
@@ -154,7 +120,10 @@ def commit_table(
     """Versioned commit: data files land under ``data/s<id>/`` and a new
     snapshot is appended to ``_meta/snapshots.json`` recording the set of
     data dirs visible at that version (Iceberg snapshot-manifest analog;
-    the real spec tracks files — dirs suffice for a layout demo).
+    the real spec tracks files — dirs suffice for a layout demo). The
+    snapshot also carries the written schema, ``added_rows`` and
+    ``partition_row_counts`` (rows per ``h3_p4`` value, or ``{"_all":
+    n}`` when unpartitioned), all without a Spark job.
 
     ``mode='append'`` makes the new snapshot see parent dirs + the new
     one; ``mode='overwrite'`` sees only the new one (old data dirs stay
@@ -162,7 +131,8 @@ def commit_table(
     """
     _check_snapshot_extra(
         snapshot_extra,
-        {"id", "parent_id", "ts", "op", "data_dirs", "added_rows", "partition_spec"},
+        {"id", "parent_id", "ts", "op", "data_dirs", "added_rows", "partition_spec",
+         "partition_row_counts", "schema"},
     )
     log = snapshots(path)
     snap_id = (log[-1]["id"] + 1) if log else 0
@@ -172,12 +142,16 @@ def commit_table(
     if partition_res is not None and h3_col in df.columns:
         out = _with_partition_layout(out, partition_res, h3_col)
         parts = ["h3_p4"]
+    # zstd: ~30-50% smaller than snappy at similar scan speed — at 100 TB
+    # the at-rest and shuffle-read savings dominate the encode cost
     writer = out.write.mode("overwrite").option("compression", "zstd")
     if parts:
         writer = writer.partitionBy(*parts)
     writer.parquet(os.path.join(path, rel_dir))
 
-    added = _parquet_row_count(os.path.join(path, rel_dir))
+    # counts from parquet FOOTERS, not a Spark re-read of the data just
+    # written (a full second scan per commit at scale)
+    counts = _partition_row_counts(os.path.join(path, rel_dir), parts[0] if parts else None)
     parent_dirs = log[-1]["data_dirs"] if (log and mode == "append") else []
     snap = {
         "id": snap_id,
@@ -185,8 +159,10 @@ def commit_table(
         "ts": time.time(),
         "op": mode,
         "data_dirs": [*parent_dirs, rel_dir],
-        "added_rows": int(added),
+        "added_rows": sum(counts.values()),
         "partition_spec": parts,
+        "partition_row_counts": counts,
+        "schema": out.schema.jsonValue(),
         **(snapshot_extra or {}),
     }
     log.append(snap)
@@ -250,7 +226,6 @@ def run_stage(
     bucket_col: str = "image_id",
     n_buckets: int = 8,
     input_fingerprint: str = "",
-    concurrency: int = 4,
 ) -> dict:
     """Resumable stage execution with per-bucket lineage.
 
@@ -314,7 +289,7 @@ def run_stage(
             }
             _save_manifest(out_path, manifest)
         # bucket jobs are independent Spark jobs over disjoint splits —
-        # run a few concurrently (the scheduler interleaves their tasks;
+        # run _STAGE_CONCURRENCY at once (the scheduler interleaves their tasks;
         # a single bucket's ~n_input/n_buckets tasks underfill the
         # cluster). Each bucket still COMMITS individually the moment it
         # finishes (manifest writes serialized by a lock), so
@@ -345,8 +320,8 @@ def run_stage(
                 }
                 _save_manifest(out_path, manifest)
 
-        if concurrency > 1 and len(todo) > 1:
-            with ThreadPoolExecutor(max_workers=concurrency) as ex:
+        if len(todo) > 1:
+            with ThreadPoolExecutor(max_workers=_STAGE_CONCURRENCY) as ex:
                 for f in [ex.submit(_run_bucket, b) for b in todo]:
                     f.result()  # surface the first failure
         else:

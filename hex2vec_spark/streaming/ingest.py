@@ -12,11 +12,9 @@ sources/iceberg_lite.py).
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..functions.h3_fns import DEFAULT_RES, h3_from_phash_res
+from ..functions.h3_fns import DEFAULT_RES
 from ..sources.synth import IMAGES_SCHEMA
 
 
@@ -37,18 +35,12 @@ def streaming_hex_features(
     bboxes) -> broadcast tiling join (stream-static join: no state) ->
     explode -> streaming agg (state = running counts per
     (region_id, h3, feature))."""
+    from ..operators.agg import explode_caption_tags, salted_count
     from ..operators.spatial import assign_h3
 
     with_h3 = assign_h3(images_stream, res=res)
     joined = with_h3.join(F.broadcast(tiling_sdf), "h3", "inner")
-    tags = (
-        joined.withColumn("feature", F.explode(F.split(F.col("caption"), ";")))
-        .withColumn("feature", F.trim(F.col("feature")))
-        .where(F.col("feature") != "")
-    )
-    return tags.groupBy("region_id", "h3", "feature").agg(
-        F.count(F.lit(1)).cast("double").alias("count")
-    )
+    return salted_count(explode_caption_tags(joined), ["region_id", "h3", "feature"])
 
 
 def windowed_event_counts(

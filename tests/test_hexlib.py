@@ -423,39 +423,3 @@ class TestPolyfillHoles:
         assert ((clat > 40.9) & (clat < 41.1) & (clng > 15.3) & (clng < 15.7)).all()
         kla, klg = h3.cell_center(np.array(sorted(holed), dtype=np.uint64))
         assert not ((kla > 40.9) & (kla < 41.1) & (klg > 15.3) & (klg < 15.7)).any()
-
-    def test_polyfill_holes_udf_matches_kernel(self, spark):
-        from pyspark.sql import functions as F
-        import pandas as pd
-        from hex2vec_spark.functions.h3_fns import h3_polyfill_holes_udf, h3_polyfill_udf
-
-        ext_la = [40.6, 40.6, 41.4, 41.4]
-        ext_lg = [14.8, 16.2, 16.2, 14.8]
-        h_la = [40.9, 40.9, 41.1, 41.1]
-        h_lg = [15.3, 15.7, 15.7, 15.3]
-        sdf = spark.createDataFrame(
-            pd.DataFrame([
-                {"i": 0, "rla": ext_la, "rlg": ext_lg, "hla": [h_la], "hlg": [h_lg]},
-                {"i": 1, "rla": ext_la, "rlg": ext_lg, "hla": None, "hlg": None},
-            ]),
-            schema="i int, rla array<double>, rlg array<double>, "
-                   "hla array<array<double>>, hlg array<array<double>>",
-        )
-        got = {
-            r["i"]: set(r["c"])
-            for r in sdf.select(
-                "i",
-                h3_polyfill_holes_udf(7)(
-                    F.col("rla"), F.col("rlg"), F.col("hla"), F.col("hlg")
-                ).alias("c"),
-            ).collect()
-        }
-        want_holed = set(
-            h3.polyfill(np.array(ext_la), np.array(ext_lg), 7,
-                        holes=[(np.array(h_la), np.array(h_lg))]).view(np.int64).tolist()
-        )
-        want_plain = set(
-            h3.polyfill(np.array(ext_la), np.array(ext_lg), 7).view(np.int64).tolist()
-        )
-        assert got[0] == want_holed and got[1] == want_plain
-        assert want_holed < want_plain

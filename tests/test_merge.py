@@ -112,6 +112,10 @@ class TestMergeTable:
         src = spark.createDataFrame([(11, 9.0), (12, 3.0)], "h3 long, score double")
         s1 = merge_table(spark, root, src, "h3", partition_res=None)
         assert s1["op"] == "overwrite" and s1["merge_on"] == ["h3"]
+        # an unpartitioned commit counts all its rows under "_all"
+        assert s0["partition_row_counts"] == {"_all": 2}
+        assert s1["partition_row_counts"] == {"_all": 3} and s1["added_rows"] == 3
+        assert [f["name"] for f in s1["schema"]["fields"]] == ["h3", "score"]
         latest = {r["h3"]: r["score"] for r in read_table(spark, root).collect()}
         assert latest == {10: 1.0, 11: 9.0, 12: 3.0}
         # time travel: the pre-merge snapshot still reads the old values

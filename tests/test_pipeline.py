@@ -205,6 +205,13 @@ class TestEndToEndBuild:
         assert snap["id"] == 0 and snap["added_rows"] > 0
 
         got = load_processed(spark, root).toPandas()
+        # the commit's footer walk: rows per h3_p4 dir, summing to added_rows
+        per_parent = got.groupby("h3_p4").size()
+        assert snap["partition_row_counts"] == {str(k): int(v) for k, v in per_parent.items()}
+        assert sum(snap["partition_row_counts"].values()) == snap["added_rows"] == len(got)
+        assert [f["name"] for f in snap["schema"]["fields"]] == [
+            "region_id", "h3", "feature", "count", "h3_p4"
+        ]
         # oracle: per-(region, h3, feature) counts over the exact join rows
         ora = oracle_assignments(oracle_images, tiling)
         ora["feature"] = ora["caption"].str.split(";")
@@ -275,7 +282,7 @@ class TestEndToEndBuild:
 
         root = str(tmp_path / "ds2")
         build_dataset(spark, images_table(spark, 500), regions_pandas(), root,
-                      res=RES, n_buckets=2, adaptive_salt=True)
+                      res=RES, n_buckets=2)
         sel = load_processed(spark, root, select_regions=["r00", "r01"]).toPandas()
         assert set(sel["region_id"]) <= {"r00", "r01"}
         dropped = load_processed(spark, root, drop_regions=["r00"]).toPandas()
@@ -636,7 +643,7 @@ class TestInteriorRingRegions:
     def test_polygon_spatial_join_with_holes(self, spark):
         """Object polygons with holes cover to (exterior minus holes):
         hole-swallowed cells drop, the rest matches the plain cover."""
-        from hex2vec_spark.functions.h3_fns import h3_cover_holes_udf, h3_cover_udf
+        from hex2vec_spark.functions.h3_fns import h3_cover_udf
         from hex2vec_spark.hexlib import h3core
         import pyspark.sql.functions as F
 
@@ -650,12 +657,14 @@ class TestInteriorRingRegions:
             schema="obj_id string, ring_lat array<double>, ring_lng array<double>, "
                    "holes_lat array<array<double>>, holes_lng array<array<double>>",
         )
+        null_rings = F.lit(None).cast("array<array<double>>")
         plain = set(
             sdf.select(F.explode(h3_cover_udf(self.RES)(
-                F.col("ring_lat"), F.col("ring_lng"))).alias("h3")).toPandas()["h3"]
+                F.col("ring_lat"), F.col("ring_lng"),
+                null_rings, null_rings)).alias("h3")).toPandas()["h3"]
         )
         holed = set(
-            sdf.select(F.explode(h3_cover_holes_udf(self.RES)(
+            sdf.select(F.explode(h3_cover_udf(self.RES)(
                 F.col("ring_lat"), F.col("ring_lng"),
                 F.col("holes_lat"), F.col("holes_lng"))).alias("h3")).toPandas()["h3"]
         )

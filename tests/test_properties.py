@@ -270,8 +270,9 @@ class TestHierarchyProperties:
 class TestBandGridProperties:
     """The distance_join recall guarantee as a pure-math property: for
     ANY pair within the radius, the right row's home bucket must be in
-    the left row's 3x3 candidate set. NumPy replicas of the exact JVM
-    expressions in operators/geo_join.py (_band/_nbuckets/_idx)."""
+    the left row's 3x3 candidate set. NumPy replicas of the SQL text
+    distance_join emits in operators/geo_join.py (_band_sql/_nb_sql/
+    _idx_sql)."""
 
     R = 6_371_008.8
     DEG_M = np.pi * R / 180.0
@@ -279,7 +280,7 @@ class TestBandGridProperties:
     def _band(self, lat, dlat):
         return int(np.floor(lat / dlat))
 
-    def _nbuckets(self, band, dlat, radius):
+    def _nb(self, band, dlat, radius):
         worst = max(abs(band), abs(band + 1)) + 1
         sizing = min(np.pi / 2.0, worst * np.radians(dlat))
         s = np.sin(radius / (2.0 * self.R))
@@ -321,7 +322,7 @@ class TestBandGridProperties:
         dlat = radius * (1.0 + 1e-9) / self.DEG_M
         b_l, b_r = self._band(lat, dlat), self._band(lat2, dlat)
         assert abs(b_l - b_r) <= 1  # meridian arc bound
-        n = self._nbuckets(b_r, dlat, radius * (1.0 + 1e-9))
+        n = self._nb(b_r, dlat, radius * (1.0 + 1e-9))
         home = self._idx(lng2, n)
         cands = {(self._idx(lng, n) + di) % n for di in (-1, 0, 1)}
         assert home in cands, (lat, lng, lat2, lng2, radius, n)
